@@ -6678,8 +6678,8 @@ FROM numbered
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: full enrichment over a generated pages table sized off the
-    sf0.001 testdata — extract → geocode → PIP countries → cells → per-cell
-    per-country counts (salted two-level agg)."""
+    sf0.001 testdata — extract → count per entity → geocode (PIP countries,
+    cells) → per-cell per-country counts."""
     sf_dir = "/root/testdata/sf0.001"
     # anchor on the provided tables per the driver contract
     n_pages = _t(spark, sf_dir, "events").count()

@@ -14,7 +14,7 @@ and fix the physics instead.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -32,28 +32,6 @@ def salted_count(
     salted = with_salt(df, salt_buckets)
     local = salted.groupBy(*keys, "_salt").agg(F.count("*").alias("_partial"))
     return local.groupBy(*keys).agg(F.sum("_partial").alias(out_col))
-
-
-def salted_agg(
-    df: DataFrame,
-    keys: list[str],
-    partial_aggs: list[Column],
-    final_aggs: list[Column],
-    salt_buckets: int = 32,
-) -> DataFrame:
-    """General two-level aggregation.
-
-    partial_aggs run per (keys, salt); final_aggs combine the partials per
-    keys. Caller is responsible for algebraic correctness (sum→sum,
-    count→sum, min→min, ...). Example:
-
-        salted_agg(df, ["cell"],
-                   [F.count("*").alias("c"), F.sum("v").alias("s")],
-                   [F.sum("c").alias("n"), F.sum("s").alias("total")])
-    """
-    salted = with_salt(df, salt_buckets)
-    local = salted.groupBy(*keys, "_salt").agg(*partial_aggs)
-    return local.groupBy(*keys).agg(*final_aggs)
 
 
 def repartition_by_cell_range(df: DataFrame, cell_col: str, num_partitions: int | None = None) -> DataFrame:

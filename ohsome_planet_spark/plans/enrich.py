@@ -3,25 +3,40 @@
 End-to-end Spark plan mirroring the reference's main job
 (`Contributions2Parquet.call`, `/root/reference/ohsome-contributions/src/main/
 java/org/heigit/ohsome/contributions/Contributions2Parquet.java:93-146`) over
-the graft's input shape:
+the graft's input shape. Every mention's coordinates come from its gazetteer
+row, so all per-point enrichment is computed once per gazetteer entity:
+
+    gazetteer(entity, lat, lon)
+      → country PIP join               (polygon index, numpy on the driver)
+      → cell assignment                (hex r7–10, S2, zxy, XZ2)
+      → WKB point geometry             (fixed 21-byte record)
+      = enriched gazetteer             (a LocalRelation: no job to broadcast)
+
+Per-mention rows (`enrich_pages`):
 
     pages(url, warc_ts, html, text, lang)
       → extract entity mentions        (JVM regexp + posexplode)
-      → geocode                        (broadcast join to gazetteer)
-      → country PIP join               (broadcast polygon index, Arrow UDF)
-      → cell assignment                (hex r7–10, S2, zxy, XZ2)
-      → WKB point geometry             (Arrow UDF)
-      → per-cell aggregation           (salted two-level for mega-cells)
+      → geocode                        (broadcast join carrying the enrichment)
+
+Per-cell aggregates (`enrich_tile_counts`, `enrich_cell_counts`) never join
+single mentions — the mention side only contributes a count per entity:
+
+    pages → extract entity mentions
+      → count per entity               (partial aggregation collapses hot
+                                        entities map-side)
+      → geocode                        (≤ |gazetteer| rows probe the join)
+      → explode countries
+      → per-cell aggregation           (n = Σ mention count)
 
 Every stage is a DataFrame transformation: Catalyst prunes `html` out of the
 scan (we never touch it after generation), pushes filters, and broadcasts the
-small sides. The only Python is inside Arrow-batched kernels.
+small sides. The default gazetteer path runs no Python at all.
 """
 
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import BinaryType
 
@@ -32,8 +47,7 @@ from ..sources.countries import fixture_features
 from ..sources.gazetteer import gazetteer_df
 
 
-@F.pandas_udf(BinaryType())
-def point_wkb_udf(lon: pd.Series, lat: pd.Series) -> pd.Series:
+def _point_wkb(lon: pd.Series, lat: pd.Series) -> pd.Series:
     """WKB point (JTS-default big-endian 2D); empty point (NaN,NaN) for
     invalid coords (the reference stores an empty geometry for invalid
     nodes — `ContributionGeometry.java:185-191`).
@@ -56,6 +70,15 @@ def point_wkb_udf(lon: pd.Series, lat: pd.Series) -> pd.Series:
     buf[:, 13:21] = y.astype(">f8").view(np.uint8).reshape(n, 8)
     mem = buf.tobytes()
     return pd.Series([mem[i * 21 : i * 21 + 21] for i in range(n)])
+
+
+def point_wkb_udf(lon: Column, lat: Column) -> Column:
+    """`_point_wkb` as an Arrow-batched pandas UDF column.
+
+    The UDF is built per call: a pandas UDF binds the accumulator of the
+    SparkContext it is first called under, so a module-level one kept
+    reporting to the stopped context after a session restart."""
+    return F.pandas_udf(_point_wkb, BinaryType())(lon, lat)
 
 
 def _empty_point_wkb() -> bytes:
@@ -111,13 +134,20 @@ def _enrich_gazetteer_local(
     at 10M. Returns None when the gazetteer exceeds _GAZ_LOCAL_MAX rows
     (caller falls back to the distributed path).
 
+    The result is built from a pyarrow Table, which plans as a
+    LocalRelation: broadcasting it needs no collect job, and scanning it
+    starts no Python worker (a `createDataFrame(list)` frame is a Python
+    RDD scan and paid both on every run).
+
     Value contract (pinned by the enrich equality tests): identical to
     with_countries + with_cells + point_wkb_udf row by row — including
     NULL cells for invalid/missing coords (the _series_udf mask), [] for
     invalid countries, the zxy clamp (C.zxy_cell is the expression's
-    bit-exact twin; NULL coords get _ZXY_NULL_CELL, the JVM expression's
-    null-skipping greatest/least output), and the masked-NaN WKB."""
+    bit-exact twin, clamped per axis: a NULL coordinate takes the last
+    index on its own axis, as the JVM expression's null-skipping
+    greatest/least does), and the masked-NaN WKB."""
     import numpy as np
+    import pyarrow as pa
     from pyspark.sql.types import (
         ArrayType, BinaryType, DoubleType, LongType, StringType,
         StructField, StructType,
@@ -134,14 +164,14 @@ def _enrich_gazetteer_local(
     if len(rows) > _GAZ_LOCAL_MAX:
         return None
     n = len(rows)
-    ent = [r[0] for r in rows]
     lat = np.array([float("nan") if r[1] is None else r[1]
                     for r in rows], dtype=np.float64)
     lon = np.array([float("nan") if r[2] is None else r[2]
                     for r in rows], dtype=np.float64)
+    lat_null, lon_null = np.isnan(lat), np.isnan(lon)
+    notnan = ~(lat_null | lon_null)
     with np.errstate(invalid="ignore"):
-        ok = (~(np.isnan(lon) | np.isnan(lat))
-              & (lon >= -180.0) & (lon <= 180.0)
+        ok = (notnan & (lon >= -180.0) & (lon <= 180.0)
               & (lat >= -90.0) & (lat <= 90.0))
         # countries: the pip UDF's semantics — [] unless valid
         countries: list[list[str]] = [[] for _ in range(n)]
@@ -152,52 +182,34 @@ def _enrich_gazetteer_local(
             hits = index.join_points_grid(uniq[:, 0], uniq[:, 1])
             for pos, inv in zip(sel, inverse):
                 countries[pos] = hits[inv]
+
         # cell kernels: valid → kernel value, else NULL (_series_udf)
-        notnan = ~(np.isnan(lon) | np.isnan(lat))
-
-        def series(fn):
-            out = [None] * n
+        def series(fn) -> pa.Array:
+            out = np.zeros(n, dtype=np.int64)
             if notnan.any():
-                vals = fn(lat[notnan], lon[notnan])
-                for pos, v in zip(np.nonzero(notnan)[0], vals):
-                    out[pos] = int(v)
-            return out
+                out[notnan] = np.asarray(
+                    fn(lat[notnan], lon[notnan])).astype(np.int64)
+            return pa.array(out, mask=~notnan)
 
-        hex_cols = {
-            r: series(lambda la, lo, r=r: C.hex_cell(la, lo, r))
-            for r in hex_resolutions
-        }
-        s2 = series(lambda la, lo: C.s2_cell_id(la, lo, 12))
-        xz2 = series(lambda la, lo: C.xz2_point(lo, la, 16))
-        zxy = series(lambda la, lo: C.zxy_cell(lo, la, 12))
-        for i in range(n):
-            if zxy[i] is None:  # NULL coords: the JVM expression's
-                zxy[i] = _ZXY_NULL_CELL  # null-skipping clamp output
-        geom = None
+        cells = [series(lambda la, lo, r=r: C.hex_cell(la, lo, r))
+                 for r in hex_resolutions]
+        cells.append(series(lambda la, lo: C.s2_cell_id(la, lo, 12)))
+        # zxy clamps each axis on its own: a NULL lon (lat) becomes 180
+        # (-90), whose index clips to n-1 — the JVM expression's
+        # null-skipping greatest/least output for that axis alone
+        cells.append(pa.array(C.zxy_cell(np.where(lon_null, 180.0, lon),
+                                         np.where(lat_null, -90.0, lat), 12)))
+        cells.append(series(lambda la, lo: C.xz2_point(lo, la, 16)))
+        columns = [
+            pa.array([r[0] for r in rows], pa.string()),
+            pa.array(lat, mask=lat_null),
+            pa.array(lon, mask=lon_null),
+            pa.array(countries, pa.list_(pa.string())),
+            *cells,
+        ]
         if with_geometry:
-            x = np.where(ok, lon, np.nan)
-            y = np.where(ok, lat, np.nan)
-            buf = np.empty((n, 21), dtype=np.uint8)
-            buf[:, 0:5] = np.array([0, 0, 0, 0, 1], dtype=np.uint8)
-            buf[:, 5:13] = x.astype(">f8").view(np.uint8).reshape(n, 8)
-            buf[:, 13:21] = y.astype(">f8").view(np.uint8).reshape(n, 8)
-            mem = buf.tobytes()
-            geom = [mem[i * 21:(i + 1) * 21] for i in range(n)]
-
-    def opt(v):
-        return None if v is None else v
-
-    data = []
-    for i in range(n):
-        row = [ent[i],
-               None if np.isnan(lat[i]) else float(lat[i]),
-               None if np.isnan(lon[i]) else float(lon[i]),
-               list(countries[i])]
-        row += [opt(hex_cols[r][i]) for r in hex_resolutions]
-        row += [opt(s2[i]), int(zxy[i]), opt(xz2[i])]
-        if with_geometry:
-            row.append(geom[i])
-        data.append(tuple(row))
+            columns.append(pa.array(
+                _point_wkb(pd.Series(lon), pd.Series(lat)), pa.binary()))
     fields = [
         StructField("entity", StringType()),
         StructField("lat", DoubleType()),
@@ -211,28 +223,26 @@ def _enrich_gazetteer_local(
                StructField("xz2_code", LongType())]
     if with_geometry:
         fields.append(StructField("geometry", BinaryType()))
-    return spark.createDataFrame(data, StructType(fields))
+    table = pa.Table.from_arrays(columns, names=[f.name for f in fields])
+    return spark.createDataFrame(table, StructType(fields))
 
 
-def enrich_pages(
+def _enriched_gazetteer(
     spark: SparkSession,
-    pages: DataFrame,
-    features=None,
-    gazetteer: DataFrame | None = None,
-    hex_resolutions: tuple[int, ...] = (7, 8, 9, 10),
-    with_geometry: bool = True,
+    features,
+    gazetteer: DataFrame | None,
+    hex_resolutions: tuple[int, ...],
+    with_geometry: bool,
 ) -> DataFrame:
-    """pages → one enriched row per entity mention."""
-    default_fixture = features is None and gazetteer is None
-    mentions = extract_mentions(pages)
-    # r7 (guide §8: decide with small rows): every mention's coordinates
-    # come FROM the gazetteer, so the country set is a function of the
-    # entity row — run the PIP kernel once over the (tiny) gazetteer and
-    # let the geocode broadcast join carry `countries`, instead of
-    # probing the index per mention (the per-mention Arrow PIP stage was
-    # ~1.4 s of the 10M-page pipeline). Unmatched mentions get the same
-    # empty array the per-mention kernel produced for invalid coords.
-    if default_fixture:
+    """One row per gazetteer entity with its countries, cells and (when
+    asked) WKB point — what the geocode broadcast join carries.
+
+    r7 (guide §8: decide with small rows): every mention's coordinates
+    come FROM the gazetteer, so the country set is a function of the
+    entity row — run the PIP kernel once over the (tiny) gazetteer
+    instead of probing the index per mention (the per-mention Arrow PIP
+    stage was ~1.4 s of the 10M-page pipeline)."""
+    if features is None and gazetteer is None:
         # default fixture gazetteer+features are code literals: enrich
         # once per session from gazetteer_rows() (no collect job, no
         # index rebuild per call — see _GAZ_DEFAULT_MEMO note)
@@ -250,8 +260,7 @@ def enrich_pages(
                 hex_resolutions, with_geometry, rows=gazetteer_rows(),
             )
             _GAZ_DEFAULT_MEMO[key] = gaz_cty
-        geocoded = geocode_mentions(mentions, gaz_cty)
-        return _assemble_enriched(geocoded, hex_resolutions, with_geometry)
+        return gaz_cty
 
     features = features if features is not None else fixture_features()
     gazetteer = gazetteer if gazetteer is not None else gazetteer_df(spark)
@@ -269,8 +278,40 @@ def enrich_pages(
             gaz_cty = gaz_cty.withColumn(
                 "geometry", point_wkb_udf(F.col("lon"), F.col("lat"))
             )
-    geocoded = geocode_mentions(mentions, gaz_cty)
+    return gaz_cty
+
+
+def enrich_pages(
+    spark: SparkSession,
+    pages: DataFrame,
+    features=None,
+    gazetteer: DataFrame | None = None,
+    hex_resolutions: tuple[int, ...] = (7, 8, 9, 10),
+    with_geometry: bool = True,
+) -> DataFrame:
+    """pages → one enriched row per entity mention. Unmatched mentions get
+    the same empty array the per-mention kernel produced for invalid
+    coords (see _assemble_enriched)."""
+    gaz_cty = _enriched_gazetteer(
+        spark, features, gazetteer, hex_resolutions, with_geometry)
+    geocoded = geocode_mentions(extract_mentions(pages), gaz_cty)
     return _assemble_enriched(geocoded, hex_resolutions, with_geometry)
+
+
+def _enrich_entity_counts(spark: SparkSession, pages: DataFrame) -> DataFrame:
+    """pages → one row per distinct mentioned entity: its `mentions` count
+    plus the default gazetteer's enrichment (NULL when unmatched) and
+    `coord_valid`.
+
+    Every aggregated column is a function of the gazetteer row, so the
+    per-cell aggregates need only this count from the mention side. The
+    count is combinable: partial aggregation collapses hot entities
+    map-side, and the geocode join then probes at most one row per
+    distinct entity instead of one per mention."""
+    counts = extract_mentions(pages).groupBy("entity").agg(
+        F.count("*").alias("mentions"))
+    gaz_cty = _enriched_gazetteer(spark, None, None, (7, 8, 9, 10), False)
+    return geocode_mentions(counts, gaz_cty)
 
 
 def _assemble_enriched(
@@ -312,16 +353,16 @@ def enrich_cell_counts(
     cell_col: str = "zxy_cell",
     salted: bool = True,
 ) -> DataFrame:
-    """The headline aggregate: mentions per cell per country."""
-    enriched = enrich_pages(spark, pages, with_geometry=False)
-    exploded = enriched.where(F.col("coord_valid")).select(
-        cell_col, F.explode_outer("countries").alias("country")
-    )
-    from ..operators.skew import salted_count
+    """The headline aggregate: mentions per cell per country.
 
-    if salted:
-        return salted_count(exploded, [cell_col, "country"], out_col="n")
-    return exploded.groupBy(cell_col, "country").agg(F.count("*").alias("n"))
+    `salted` is accepted for compatibility and ignored: the aggregate is
+    a combinable sum over at most |gazetteer| × countries rows (see
+    tile_counts_from_enriched)."""
+    exploded = _enrich_entity_counts(spark, pages).where(
+        F.col("coord_valid")).select(
+        cell_col, F.explode_outer("countries").alias("country"), "mentions")
+    return exploded.groupBy(cell_col, "country").agg(
+        F.sum("mentions").alias("n"))
 
 
 def enrich_tile_counts(
@@ -329,70 +370,59 @@ def enrich_tile_counts(
     pages: DataFrame,
     salted: bool = True,
 ) -> DataFrame:
-    """The full headline pipeline (BASELINE metric): extract → geocode → PIP
-    country join → ALL cell encodes (hex r7–10, S2, zxy, XZ2) → salted
-    per-(hex_r8, country) counts carrying the coarser hex levels.
+    """The full headline pipeline (BASELINE metric): extract → count per
+    entity → geocode with the enriched gazetteer (PIP countries, hex
+    r7–10, S2, zxy, XZ2) → per-(hex_r8, country) counts carrying the
+    coarser hex levels. Equal, column for column, to
+    `tile_counts_from_enriched(enrich_pages(...))` over single mentions.
 
-    Unlike enrich_cell_counts (whose agg key lets Catalyst prune the Arrow
-    cell kernels), this aggregate consumes every cell column, so the timing
-    includes the complete encode work the metric advertises.
+    `salted` is accepted for compatibility and ignored (see
+    tile_counts_from_enriched).
     """
-    enriched = enrich_pages(spark, pages, with_geometry=False)
-    return tile_counts_from_enriched(enriched, salted=salted)
+    return tile_counts_from_enriched(
+        _enrich_entity_counts(spark, pages), weight="mentions")
 
 
-def tile_counts_from_enriched(enriched: DataFrame, salted: bool = True) -> DataFrame:
+def tile_counts_from_enriched(
+    enriched: DataFrame, salted: bool = True, weight: str | None = None
+) -> DataFrame:
     """The aggregate half of enrich_tile_counts, over already-enriched rows.
 
     Factored out so the STREAMING twin shares it verbatim: the stream stage
     materializes enriched rows (per-row transforms only — nothing in the
     micro-batch shuffles) and this aggregate runs over the sink.
 
-    The `approx_*` distinct-cell columns are Datasketches HLL estimates:
-    per-salt `hll_sketch_agg` partials merged with `hll_union_agg`. Sketch
-    union is exact (unlike the previous summed `count_distinct` partials,
-    which over-counted any cell straddling two salt buckets), so the salted
-    estimate is bit-identical to a single unsalted sketch of the same rows —
-    the salting changes only the shuffle shape, never the value. Estimate
-    error is the standard HLL bound (~1.6% rel. std. at lgConfigK=12).
+    `weight` names a column holding how many mentions each row stands for
+    (`n` = Σ weight); without one every row is a single mention. The other
+    columns are min / distinct-count aggregates, which row multiplicity
+    does not change, so per-entity counts and per-mention rows give the
+    same result.
+
+    `salted` is accepted for compatibility and ignored. Count and sketch
+    union are combinable, so partial aggregation already collapses hot
+    keys map-side; a salt derived from the row hash never split a hot key
+    anyway (all of its rows are identical, so they share one salt).
+
+    The `approx_*` distinct-cell columns are Datasketches HLL estimates
+    (`hll_sketch_agg`, merged across partitions by sketch union, which is
+    exact). Estimate error is the standard HLL bound (~1.6% rel. std. at
+    lgConfigK=12).
 
     BEHAVIOR CHANGE (r5, flagged r5-advice): before the sketch switch the
-    UNSALTED path used exact `count_distinct`; both paths now return HLL
-    estimates, so small inputs that previously saw exact distinct counts
-    see ~±1.6% values instead. This is deliberate: the columns are named
-    `approx_*`, salted and unsalted must agree bit-for-bit (they are the
-    same sketch), and at the 100 TB design point exact distinct per cell
-    is a full extra shuffle. Consumers needing exact counts at small
+    UNSALTED path used exact `count_distinct`; the columns now always hold
+    HLL estimates, so small inputs that previously saw exact distinct
+    counts see ~±1.6% values instead. This is deliberate: the columns are
+    named `approx_*`, and at the 100 TB design point exact distinct per
+    cell is a full extra shuffle. Consumers needing exact counts at small
     scale should aggregate `count_distinct` off `enrich_pages` directly.
     """
     exploded = enriched.where(F.col("coord_valid")).select(
         "hex_r7", "hex_r8", "hex_r9", "hex_r10", "s2_cell", "zxy_cell", "xz2_code",
         F.explode_outer("countries").alias("country"),
+        *([weight] if weight else []),
     )
-    from ..operators.skew import salted_agg
-
-    partials = [
-        F.count("*").alias("c"),
-        F.min("hex_r7").alias("h7"),
-        F.hll_sketch_agg("hex_r9").alias("d9p"),
-        F.hll_sketch_agg("hex_r10").alias("d10p"),
-        F.hll_sketch_agg("s2_cell").alias("s2p"),
-        F.hll_sketch_agg("zxy_cell").alias("zxp"),
-        F.min("xz2_code").alias("xzp"),
-    ]
-    finals = [
-        F.sum("c").alias("n"),
-        F.min("h7").alias("hex_r7"),
-        F.hll_sketch_estimate(F.hll_union_agg("d9p")).alias("approx_r9_cells"),
-        F.hll_sketch_estimate(F.hll_union_agg("d10p")).alias("approx_r10_cells"),
-        F.hll_sketch_estimate(F.hll_union_agg("s2p")).alias("approx_s2_cells"),
-        F.hll_sketch_estimate(F.hll_union_agg("zxp")).alias("approx_zxy_cells"),
-        F.min("xzp").alias("min_xz2"),
-    ]
-    if salted:
-        return salted_agg(exploded, ["hex_r8", "country"], partials, finals)
     return exploded.groupBy("hex_r8", "country").agg(
-        F.count("*").alias("n"),
+        (F.sum(weight) if weight else F.count("*")).alias("n"),
         F.min("hex_r7").alias("hex_r7"),
         F.hll_sketch_estimate(F.hll_sketch_agg("hex_r9")).alias("approx_r9_cells"),
         F.hll_sketch_estimate(F.hll_sketch_agg("hex_r10")).alias("approx_r10_cells"),

@@ -13,7 +13,7 @@ The full end-to-end story of this engine's web-scale side, mirroring how
                                  knobs pass through)
       → enrichment              (plans/enrich: extract → geocode →
                                  PIP countries → cell encodes)
-      → per-tile counts         (salted two-level aggregate)
+      → per-tile counts         (tile_counts_from_enriched)
 
 Everything between the WARC scan and the final aggregate is a single lazy
 DataFrame DAG unless curation's manifest is requested — Catalyst sees the

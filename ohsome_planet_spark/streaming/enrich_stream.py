@@ -1,8 +1,9 @@
 """Streaming twin of the FLAGSHIP enrichment pipeline.
 
 The batch headline job (`plans/enrich.enrich_tile_counts`) is
-extract → geocode → PIP country join → cell encodes → salted tile counts.
-Its streaming twin splits exactly where the operators' algebra says to:
+extract → count per entity → geocode with the enriched gazetteer (PIP
+countries, cell encodes) → tile counts. Its streaming twin keeps one row
+per mention and splits exactly where the operators' algebra says to:
 
 * the ENRICHMENT half (extract/geocode/PIP/cells — per-row transforms and
   broadcast joins, no shuffle) runs INSIDE the stream via `foreachBatch`,
@@ -76,6 +77,7 @@ def run_enrich_stream(
 def tile_counts_from_sink(
     spark: SparkSession, sink_dir: str, salted: bool = True
 ) -> DataFrame:
-    """The aggregate half over the streamed sink — byte-identical operator
-    chain to the batch `enrich_tile_counts` (shared implementation)."""
+    """The aggregate half over the streamed sink — the aggregate the batch
+    `enrich_tile_counts` finishes with (shared implementation), here over
+    one row per mention."""
     return tile_counts_from_enriched(spark.read.parquet(sink_dir), salted=salted)

@@ -6,7 +6,12 @@ from pyspark.sql import functions as F
 
 from ohsome_planet_spark.functions.text import sha256_hex
 from ohsome_planet_spark.functions.wkb import wkb_loads
-from ohsome_planet_spark.plans.enrich import enrich_cell_counts, enrich_pages
+from ohsome_planet_spark.plans.enrich import (
+    enrich_cell_counts,
+    enrich_pages,
+    enrich_tile_counts,
+    tile_counts_from_enriched,
+)
 from ohsome_planet_spark.sources.gazetteer import GAZETTEER
 from ohsome_planet_spark.sources.pages import pages_df
 
@@ -16,6 +21,19 @@ N_PAGES = 500
 @pytest.fixture(scope="module")
 def pages(spark):
     return pages_df(spark, N_PAGES).cache()
+
+
+@pytest.fixture(scope="module")
+def skewed_pages(spark, pages):
+    """The generated pages (~60% of mentions on 3 hot entities) plus pages
+    that also name entities the gazetteer does not hold."""
+    extra = spark.createDataFrame(
+        [(f"https://unlisted.example/p/{i}", pd.Timestamp("2024-01-01").to_pydatetime(),
+          None, f"near @@Unlisted_{i % 3}@@ and @@Alpha_City@@", "en")
+         for i in range(30)],
+        pages.schema,
+    )
+    return pages.unionByName(extra).cache()
 
 
 @pytest.fixture(scope="module")
@@ -99,6 +117,81 @@ def test_cell_columns_present_and_consistent(spark, enriched):
     assert (C.xz2_point(lon, lat, 16) == np.array([r["xz2_code"] for r in rows])).all()
 
 
+def _sorted_rows(df):
+    return sorted((tuple(r) for r in df.collect()), key=repr)
+
+
+def _name_types(df):
+    return [(f.name, f.dataType) for f in df.schema.fields]
+
+
+def test_tile_counts_equal_per_mention_reference(spark, skewed_pages):
+    """enrich_tile_counts joins per-entity counts, not mentions; every
+    column, the approx_* sketches included, must equal the aggregate over
+    one enriched row per mention."""
+    per_mention = enrich_pages(spark, skewed_pages, with_geometry=False)
+    assert per_mention.where(F.col("lat").isNull()).count() >= 30  # unmatched
+    ref = tile_counts_from_enriched(per_mention)
+    got = enrich_tile_counts(spark, skewed_pages)
+    assert _name_types(got) == _name_types(ref)
+    assert _sorted_rows(got) == _sorted_rows(ref)
+
+
+@pytest.mark.parametrize("cell_col", ["zxy_cell", "hex_r8", "s2_cell"])
+def test_cell_counts_equal_per_mention_reference(spark, skewed_pages, cell_col):
+    ref = (
+        enrich_pages(spark, skewed_pages, with_geometry=False)
+        .where(F.col("coord_valid"))
+        .select(cell_col, F.explode_outer("countries").alias("country"))
+        .groupBy(cell_col, "country")
+        .agg(F.count("*").alias("n"))
+    )
+    got = enrich_cell_counts(spark, skewed_pages, cell_col=cell_col)
+    assert _name_types(got) == _name_types(ref)
+    assert _sorted_rows(got) == _sorted_rows(ref)
+
+
+def test_one_null_coordinate_matches_jvm_and_distributed_paths(spark, monkeypatch):
+    """A custom gazetteer row with exactly one null coordinate: the JVM zxy
+    expression clamps only the null axis (to the last index), so the
+    driver-side enrichment must keep the valid axis's real index. The
+    whole enriched row must also equal the distributed (Spark job) path."""
+    import numpy as np
+
+    from ohsome_planet_spark.functions import cells as C
+    from ohsome_planet_spark.operators.tiling import zxy_cell_col
+    from ohsome_planet_spark.plans import enrich
+
+    gaz = spark.createDataFrame(
+        [("Lat_Null", None, 10.0), ("Lon_Null", 20.0, None),
+         ("Both_Null", None, None), ("Far_Out", 95.0, 200.0),
+         ("Plain", 12.3, 7.6)],
+        "entity string, lat double, lon double",
+    )
+    pages = spark.createDataFrame(
+        [("https://gaz.example/1", pd.Timestamp("2024-01-01").to_pydatetime(), None,
+          "@@Lat_Null@@ @@Lon_Null@@ @@Both_Null@@ @@Far_Out@@ @@Plain@@ @@Unlisted@@",
+          "en")],
+        "url string, warc_ts timestamp, html binary, text string, lang string",
+    )
+    local = enrich_pages(spark, pages, gazetteer=gaz).orderBy("mention_idx")
+    rows = local.select(
+        "entity", "zxy_cell",
+        zxy_cell_col(F.col("lon"), F.col("lat"), 12).alias("jvm")).collect()
+    assert len(rows) == 6
+    for r in rows:
+        assert r["zxy_cell"] == r["jvm"], r["entity"]
+    cells = {r["entity"]: r["zxy_cell"] for r in rows}
+    _, ix, iy = C.zxy_decode(np.array([cells["Lat_Null"], cells["Lon_Null"]]))
+    assert (ix[0], iy[0]) == (int((10.0 + 180.0) / 360.0 * 4096), 4095)
+    assert (ix[1], iy[1]) == (4095, int((90.0 - 20.0) / 180.0 * 4096))
+
+    monkeypatch.setattr(enrich, "_GAZ_LOCAL_MAX", 0)
+    distributed = enrich_pages(spark, pages, gazetteer=gaz).orderBy("mention_idx")
+    assert local.columns == distributed.columns
+    assert [tuple(r) for r in local.collect()] == [tuple(r) for r in distributed.collect()]
+
+
 def test_cell_counts_salted_equals_plain(spark, pages):
     salted = enrich_cell_counts(spark, pages, salted=True).orderBy("zxy_cell", "country")
     plain = enrich_cell_counts(spark, pages, salted=False).orderBy("zxy_cell", "country")
@@ -123,15 +216,11 @@ def test_html_pruned_from_parquet_scan(spark, pages, tmp_path):
 
 
 def test_tile_counts_hll_salted_equals_plain_and_tracks_exact(spark, enriched):
-    """The approx_* distinct-cell columns are HLL sketch estimates whose
-    per-salt partials merge EXACTLY under hll_union_agg — so the salted
-    two-level plan must produce bit-identical values to the unsalted
-    single-groupBy plan (the old summed count_distinct partials failed
-    this: a cell straddling two salt buckets was counted twice). The
-    estimate itself must track an exact recompute within the HLL error
-    bound (lgConfigK=12 → ~1.6% rel. std.; assert a generous 5%)."""
-    from ohsome_planet_spark.plans.enrich import tile_counts_from_enriched
-
+    """The approx_* distinct-cell columns are HLL sketch estimates. The
+    `salted` flag is an accepted no-op, so both settings must produce
+    bit-identical values. The estimate itself must track an exact
+    recompute within the HLL error bound (lgConfigK=12 → ~1.6% rel. std.;
+    assert a generous 5%)."""
     salted = tile_counts_from_enriched(enriched, salted=True)
     plain = tile_counts_from_enriched(enriched, salted=False)
     key = ["hex_r8", "country"]

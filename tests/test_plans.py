@@ -28,6 +28,40 @@ def test_enrich_single_arrow_node_and_broadcast(spark):
     assert "SortMergeJoin" not in plan
 
 
+def _subtree(plan: str, marker: str) -> str:
+    """The lines of the first node containing `marker` and its children."""
+    lines = plan.splitlines()
+    i = next(k for k, line in enumerate(lines) if marker in line)
+    depth = len(lines[i]) - len(lines[i].lstrip(" :+-"))
+    out = [lines[i]]
+    for line in lines[i + 1:]:
+        if len(line) - len(line.lstrip(" :+-")) <= depth:
+            break
+        out.append(line)
+    return "\n".join(out)
+
+
+@pytest.mark.parametrize("agg", ["enrich_tile_counts", "enrich_cell_counts"])
+def test_enrich_counts_entities_below_local_gazetteer_join(spark, agg):
+    """The headline aggregates count mentions per entity before the geocode
+    join, and the enriched gazetteer is a local relation: broadcasting it
+    runs no job, and nothing in the plan runs Python."""
+    from ohsome_planet_spark.plans import enrich
+    from ohsome_planet_spark.sources.pages import pages_df
+
+    df = getattr(enrich, agg)(spark, pages_df(spark, 100))
+    df.collect()
+    plan = physical(df)
+    join = _subtree(plan, "BroadcastHashJoin")
+    assert re.search(r"HashAggregate\(keys=\[entity#\d+\], functions=\[count\(1\)", join)
+    assert re.search(r"HashAggregate\(keys=\[entity#\d+\], functions=\[partial_count\(1\)", join)
+    assert "Generate posexplode" in _subtree(join, "partial_count(1)")
+    assert "LocalTableScan" in _subtree(join, "BroadcastExchange")
+    assert "ExistingRDD" not in plan
+    for node in ("ArrowEvalPython", "BatchEvalPython", "MapInArrow", "MapInPandas"):
+        assert node not in plan
+
+
 def test_salted_agg_two_level(spark):
     from ohsome_planet_spark.operators.skew import salted_count
 
