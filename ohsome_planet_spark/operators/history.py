@@ -37,11 +37,17 @@ reference's quirks):
     geometry is empty (`:79-84,139-140`);
   * empty geometry ⇒ xz(-1, 0) (`:126-127`).
 
-Spark shape: `ways.groupBy(id)` cogrouped with the ways' member-node
-histories (`explode(refs)` ⋈ nodes shuffle) → `applyInPandas` — the shuffle
-replaces the reference's RocksDB minor store, the per-group kernel replaces
-its hand-fused iterator pipeline. Groups are single elements' histories
-(tiny); the fan-out across elements is Spark's parallelism.
+Spark shape: the ways' member-node histories (`explode(refs)` ⋈ nodes
+shuffle) are packed with the ways into one frame, repartitioned by element
+id, and merged per partition by an Arrow kernel (`mapInArrow`) — the
+shuffle replaces the reference's RocksDB minor store, the kernel replaces
+its hand-fused iterator pipeline. The production kernels are
+`history_arrow.way_partition_table` and
+`relation_arrow.relation_partition_table`; nodes need no merge and run as
+window functions (`node_contributions`). The dict kernels kept here
+(`_way_partition_kernel`, `_relation_partition_kernel`,
+`node_contributions_kernel`) are reference twins that no production plan
+runs: tests compare the production kernels against them bit for bit.
 """
 
 from __future__ import annotations
@@ -1014,90 +1020,25 @@ def with_xz2_from_bbox(df: DataFrame) -> DataFrame:
 def way_contributions(ways: DataFrame, nodes: DataFrame, country_index=None) -> DataFrame:
     """Distributed temporal merge + conversion (Arrow-native kernel).
 
-    Delegates to `history_arrow.way_contributions_arrow`: same logical plan
-    and output as the dict twin below (`way_contributions_dict`), but the
-    partition kernel is zero-dict/zero-pandas — see history_arrow.py.
+    ways:  id, version, ts, changeset, user_id, user, visible, tags, refs
+    nodes: id, version, ts, changeset, user_id, user, visible, lon, lat
+
+    Delegates to `history_arrow.way_contributions_arrow`, whose production
+    partition kernel is `history_arrow.way_partition_table`.
+    `_way_partition_kernel` below is its dict-kernel reference twin: tests
+    run both on the same packed partition and compare bit for bit.
     """
     from .history_arrow import way_contributions_arrow
 
     return way_contributions_arrow(ways, nodes, country_index)
 
 
-def way_contributions_dict(ways: DataFrame, nodes: DataFrame, country_index=None) -> DataFrame:
-    """Distributed temporal merge + conversion (dict-kernel cross-check twin).
-
-    ways:  id, version, ts, changeset, user_id, user, visible, tags, refs
-    nodes: id, version, ts, changeset, user_id, user, visible, lon, lat
-
-    Plan: explode way refs → distinct (way_id, node_id) ⋈ nodes (shuffle hash
-    join on node id — the RocksDB `minorNodes` analog) → ways ∪ member rows
-    repartitioned by way id → `mapInPandas` with in-kernel pandas groupby.
-
-    The kernel groups WITHIN partitions instead of using per-key
-    applyInPandas: Spark's per-group apply costs ~ms per group, which at one
-    group per OSM element dominates everything (measured 5-20× slower). With
-    partition-level batching the per-group cost is one pandas groupby slice.
-    Partition memory is bounded by spark.sql.shuffle.partitions — size it so
-    elements-per-partition × history length fits (AQE coalescing applies).
-    """
-    spark = ways.sparkSession
-    bc = spark.sparkContext.broadcast(country_index) if country_index is not None else None
-
-    refs_pairs = ways.select(
-        F.col("id").alias("way_id"), F.explode("refs").alias("node_id")
-    ).distinct()
-    member_hist = refs_pairs.join(
-        nodes.withColumnRenamed("id", "node_id"), "node_id"
-    ).select(
-        "way_id", "node_id", "version", "ts", "changeset", "user_id", "user",
-        "visible", "lon", "lat",
-    )
-
-    ways_packed = ways.select(
-        F.col("id").alias("way_id"),
-        F.lit("w").alias("kind"),
-        "version", "ts", "changeset", "user_id", "user", "visible",
-        "tags", "refs",
-        F.lit(None).cast("long").alias("node_id"),
-        F.lit(None).cast("double").alias("lon"),
-        F.lit(None).cast("double").alias("lat"),
-    )
-    nodes_packed = member_hist.select(
-        "way_id",
-        F.lit("n").alias("kind"),
-        "version", "ts", "changeset", "user_id", "user", "visible",
-        F.lit(None).cast("map<string,string>").alias("tags"),
-        F.lit(None).cast("array<long>").alias("refs"),
-        "node_id", "lon", "lat",
-    )
-    packed = ways_packed.unionByName(nodes_packed).repartition("way_id")
-
-    def partition_fn(batches):
-        joiner = None
-        if bc is not None:
-            idx = bc.value
-
-            def joiner(kind, data):
-                return idx.join_geom(kind, data)
-
-        chunks = list(batches)
-        if not chunks:
-            return
-        pdf = pd.concat(chunks, ignore_index=True)
-        if not len(pdf):
-            return
-        out = _way_partition_kernel(pdf, joiner)
-        if len(out):
-            yield out
-
-    return with_xz2_from_bbox(packed.mapInPandas(partition_fn, CONTRIB_SCHEMA))
-
-
 def _way_partition_kernel(pdf: pd.DataFrame, joiner=None) -> pd.DataFrame:
-    """One partition of the way merge: presort + array-cursor merge walk.
+    """One partition of the way merge, pandas in/out — the reference twin
+    of `history_arrow.way_partition_table` (no Spark plan runs it).
 
-    Module-level (not a closure) so it is profilable and unit-testable
-    against the per-row dict twin directly."""
+    pdf is the packed partition (way rows kind "w", member-node rows kind
+    "n"); xz columns are left at (-1, 0)."""
     # one partition-wide presort + column extraction: per-group work is
     # then pure-python slice walking (no pandas per group)
     pdf = pdf.sort_values(
@@ -2046,12 +1987,7 @@ def convert_relation_contributions(
             minor_version += 1
         edits += 1
 
-        # the array kernel (operators/relation_arrow.py) pre-resolves member
-        # entries batched; the dict path resolves per snapshot via the cache
-        entries = [
-            m["entry"] if "entry" in m else _member_entry(cache, m)
-            for m in c["rel_members"]
-        ]
+        entries = [_member_entry(cache, m) for m in c["rel_members"]]
         if c["visible"]:
             info = _relation_geom_info(
                 c["tags"], c["rel_members"], entries, joiner=country_join)
@@ -2297,8 +2233,12 @@ def relation_contributions(
 
 
 def _relation_partition_kernel(pdf: pd.DataFrame, joiner=None):
-    """One partition of the relation merge (module-level: profilable and
-    unit-testable directly; see way twin `_way_partition_kernel`)."""
+    """One partition of the relation merge, pandas in/out — the reference
+    twin of `relation_arrow.relation_partition_table` (no Spark plan runs
+    it). Member geometry batches through `_MemberEntryBatch`, conversion
+    through the per-relation `convert_relation_contributions`; tests
+    compare the production kernel against it bit for bit. xz columns are
+    left at (-1, 0)."""
 
     def merge_one_relation(
         rel_id: int, node_hists: dict, way_rows: dict, majors: list

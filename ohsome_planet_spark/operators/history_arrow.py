@@ -27,8 +27,12 @@ reference's `ContributionsEntity.computeNext`
   `take`s. XZ2 codes are computed in-kernel from the request bboxes, so
   the separate post-pass Arrow round-trip disappears.
 
-The dict kernel stays as the cross-check twin; tests/test_history_arrow.py
-asserts row equality between the two on adversarial fixtures.
+`way_partition_table` is the production way kernel. The dict kernel
+`history._way_partition_kernel` is its reference twin, which no Spark plan
+runs: tests/test_history_arrow.py (Spark `way_contributions` on adversarial
+fixtures, with and without a country index) and
+tests/test_history_arrow_sweep.py (the kernel alone on seeded fixtures)
+compare the two bit for bit on the same packed partition.
 """
 
 from __future__ import annotations

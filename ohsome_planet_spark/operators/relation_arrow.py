@@ -1,10 +1,13 @@
 """Array-cursor relation merge: the relation twin of history_arrow.
 
-Same semantics as the dict kernel (`history._relation_partition_kernel`,
-mirroring `Contributions2Parquet.processRelation:233-266` — member ways
-resolve through their own merged contribution streams over shared node
-cursors, then the relation merges over (type, id, role) member streams),
-with the round-4 way-kernel machinery applied end to end:
+The production relation kernel is `relation_partition_table` (Arrow in →
+Arrow out), run by `history.relation_contributions` through `mapInArrow`.
+Its reference twin is the dict kernel `history._relation_partition_kernel`
+(with `_MemberEntryBatch` and `convert_relation_contributions`), mirroring
+`Contributions2Parquet.processRelation:233-266`: member ways resolve
+through their own merged contribution streams over shared node cursors,
+then the relation merges over (type, id, role) member streams. The
+production kernel applies the way kernel's machinery end to end:
 
 * node member feeds run through the VECTORIZED minor-node store filter
   (`history_arrow._minor_node_keep_mask`) — no per-row dicts;
@@ -16,32 +19,25 @@ with the round-4 way-kernel machinery applied end to end:
   is the partition-wide way-contribution ordinal — one int per member per
   contribution;
 * ALL way-snapshot geometries of the partition batch through ONE
-  `batch_geometries` + `batch_gc_moment_cols` pass.
-
-Two output paths share the stream-collection phase (`_collect_streams`):
-
-* `relation_partition_table` (PRODUCTION, round 5): Arrow in → Arrow out.
-  Run-collapse, window columns, status/contrib codes, the
-  GeometryCollection bbox/centroid folds (reduceat over encoded member
-  positions — float-identical to `_combine_centroid`'s sequential +=),
-  envelope WKB, XZ2 codes, and the per-member geometry list columns are
-  all NumPy/Arrow-kernel work; only the MultiPolygon assembly
+  `batch_geometries` + `batch_gc_moment_cols` pass;
+* run-collapse, window columns, status/contrib codes, the
+  GeometryCollection bbox/centroid folds (sequential left folds over
+  encoded member positions — float-identical to `_combine_centroid`'s +=
+  chain), envelope WKB, XZ2 codes, and the per-member geometry list
+  columns are all NumPy/Arrow-kernel work; only the MultiPolygon assembly
   (`mpbuild`, inherently iterative ring-joining) and the optional country
   join remain per-row Python. No pandas materialization anywhere.
-* `relation_partition_kernel` (pandas in/out): the original round-4 path,
-  kept as the cross-check twin feeding the UNCHANGED
-  `convert_relation_contributions` converter.
 
-tests/test_relation_arrow.py pins both paths row-for-row against the dict
-kernel on adversarial fixtures, and the relation_history /
-relation_geom_history / relation_mp_history / contributions_e2e oracles
-value-check the Spark path cross-engine.
+tests/test_relation_arrow.py pins `relation_partition_table` bit for bit
+against the dict twin on adversarial fixtures (with and without a country
+join), and the relation_history / relation_geom_history /
+relation_mp_history / contributions_e2e oracles value-check the Spark path
+cross-engine.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 
@@ -53,12 +49,9 @@ from ..functions.wkb import wkb_dumps
 from .history import (
     MEMBERS_THRESHOLD,
     VALID_TO_SENTINEL_NS,
-    _KIND_NAME,
     _poly_area_centroid,
     batch_gc_moment_cols,
-    batch_gc_moments,
     batch_geometries,
-    convert_relation_contributions,
 )
 from .history_arrow import (
     _AHist,
@@ -109,33 +102,9 @@ REL_OUT_SCHEMA = pa.schema([
 ])
 
 
-def _empty_entry() -> dict:
-    return {"gc": None, "mg": (None, None), "bbox": None, "mom": None,
-            "coords": None}
-
-
-def _node_entry(g: int, vis_a, lon_a, lat_a) -> dict:
-    """`_member_entry` node branch over a global row (history.py)."""
-    from .history import _gc_moments
-
-    e = _empty_entry()
-    lon = float(lon_a[g])
-    lat = float(lat_a[g])
-    if (vis_a[g] and not np.isnan(lon) and not np.isnan(lat)
-            and -180.0 <= lon <= 180.0 and -90.0 <= lat <= 90.0):
-        gpt = ("Point", (lon, lat))
-        e["gc"] = gpt
-        e["mg"] = ("Point", wkb_dumps(gpt))
-        e["bbox"] = gnp.bbox(np.asarray([lon]), np.asarray([lat]))
-        e["mom"] = _gc_moments("Point", gpt[1])
-    else:
-        e["mg"] = ("Point", wkb_dumps(("Point", None)))
-    return e
-
-
 def _collect_streams(rel_a, is_node, is_way, is_rel, mid_a, ver_a, ts_ns,
                      cs_a, vis_a, lon_a, lat_a, refs_of, rml_of) -> dict:
-    """Phase 1 (shared by both output paths): minor-filtered node cursors,
+    """Phase 1 of `relation_partition_table`: minor-filtered node cursors,
     encoded inner way streams, and the relation-level merge buffers.
 
     Rows must arrive sorted by (rel_id, kind, member_id, version, ts) with
@@ -314,7 +283,7 @@ def _adjacent_node_dup_mask(rel_a, kind_is_node, mid_a, ver_a, ts_a) -> np.ndarr
 
 
 def _drop_adjacent_node_dups(tbl: pa.Table) -> pa.Table:
-    """Arrow-side twin of `_adjacent_node_dup_mask` (single-chunk table)."""
+    """Drop the rows `_adjacent_node_dup_mask` flags (single-chunk table)."""
     kind_is_node = pc.equal(
         tbl.column("kind").chunk(0), pa.scalar("node")
     ).to_numpy(zero_copy_only=False)
@@ -328,208 +297,6 @@ def _drop_adjacent_node_dups(tbl: pa.Table) -> pa.Table:
     if not dup.any():
         return tbl
     return tbl.filter(pa.array(~dup)).combine_chunks()
-
-
-def relation_partition_kernel(pdf: pd.DataFrame, joiner=None):
-    """One partition of the relation merge — pandas array path (cross-check
-    twin of `relation_partition_table`, feeding the unchanged dict
-    converter)."""
-    pdf = pdf.sort_values(
-        ["rel_id", "kind", "member_id", "version", "ts"], kind="stable"
-    )
-    dup = _adjacent_node_dup_mask(
-        pdf["rel_id"].to_numpy(),
-        (pdf["kind"].to_numpy() == "node"),
-        pdf["member_id"].to_numpy(),
-        pdf["version"].to_numpy(),
-        pdf["ts"].to_numpy().view("i8"),
-    )
-    if dup.any():
-        pdf = pdf.loc[~dup]
-    rel_a = pdf["rel_id"].to_numpy()
-    kind_a = pdf["kind"].to_numpy()
-    mid_a = pdf["member_id"].to_numpy()
-    ver_a = pdf["version"].to_numpy()
-    ts_ns = pdf["ts"].to_numpy().view("i8")
-    cs_a = pdf["changeset"].to_numpy()
-    uid_a = pdf["user_id"].to_numpy()
-    user_a = pdf["user"].to_numpy()
-    vis_a = pdf["visible"].to_numpy()
-    tags_a = pdf["tags"].to_numpy()
-    refs_a = pdf["refs"].to_numpy()
-    lon_a = pdf["lon"].to_numpy().astype(np.float64, copy=False)
-    lat_a = pdf["lat"].to_numpy().astype(np.float64, copy=False)
-    rml_a = pdf["rel_member_list"].to_numpy()
-    n = len(pdf)
-    if not n:
-        return None
-
-    is_node = kind_a == "node"
-    is_way = kind_a == "way"
-    is_rel = kind_a == "rel"
-
-    refs_cache: dict[int, list] = {}
-    tags_cache: dict[int, dict] = {}
-
-    def refs_of(g: int) -> list:
-        r = refs_cache.get(g)
-        if r is None:
-            raw = refs_a[g]
-            r = refs_cache[g] = (
-                [int(x) for x in raw] if raw is not None else [])
-        return r
-
-    def tags_of(g: int) -> dict:
-        t = tags_cache.get(g)
-        if t is None:
-            raw = tags_a[g]
-            t = tags_cache[g] = dict(raw) if raw is not None else {}
-        return t
-
-    def rml_of(g: int) -> list:
-        rml = rml_a[g]
-        return [(m["type"], int(m["id"]), m["role"] or "")
-                for m in (rml if rml is not None else [])]
-
-    st = _collect_streams(rel_a, is_node, is_way, is_rel, mid_a, ver_a,
-                          ts_ns, cs_a, vis_a, lon_a, lat_a, refs_of, rml_of)
-    rl_maj = st["rl_maj"]
-    if not rl_maj:
-        return None
-    ws_maj, ws_open, ws_last, ws_mem = (
-        st["ws_maj"], st["ws_open"], st["ws_last"], st["ws_mem"])
-    rl_open, rl_last, rl_mem = st["rl_open"], st["rl_last"], st["rl_mem"]
-    rel_slices = st["rel_slices"]
-
-    # ----- batch ALL way-snapshot geometry of the partition in one pass
-    n_ws = len(ws_maj)
-    if n_ws:
-        wmaj = np.asarray(ws_maj, np.int64)
-        nref = np.asarray([len(refs_of(int(g))) for g in wmaj], np.int64)
-        mem = np.asarray(ws_mem, np.int64)
-        okm = mem >= 0
-        gsafe = np.where(okm, mem, 0)
-        ml = np.where(okm, lon_a[gsafe], np.nan)
-        mt = np.where(okm, lat_a[gsafe], np.nan)
-        mvv = okm & vis_a[gsafe].astype(bool)
-        isarea_w = np.asarray([
-            is_area(tags_of(int(g)), refs_of(int(g))[0] if refs_of(int(g)) else -1,
-                    refs_of(int(g))[-1] if refs_of(int(g)) else -2,
-                    len(refs_of(int(g))))
-            for g in wmaj], bool)
-        geo = batch_geometries(nref, isarea_w, ml, mt, mvv)
-        moments = batch_gc_moments(geo)
-        xs, ys, voff = geo["xs"], geo["ys"], geo["voff"]
-        way_entries: list[dict] = []
-        for j in range(n_ws):
-            kname = _KIND_NAME[geo["kind"][j]]
-            s0, e0 = int(voff[j]), int(voff[j + 1])
-            coords = np.column_stack([xs[s0:e0], ys[s0:e0]])
-            entry = {"gc": None, "mg": (kname, geo["wkb"][j]),
-                     "bbox": None, "mom": None, "coords": coords}
-            if not geo["empty"][j]:
-                if kname == "Point":
-                    data = (float(xs[s0]), float(ys[s0]))
-                elif kname == "Polygon":
-                    data = [coords]
-                else:
-                    data = coords
-                entry["gc"] = (kname, data)
-                entry["bbox"] = (float(geo["xmin"][j]), float(geo["ymin"][j]),
-                                 float(geo["xmax"][j]), float(geo["ymax"][j]))
-                entry["mom"] = moments[j]
-            way_entries.append(entry)
-    else:
-        way_entries = []
-
-    node_entries: dict[int, dict] = {}
-
-    def entry_of(enc: int):
-        if enc < 0:
-            return None
-        if enc >= n:
-            return way_entries[enc - n]
-        e = node_entries.get(enc)
-        if e is None:
-            e = node_entries[enc] = _node_entry(enc, vis_a, lon_a, lat_a)
-        return e
-
-    # ----- decode the relation buffers and convert (unchanged converter)
-    enc_open = np.concatenate(
-        [np.arange(n, dtype=np.int64),
-         np.asarray(ws_open, np.int64)]) if n_ws else np.arange(n, dtype=np.int64)
-    enc_last = np.concatenate(
-        [np.arange(n, dtype=np.int64),
-         np.asarray(ws_last, np.int64)]) if n_ws else np.arange(n, dtype=np.int64)
-    r_open = enc_open[np.asarray(rl_open, np.int64)]
-    r_last = enc_last[np.asarray(rl_last, np.int64)]
-    r_ts = ts_ns[r_last]
-    r_cs = cs_a[r_open]
-    r_uid = uid_a[r_open]
-
-    # partition-wide flat offsets of rl_mem: contribution k carries
-    # len(refs-of-its-major) encoded member positions, in walk order
-    n_rl = len(rl_maj)
-    rl_cnt = np.empty(n_rl, np.int64)
-    for _rel_id, lo, hi, maj_refs, rords in rel_slices:
-        pos = {g: i for i, g in enumerate(rords)}
-        for k in range(lo, hi):
-            rl_cnt[k] = len(maj_refs[pos[rl_maj[k]]])
-    rl_off = np.concatenate([[0], np.cumsum(rl_cnt)])
-
-    out_rows: list[dict] = []
-    for rel_id, lo, hi, maj_refs, rords in rel_slices:
-        pos = {g: i for i, g in enumerate(rords)}
-        raw: list[dict] = []
-        for k in range(lo, hi):
-            g = rl_maj[k]
-            mrefs = maj_refs[pos[g]]
-            o0 = int(rl_off[k])
-            raw.append({
-                "ts": int(r_ts[k]),
-                "changeset": int(r_cs[k]),
-                "user_id": int(r_uid[k]),
-                "user": user_a[r_open[k]],
-                "version": int(ver_a[g]),
-                "visible": bool(vis_a[g]),
-                "tags": tags_of(int(g)),
-                "refs": mrefs,
-                "rel_members": [
-                    {
-                        "type": trip[0],
-                        "id": trip[1],
-                        "role": trip[2],
-                        "entry": entry_of(rl_mem[o0 + t]),
-                    }
-                    for t, trip in enumerate(mrefs)
-                ],
-            })
-        out_rows.extend(convert_relation_contributions(
-            rel_id, raw, country_join=joiner,
-            valid_to_sentinel=VALID_TO_SENTINEL_NS,
-        ))
-    return _finalize_rows(out_rows)
-
-
-def _finalize_rows(out_rows: list[dict]):
-    """dict rows → pandas with exact int64-ns → datetime64 conversion (the
-    int/None mix must never pass through float64 — see the dict kernel)."""
-    if not out_rows:
-        return None
-    nat = np.iinfo(np.int64).min
-    n_out = len(out_rows)
-    vf = np.fromiter((r["valid_from"] for r in out_rows),
-                     np.int64, n_out).view("M8[ns]")
-    vt = np.fromiter((r["valid_to"] for r in out_rows),
-                     np.int64, n_out).view("M8[ns]")
-    le = np.fromiter(
-        (r["osm_last_edit"] if r["osm_last_edit"] is not None else nat
-         for r in out_rows), np.int64, n_out).view("M8[ns]")
-    pdf_out = pd.DataFrame(out_rows)
-    pdf_out["valid_from"] = vf
-    pdf_out["valid_to"] = vt
-    pdf_out["osm_last_edit"] = le
-    return pdf_out
 
 
 def relation_partition_table(tbl: pa.Table, joiner=None) -> pa.RecordBatch | None:
@@ -823,8 +590,8 @@ def relation_partition_table(tbl: pa.Table, joiner=None) -> pa.RecordBatch | Non
                 for k in keys:
                     accs[k][sel] += pos_mom[k][p]
         for j in np.nonzero(cnt_g > _LADDER_MAX)[0].tolist():
-            s, n = int(gs[j]), int(cnt_g[j])
-            idx = cpos[s:s + n]
+            g0, gn = int(gs[j]), int(cnt_g[j])
+            idx = cpos[g0:g0 + gn]
             for k in keys:
                 acc = 0.0
                 for v in pos_mom[k][idx].tolist():

@@ -1,10 +1,12 @@
-"""Arrow way-kernel parity: the zero-dict path must equal the dict twin.
+"""Way-kernel parity: Spark `way_contributions` (production kernel
+`history_arrow.way_partition_table`) must equal its dict-kernel reference
+twin `history._way_partition_kernel` bit for bit.
 
-The dict kernel (way_contributions_dict) is the proven implementation —
-ported reference scenarios + oracles pin it. These tests drive BOTH Spark
-paths over adversarial fixtures and assert row-for-row equality, plus unit
-parity for the vectorized minor-node filter (including the drop-cascade
-fallback segments).
+The dict kernel carries the ported reference scenarios + oracles. These
+tests run Spark over adversarial fixtures and the dict kernel over the
+packed partition built in pandas from the same tuples, and assert
+row-for-row equality; plus unit parity for the vectorized minor-node filter
+(including the drop-cascade fallback segments).
 """
 
 from __future__ import annotations
@@ -15,40 +17,88 @@ import numpy as np
 import pandas as pd
 import pytest
 
+from ohsome_planet_spark.functions.cells import xz2_code
 from ohsome_planet_spark.operators.history import (
+    _way_partition_kernel,
     minor_node_filter,
     way_contributions,
-    way_contributions_dict,
 )
 from ohsome_planet_spark.operators.history_arrow import _minor_node_keep_mask
 
+_WAYS_DDL = (
+    "id long, version int, ts timestamp_ntz, changeset long, user_id long, "
+    "user string, visible boolean, tags map<string,string>, refs array<long>"
+)
+_NODES_DDL = (
+    "id long, version int, ts timestamp_ntz, changeset long, user_id long, "
+    "user string, visible boolean, lon double, lat double"
+)
 
-def _norm(df):
-    pdf = df.toPandas().sort_values(
+
+def _norm(pdf):
+    pdf = pdf.sort_values(
         ["osm_id", "osm_version", "valid_from", "changeset"]
     ).reset_index(drop=True)
+    for c in ("valid_from", "valid_to", "osm_last_edit"):
+        pdf[c] = pd.to_datetime(pdf[c]).astype("datetime64[ns]")
     for c in ("tags", "tags_before"):
-        pdf[c] = pdf[c].map(lambda x: None if x is None else sorted(x.items()))
+        pdf[c] = pdf[c].map(
+            lambda x: None if x is None else sorted(dict(x).items()))
     for c in ("refs", "countries"):
         pdf[c] = pdf[c].map(lambda x: None if x is None else list(x))
     return pdf
 
 
-def _assert_paths_equal(spark, ways_rows, node_rows):
-    ways = spark.createDataFrame(
-        ways_rows,
-        "id long, version int, ts timestamp_ntz, changeset long, user_id long, "
-        "user string, visible boolean, tags map<string,string>, refs array<long>",
-    )
-    nodes = spark.createDataFrame(
-        node_rows,
-        "id long, version int, ts timestamp_ntz, changeset long, user_id long, "
-        "user string, visible boolean, lon double, lat double",
-    )
-    from ohsome_planet_spark.operators.history import with_xz2_from_bbox
+def _reference_rows(ways_rows, node_rows, country_index=None):
+    """`_way_partition_kernel` over the packed partition the way plan ships
+    (explode refs → distinct (way_id, node_id) ⋈ node history, unioned with
+    the ways), built in pandas from the same tuples; the xz columns are
+    filled by the same post-pass as test_history_arrow_sweep.py."""
+    node_hist: dict = {}
+    for r in node_rows:
+        node_hist.setdefault(r[0], []).append(r)
+    rows = [
+        dict(way_id=w, kind="w", version=v, ts=ts, changeset=cs, user_id=uid,
+             user=user, visible=vis, tags=tags, refs=refs, node_id=None,
+             lon=None, lat=None)
+        for w, v, ts, cs, uid, user, vis, tags, refs in ways_rows
+    ]
+    pairs = sorted({(w[0], nid) for w in ways_rows for nid in w[8]})
+    for w, nid in pairs:
+        for _, v, ts, cs, uid, user, vis, lon, lat in node_hist.get(nid, []):
+            rows.append(dict(way_id=w, kind="n", version=v, ts=ts,
+                             changeset=cs, user_id=uid, user=user,
+                             visible=vis, tags=None, refs=None, node_id=nid,
+                             lon=lon, lat=lat))
+    pdf = pd.DataFrame(rows)
+    pdf["ts"] = pdf["ts"].astype("datetime64[ns]")
+    joiner = None
+    if country_index is not None:
+        def joiner(kind, data):
+            return country_index.join_geom(kind, data)
+    out = _way_partition_kernel(pdf, joiner)
 
-    a = _norm(way_contributions(ways, nodes))
-    b = _norm(way_contributions_dict(ways, nodes))
+    valid = out["xmin"].notna().to_numpy()
+    lvl = np.full(len(out), -1, np.int64)
+    cod = np.zeros(len(out), np.int64)
+    if valid.any():
+        lv, cd = xz2_code(out["xmin"].to_numpy(float)[valid],
+                          out["ymin"].to_numpy(float)[valid],
+                          out["xmax"].to_numpy(float)[valid],
+                          out["ymax"].to_numpy(float)[valid])
+        lvl[valid] = lv
+        cod[valid] = cd
+    out["xz_level"] = lvl.astype(np.int32)
+    out["xz_code"] = cod
+    return _norm(out)
+
+
+def _assert_paths_equal(spark, ways_rows, node_rows, country_index=None):
+    ways = spark.createDataFrame(ways_rows, _WAYS_DDL)
+    nodes = spark.createDataFrame(node_rows, _NODES_DDL)
+    a = _norm(way_contributions(ways, nodes, country_index).toPandas())
+    b = _reference_rows(ways_rows, node_rows, country_index)
+    assert sorted(a.columns) == sorted(b.columns)
     assert len(a) == len(b) and len(a) > 0
     for col in b.columns:
         av, bv = a[col], b[col]
@@ -218,8 +268,7 @@ def test_arrow_kernel_country_join(spark):
     from ohsome_planet_spark.operators.spatial_join import build_index
     from ohsome_planet_spark.sources.countries import fixture_features
 
-    feats = fixture_features()
-    index = build_index(feats)
+    index = build_index(fixture_features())
     ways = [
         (1, 1, _ts("2020-01-01T00:00"), 1, 1, "u", True, {"building": "yes"},
          [1, 2, 3, 1]),
@@ -229,20 +278,8 @@ def test_arrow_kernel_country_join(spark):
         (2, 1, _ts("2019-01-01T00:00"), 1, 1, "u", True, 1.5, 0.5),
         (3, 1, _ts("2019-01-01T00:00"), 1, 1, "u", True, 1.0, 1.5),
     ]
-    ways_df = spark.createDataFrame(
-        ways,
-        "id long, version int, ts timestamp_ntz, changeset long, user_id long, "
-        "user string, visible boolean, tags map<string,string>, refs array<long>",
-    )
-    nodes_df = spark.createDataFrame(
-        nodes,
-        "id long, version int, ts timestamp_ntz, changeset long, user_id long, "
-        "user string, visible boolean, lon double, lat double",
-    )
-    a = _norm(way_contributions(ways_df, nodes_df, index))
-    b = _norm(way_contributions_dict(ways_df, nodes_df, index))
-    assert list(a["countries"]) == list(b["countries"])
-    assert len(a) == len(b)
+    out = _assert_paths_equal(spark, ways, nodes, index)
+    assert all(len(c) > 0 for c in out["countries"])
 
 
 def test_minor_version_baseline_restarts_per_element(spark):
@@ -284,16 +321,8 @@ def test_kernel_stage_keeps_one_wave_of_partitions(spark):
              [10 + (i % 3)]) for i in range(40)]
     nodes = [(n, 1, _ts("2019-12-01T00:00"), 0, 9, "n", True, 0.0, 0.0)
              for n in (10, 11, 12)]
-    wdf = spark.createDataFrame(
-        ways,
-        "id long, version int, ts timestamp_ntz, changeset long, user_id long, "
-        "user string, visible boolean, tags map<string,string>, refs array<long>",
-    )
-    ndf = spark.createDataFrame(
-        nodes,
-        "id long, version int, ts timestamp_ntz, changeset long, user_id long, "
-        "user string, visible boolean, lon double, lat double",
-    )
+    wdf = spark.createDataFrame(ways, _WAYS_DDL)
+    ndf = spark.createDataFrame(nodes, _NODES_DDL)
     out = way_contributions_arrow(wdf, ndf)
     kp = kernel_partitions(spark)
     assert kp >= 2  # the guard is vacuous on a 1-core session

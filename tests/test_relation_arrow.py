@@ -1,54 +1,130 @@
-"""Relation array-kernel parity: the encoded-cursor path must equal the
-dict twin row for row (the dict kernel carries the ported reference
-scenarios + oracles; these tests pin the rewrite against it)."""
+"""Relation kernel parity: the production Arrow kernel
+(`relation_arrow.relation_partition_table`) must equal its dict-kernel
+reference twin (`history._relation_partition_kernel`) bit for bit, on every
+output column, with and without a country join. The dict kernel carries the
+ported reference scenarios + oracles; these tests pin production to it."""
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pytest
 
+from ohsome_planet_spark.functions.cells import xz2_code
 from ohsome_planet_spark.operators.history import _relation_partition_kernel
-from ohsome_planet_spark.operators.relation_arrow import relation_partition_kernel
+from ohsome_planet_spark.operators.relation_arrow import relation_partition_table
+
+_PACKED_PA_SCHEMA = pa.schema([
+    ("rel_id", pa.int64()),
+    ("kind", pa.string()),
+    ("member_id", pa.int64()),
+    ("version", pa.int64()),
+    ("ts", pa.timestamp("us")),
+    ("changeset", pa.int64()),
+    ("user_id", pa.int64()),
+    ("user", pa.string()),
+    ("visible", pa.bool_()),
+    ("tags", pa.map_(pa.string(), pa.string())),
+    ("refs", pa.list_(pa.int64())),
+    ("lon", pa.float64()),
+    ("lat", pa.float64()),
+    ("rel_member_list", pa.list_(pa.struct([
+        ("type", pa.string()), ("id", pa.int64()), ("role", pa.string())]))),
+])
 
 
-def _compare(pdf):
-    old = _relation_partition_kernel(pdf.copy(), None)
-    new = relation_partition_kernel(pdf.copy(), None)
-    assert (old is None) == (new is None)
+def _packed_table(pdf):
+    """The packed frame as the plan delivers it: Arrow, sorted by
+    (rel_id, kind, member_id, version, ts)."""
+    spdf = pdf.sort_values(
+        ["rel_id", "kind", "member_id", "version", "ts"], kind="stable"
+    ).reset_index(drop=True)
+    spdf = spdf.assign(tags=spdf["tags"].map(
+        lambda d: None if d is None else list(d.items())))
+    return pa.Table.from_pandas(spdf, schema=_PACKED_PA_SCHEMA,
+                                preserve_index=False)
+
+
+def _norm_cell(x):
+    if isinstance(x, dict):
+        return sorted([list(kv) for kv in x.items()])
+    if isinstance(x, (list, tuple, np.ndarray)):
+        return [_norm_cell(v) for v in list(x)]
+    return x
+
+
+def _isna(v):
+    if v is None:
+        return True
+    if isinstance(v, (list, tuple, np.ndarray, dict, bytes, str)):
+        return False
+    try:
+        return bool(pd.isna(v))
+    except (TypeError, ValueError):
+        return False
+
+
+def _compare_table(pdf, joiner=None) -> pd.DataFrame:
+    """relation_partition_table (production) vs the dict twin, every output
+    column, floats exact (the dict kernel's xz post-pass is replayed).
+    Returns the production rows, sorted."""
+    old = _relation_partition_kernel(pdf.copy(), joiner)
+    batch = relation_partition_table(_packed_table(pdf), joiner)
+    assert (old is None) == (batch is None)
     if old is None:
-        return 0
+        return pd.DataFrame()
+    new = batch.to_pandas()
+
+    bx = old[["xmin", "ymin", "xmax", "ymax"]].to_numpy(float)
+    ok = ~np.isnan(bx[:, 0])
+    lvl = np.full(len(old), -1, np.int64)
+    cod = np.zeros(len(old), np.int64)
+    if ok.any():
+        lv, cd = xz2_code(bx[ok, 0], bx[ok, 1], bx[ok, 2], bx[ok, 3])
+        lvl[ok] = lv
+        cod[ok] = cd
+    old = old.assign(xz_level=lvl, xz_code=cod)
+
     key = ["osm_id", "osm_version", "valid_from", "changeset"]
+    for f in ("valid_from", "valid_to", "osm_last_edit"):
+        new[f] = pd.to_datetime(new[f]).astype("datetime64[ns]")
     old = old.sort_values(key).reset_index(drop=True)
     new = new.sort_values(key).reset_index(drop=True)
-    assert list(old.columns) == list(new.columns)
+    assert sorted(old.columns) == sorted(new.columns)
     assert len(old) == len(new)
-
-    def eq(x, y):
-        if isinstance(x, (list, tuple, np.ndarray)) or isinstance(
-                y, (list, tuple, np.ndarray)):
-            if x is None or y is None:
-                return x is None and y is None
-            return list(x) == list(y)
-        if x is None or y is None:
-            return x is None and y is None
-        try:
-            if pd.isna(x) and pd.isna(y):
-                return True
-        except (TypeError, ValueError):
-            pass
-        return x == y
 
     for col in old.columns:
         a, b = old[col], new[col]
-        if str(a.dtype).startswith("float"):
+        if str(a.dtype).startswith("float") and str(b.dtype).startswith("float"):
             aa, bb = a.to_numpy(float), b.to_numpy(float)
             assert ((np.isnan(aa) & np.isnan(bb)) | (aa == bb)).all(), col
-        else:
-            neq = [i for i in range(len(a)) if not eq(a.iloc[i], b.iloc[i])]
-            assert not neq, (col, neq[:3], a.iloc[neq[0]] if neq else None,
-                             b.iloc[neq[0]] if neq else None)
-    return len(old)
+            continue
+        for i in range(len(a)):
+            x, y = a.iloc[i], b.iloc[i]
+            if _isna(x) or _isna(y):
+                assert _isna(x) and _isna(y), (col, i, x, y)
+                continue
+            assert _norm_cell(x) == _norm_cell(y), (col, i, x, y)
+    return new
+
+
+@pytest.fixture(scope="module")
+def country_joiner():
+    """The relation plan's joiner over the fixture country index."""
+    from ohsome_planet_spark.operators.spatial_join import build_index
+    from ohsome_planet_spark.sources.countries import fixture_features
+
+    index = build_index(fixture_features())
+
+    def joiner(geom_t):
+        return index.join_geom(geom_t[0], geom_t[1])
+
+    return joiner
+
+
+def _with_countries(out: pd.DataFrame) -> int:
+    return int(out["countries"].map(len).gt(0).sum())
 
 
 def _ts(day: int) -> pd.Timestamp:
@@ -124,37 +200,6 @@ def _adversarial_pdf():
     return pd.DataFrame(rows)
 
 
-def test_relation_arrow_parity_adversarial():
-    assert _compare(_adversarial_pdf()) > 10
-
-
-def test_relation_arrow_parity_giant_gc():
-    """r6 (r5-advice item 3): GeometryCollection rows above the bounded
-    centroid-ladder threshold (_LADDER_MAX=64 members) take the per-group
-    sequential fold — values must stay bit-identical to the dict twin,
-    alongside small GC rows folded by the ladder in the same batch."""
-    rows = []
-    big, small = 80, 5
-    for i in range(big):
-        rows.append(_node(9, 1000 + i, 1, 0, 1,
-                          lon=(i % 13) * 1.7, lat=float(i % 7) - 3.0))
-    rows.append(_rel(9, 1, 2, 5, [m("node", 1000 + i) for i in range(big)],
-                     tags={"type": "site"}))
-    for i in range(small):
-        rows.append(_node(10, 2000 + i, 1, 0, 1,
-                          lon=float(i) * 0.3, lat=1.0 - i * 0.1))
-    rows.append(_rel(10, 1, 2, 6, [m("node", 2000 + i) for i in range(small)],
-                     tags={"type": "site"}))
-    assert _compare(pd.DataFrame(rows)) >= 2
-
-
-def test_relation_arrow_parity_bench_shape(sf_dir):
-    from tools.profile_rel_kernel import build_rel_packed
-
-    pdf = build_rel_packed(sf_dir, 40)
-    assert _compare(pdf) > 100
-
-
 def _randomized_pdf():
     import random
 
@@ -207,246 +252,209 @@ def _randomized_pdf():
     return pd.DataFrame(rows)
 
 
-def test_relation_arrow_parity_randomized():
-    assert _compare(_randomized_pdf()) > 40
+def _build_packed(sf_dir: str, n_ways: int) -> pd.DataFrame:
+    """The bench way_merge fixture: n_ways ways x 3-node refs over node
+    histories derived from the events table (node id = event_id % 30000),
+    packed as the way plan ships it (kind "w" / "n")."""
+    import duckdb
+
+    ev = duckdb.sql(
+        f"select event_id, ts, user_id from '{sf_dir}/events.parquet'"
+    ).df()
+    nid = (ev.event_id % 30000).to_numpy()
+    keep = nid < n_ways * 3
+    ev = ev[keep].reset_index(drop=True)
+    ev["nid"] = nid[keep]
+    ev = ev.sort_values(["nid", "ts", "event_id"], kind="stable").reset_index(drop=True)
+    ev["version"] = ev.groupby("nid").cumcount() + 1
+    nodes = pd.DataFrame({
+        "way_id": (ev.nid // 3).astype(np.int64),
+        "kind": "n",
+        "version": ev.version.astype(np.int64),
+        "ts": ev.ts,
+        "changeset": (ev.event_id % 17).astype(np.int64),
+        "user_id": ev.user_id.astype(np.int64),
+        "user": "u",
+        "visible": True,
+        "tags": None,
+        "refs": None,
+        "node_id": ev.nid.astype(np.float64),
+        "lon": ((ev.event_id * 7 % 360) - 180.0).astype(np.float64),
+        "lat": ((ev.event_id * 11 % 180) - 90.0).astype(np.float64),
+    })
+    refs = np.empty(n_ways, object)
+    refs[:] = [[3 * i % 30000, (3 * i + 1) % 30000, (3 * i + 2) % 30000]
+               for i in range(n_ways)]
+    tags = np.empty(n_ways, object)
+    tags[:] = [{} for _ in range(n_ways)]
+    ways = pd.DataFrame({
+        "way_id": np.arange(n_ways, dtype=np.int64),
+        "kind": "w",
+        "version": np.int64(1),
+        "ts": pd.Timestamp("2020-01-01 00:00:00"),
+        "changeset": np.int64(1),
+        "user_id": np.int64(1),
+        "user": "u",
+        "visible": True,
+        "tags": tags,
+        "refs": refs,
+        "node_id": np.nan,
+        "lon": np.nan,
+        "lat": np.nan,
+    })
+    return pd.concat([nodes, ways], ignore_index=True)
 
 
-# ---------------------------------------------------------------------------
-# round 5: the Arrow-table kernel (production path) vs the dict twin
-
-_PACKED_PA_SCHEMA = None
-
-
-def _packed_schema():
-    import pyarrow as pa
-
-    global _PACKED_PA_SCHEMA
-    if _PACKED_PA_SCHEMA is None:
-        _PACKED_PA_SCHEMA = pa.schema([
-            ("rel_id", pa.int64()),
-            ("kind", pa.string()),
-            ("member_id", pa.int64()),
-            ("version", pa.int64()),
-            ("ts", pa.timestamp("us")),
-            ("changeset", pa.int64()),
-            ("user_id", pa.int64()),
-            ("user", pa.string()),
-            ("visible", pa.bool_()),
-            ("tags", pa.map_(pa.string(), pa.string())),
-            ("refs", pa.list_(pa.int64())),
-            ("lon", pa.float64()),
-            ("lat", pa.float64()),
-            ("rel_member_list", pa.list_(pa.struct([
-                ("type", pa.string()), ("id", pa.int64()),
-                ("role", pa.string())]))),
-        ])
-    return _PACKED_PA_SCHEMA
-
-
-def _norm_cell(x):
-    if isinstance(x, dict):
-        return sorted([list(kv) for kv in x.items()])
-    if isinstance(x, (list, tuple, np.ndarray)):
-        return [_norm_cell(v) for v in list(x)]
-    return x
-
-
-def _compare_table(pdf):
-    """relation_partition_table (arrow) vs the dict twin, all columns."""
-    import pyarrow as pa
-
-    from ohsome_planet_spark.functions.cells import xz2_code
-    from ohsome_planet_spark.operators.relation_arrow import (
-        relation_partition_table,
-    )
-
-    old = _relation_partition_kernel(pdf.copy(), None)
-    spdf = pdf.sort_values(
-        ["rel_id", "kind", "member_id", "version", "ts"], kind="stable"
-    ).reset_index(drop=True)
-    spdf["tags"] = spdf["tags"].map(
-        lambda d: None if d is None else list(d.items()))
-    tbl = pa.Table.from_pandas(spdf, schema=_packed_schema(),
-                               preserve_index=False)
-    batch = relation_partition_table(tbl, None)
-    assert (old is None) == (batch is None)
-    if old is None:
-        return 0
-    new = batch.to_pandas()
-
-    # the dict kernel leaves xz placeholders for the post-pass; replay it
-    bx = old[["xmin", "ymin", "xmax", "ymax"]].to_numpy(float)
-    ok = ~np.isnan(bx[:, 0])
-    lvl = np.full(len(old), -1, np.int64)
-    cod = np.zeros(len(old), np.int64)
-    if ok.any():
-        l, c = xz2_code(bx[ok, 0], bx[ok, 1], bx[ok, 2], bx[ok, 3])
-        lvl[ok] = l
-        cod[ok] = c
-    old = old.assign(xz_level=lvl, xz_code=cod)
-
-    key = ["osm_id", "osm_version", "valid_from", "changeset"]
-    for f in ("valid_from", "valid_to", "osm_last_edit"):
-        new[f] = pd.to_datetime(new[f]).astype("datetime64[ns]")
-    old = old.sort_values(key).reset_index(drop=True)
-    new = new.sort_values(key).reset_index(drop=True)
-    assert sorted(old.columns) == sorted(new.columns)
-    assert len(old) == len(new)
-
-    for col in old.columns:
-        a, b = old[col], new[col]
-        if str(a.dtype).startswith("float") and str(b.dtype).startswith("float"):
-            aa, bb = a.to_numpy(float), b.to_numpy(float)
-            assert ((np.isnan(aa) & np.isnan(bb)) | (aa == bb)).all(), col
-            continue
-        for i in range(len(a)):
-            x, y = _norm_cell(a.iloc[i]), _norm_cell(b.iloc[i])
-            if x is None or y is None or (
-                    not isinstance(x, list) and not isinstance(y, list)
-                    and pd.isna(x) is True and pd.isna(y) is True):
-                xna = x is None or (not isinstance(x, list) and pd.isna(x))
-                yna = y is None or (not isinstance(y, list) and pd.isna(y))
-                assert xna == yna, (col, i, x, y)
-                if xna:
-                    continue
-            assert x == y, (col, i, x, y)
-    return len(old)
+def _build_rel_packed(sf_dir: str, n_rels: int) -> pd.DataFrame:
+    """The bench relation_merge fixture: n_rels route relations x 3 member
+    ways (the `_build_packed` ways 3r..3r+2) with their node rows."""
+    wp = _build_packed(sf_dir, n_rels * 3)
+    wp["ts"] = wp["ts"].astype("datetime64[ns]")
+    nodes = wp[wp.kind == "n"]
+    ways = wp[wp.kind == "w"]
+    nrows = pd.DataFrame({
+        "rel_id": (nodes.way_id // 3).astype(np.int64), "kind": "node",
+        "member_id": nodes.node_id.astype(np.int64),
+        "version": nodes.version, "ts": nodes.ts, "changeset": nodes.changeset,
+        "user_id": nodes.user_id, "user": nodes.user, "visible": nodes.visible,
+        "tags": None, "refs": None, "lon": nodes.lon, "lat": nodes.lat,
+        "rel_member_list": None,
+    })
+    wrows = pd.DataFrame({
+        "rel_id": (ways.way_id // 3).astype(np.int64), "kind": "way",
+        "member_id": ways.way_id.astype(np.int64),
+        "version": ways.version, "ts": ways.ts, "changeset": ways.changeset,
+        "user_id": ways.user_id, "user": ways.user, "visible": ways.visible,
+        "tags": ways.tags, "refs": ways.refs, "lon": np.nan, "lat": np.nan,
+        "rel_member_list": None,
+    })
+    rml = np.empty(n_rels, object)
+    rml[:] = [[{"type": "way", "id": 3 * r + j, "role": ""} for j in range(3)]
+              for r in range(n_rels)]
+    tags = np.empty(n_rels, object)
+    tags[:] = [{"type": "route"} for _ in range(n_rels)]
+    rrows = pd.DataFrame({
+        "rel_id": np.arange(n_rels, dtype=np.int64), "kind": "rel",
+        "member_id": np.arange(n_rels, dtype=np.int64),
+        "version": np.int64(1), "ts": pd.Timestamp("2020-01-02"),
+        "changeset": np.int64(1), "user_id": np.int64(1), "user": "u",
+        "visible": True, "tags": tags, "refs": None,
+        "lon": np.nan, "lat": np.nan, "rel_member_list": rml,
+    })
+    return pd.concat([nrows, wrows, rrows], ignore_index=True)
 
 
+def _giant_gc_pdf():
+    """An 80-node-member GeometryCollection relation (above the centroid
+    ladder's _LADDER_MAX=64, so it takes the per-group sequential fold)
+    next to a 5-member one (folded by the ladder) in the same partition."""
+    rows = []
+    big, small = 80, 5
+    for i in range(big):
+        rows.append(_node(9, 1000 + i, 1, 0, 1,
+                          lon=(i % 13) * 1.7, lat=float(i % 7) - 3.0))
+    rows.append(_rel(9, 1, 2, 5, [m("node", 1000 + i) for i in range(big)],
+                     tags={"type": "site"}))
+    for i in range(small):
+        rows.append(_node(10, 2000 + i, 1, 0, 1,
+                          lon=float(i) * 0.3, lat=1.0 - i * 0.1))
+    rows.append(_rel(10, 1, 2, 6, [m("node", 2000 + i) for i in range(small)],
+                     tags={"type": "site"}))
+    return pd.DataFrame(rows)
 
 
-# ---------------------------------------------------------------------------
-# round 5: the Arrow-table kernel (production path) vs the dict twin
-
-import pyarrow as pa
-
-_PACKED_PA_SCHEMA = pa.schema([
-    ("rel_id", pa.int64()),
-    ("kind", pa.string()),
-    ("member_id", pa.int64()),
-    ("version", pa.int64()),
-    ("ts", pa.timestamp("us")),
-    ("changeset", pa.int64()),
-    ("user_id", pa.int64()),
-    ("user", pa.string()),
-    ("visible", pa.bool_()),
-    ("tags", pa.map_(pa.string(), pa.string())),
-    ("refs", pa.list_(pa.int64())),
-    ("lon", pa.float64()),
-    ("lat", pa.float64()),
-    ("rel_member_list", pa.list_(pa.struct([
-        ("type", pa.string()), ("id", pa.int64()), ("role", pa.string())]))),
-])
-
-
-def _packed_table(pdf):
-    spdf = pdf.sort_values(
-        ["rel_id", "kind", "member_id", "version", "ts"], kind="stable"
-    ).reset_index(drop=True)
-    spdf = spdf.assign(tags=spdf["tags"].map(
-        lambda d: None if d is None else list(d.items())))
-    return pa.Table.from_pandas(spdf, schema=_PACKED_PA_SCHEMA,
-                                preserve_index=False)
+def _giant_gc_ways_pdf():
+    """A GeometryCollection relation with 70 two-node way members spread
+    over the fixture countries plus one node member; a member-node move
+    between its two versions makes a minor version, and version 2 drops to
+    66 members (still above _LADDER_MAX). A small GC relation with a way
+    member shares the partition."""
+    rows = []
+    members = []
+    for i in range(70):
+        a, b = 5000 + 2 * i, 5001 + 2 * i
+        lon, lat = (i % 15) * 2.0 + 0.5, (i % 9) * 4.0 + 1.0
+        rows.append(_node(11, a, 1, 0, 1, lon=lon, lat=lat))
+        rows.append(_node(11, b, 1, 0, 1, lon=lon + 0.7, lat=lat + 0.3))
+        rows.append(_way(11, 600 + i, 1, 1, 2, [a, b]))
+        members.append(m("way", 600 + i))
+    rows.append(_node(11, 5000, 2, 5, 7, lon=3.0, lat=3.0))
+    rows.append(_rel(11, 1, 2, 5, members + [m("node", 5000)],
+                     tags={"type": "site"}))
+    rows.append(_rel(11, 2, 8, 9, members[:66],
+                     tags={"type": "site", "v": "2"}))
+    for i in range(3):
+        rows.append(_node(12, 7000 + i, 1, 0, 1,
+                          lon=12.0 + i, lat=5.0 + i))
+    rows.append(_way(12, 900, 1, 1, 3, [7000, 7001, 7002]))
+    rows.append(_rel(12, 1, 2, 6, [m("way", 900), m("node", 7000)],
+                     tags={"type": "site"}))
+    return pd.DataFrame(rows)
 
 
-def _norm_cell(x):
-    if isinstance(x, dict):
-        return sorted([list(kv) for kv in x.items()])
-    if isinstance(x, (list, tuple, np.ndarray)):
-        return [_norm_cell(v) for v in list(x)]
-    return x
-
-
-def _compare_table(pdf, joiner=None):
-    """relation_partition_table (arrow production path) vs the dict twin,
-    every output column (the dict kernel's xz post-pass is replayed)."""
-    from ohsome_planet_spark.functions.cells import xz2_code
-    from ohsome_planet_spark.operators.relation_arrow import (
-        relation_partition_table,
-    )
-
-    old = _relation_partition_kernel(pdf.copy(), joiner)
-    batch = relation_partition_table(_packed_table(pdf), joiner)
-    assert (old is None) == (batch is None)
-    if old is None:
-        return 0
-    new = batch.to_pandas()
-
-    bx = old[["xmin", "ymin", "xmax", "ymax"]].to_numpy(float)
-    ok = ~np.isnan(bx[:, 0])
-    lvl = np.full(len(old), -1, np.int64)
-    cod = np.zeros(len(old), np.int64)
-    if ok.any():
-        lv, cd = xz2_code(bx[ok, 0], bx[ok, 1], bx[ok, 2], bx[ok, 3])
-        lvl[ok] = lv
-        cod[ok] = cd
-    old = old.assign(xz_level=lvl, xz_code=cod)
-
-    key = ["osm_id", "osm_version", "valid_from", "changeset"]
-    for f in ("valid_from", "valid_to", "osm_last_edit"):
-        new[f] = pd.to_datetime(new[f]).astype("datetime64[ns]")
-    old = old.sort_values(key).reset_index(drop=True)
-    new = new.sort_values(key).reset_index(drop=True)
-    assert sorted(old.columns) == sorted(new.columns)
-    assert len(old) == len(new)
-
-    def isna(v):
-        if v is None:
-            return True
-        if isinstance(v, (list, tuple, np.ndarray, dict, bytes, str)):
-            return False
-        try:
-            return bool(pd.isna(v))
-        except (TypeError, ValueError):
-            return False
-
-    for col in old.columns:
-        a, b = old[col], new[col]
-        if str(a.dtype).startswith("float") and str(b.dtype).startswith("float"):
-            aa, bb = a.to_numpy(float), b.to_numpy(float)
-            assert ((np.isnan(aa) & np.isnan(bb)) | (aa == bb)).all(), col
-            continue
-        for i in range(len(a)):
-            x, y = a.iloc[i], b.iloc[i]
-            if isna(x) or isna(y):
-                assert isna(x) and isna(y), (col, i, x, y)
-                continue
-            assert _norm_cell(x) == _norm_cell(y), (col, i, x, y)
-    return len(old)
+def test_relation_arrow_parity_adversarial(country_joiner):
+    """Adversarial fixture through the country join."""
+    out = _compare_table(_adversarial_pdf(), country_joiner)
+    assert len(out) > 10
+    assert _with_countries(out) > 0
 
 
 def test_relation_table_parity_adversarial():
-    assert _compare_table(_adversarial_pdf()) > 10
+    assert len(_compare_table(_adversarial_pdf())) > 10
+
+
+def test_relation_arrow_parity_randomized(country_joiner):
+    """Randomized fixture through the country join."""
+    out = _compare_table(_randomized_pdf(), country_joiner)
+    assert len(out) > 40
+    assert _with_countries(out) > 0
 
 
 def test_relation_table_parity_randomized():
-    assert _compare_table(_randomized_pdf()) > 40
+    assert len(_compare_table(_randomized_pdf())) > 40
+
+
+def test_relation_arrow_parity_bench_shape(sf_dir, country_joiner):
+    """Bench-shaped routes through the country join."""
+    out = _compare_table(_build_rel_packed(sf_dir, 40), country_joiner)
+    assert len(out) > 100
+    assert _with_countries(out) > 0
 
 
 def test_relation_table_parity_bench_shape(sf_dir):
-    from tools.profile_rel_kernel import build_rel_packed
+    assert len(_compare_table(_build_rel_packed(sf_dir, 40))) > 100
 
-    pdf = build_rel_packed(sf_dir, 40)
-    assert _compare_table(pdf) > 100
+
+def test_relation_arrow_parity_giant_gc():
+    """Groups above _LADDER_MAX take the per-group sequential fold; values
+    must stay bit-identical to the dict twin, alongside small GC rows folded
+    by the ladder in the same partition."""
+    assert len(_compare_table(_giant_gc_pdf())) >= 2
+
+
+@pytest.mark.parametrize("with_countries", [False, True])
+def test_relation_table_parity_giant_gc_way_members(with_countries,
+                                                    country_joiner):
+    """A >_LADDER_MAX GeometryCollection with way members: the fold must
+    leave the partition's encoded member space (nodes below the row count,
+    way snapshots above it) intact for the tags columns, the member
+    columns and the country join."""
+    joiner = country_joiner if with_countries else None
+    out = _compare_table(_giant_gc_ways_pdf(), joiner)
+    assert len(out) >= 4
+    if with_countries:
+        assert _with_countries(out) == len(out)
 
 
 def test_node_dup_rows_collapse():
     """The plan may ship a (rel_id, node_id) feed with duplicate node rows
     (shared members across ways; see relation_contributions' dedup note) —
-    both array kernels must produce output identical to the clean feed."""
+    the production kernel must produce output identical to the clean feed."""
     base = _adversarial_pdf()
     dups = base[base["kind"] == "node"].iloc[::2]
     doubled = pd.concat([base, dups, dups.iloc[::3]], ignore_index=True)
 
-    clean_pd = relation_partition_kernel(base.copy(), None)
-    dup_pd = relation_partition_kernel(doubled.copy(), None)
-    key = ["osm_id", "osm_version", "valid_from", "changeset"]
-    a = clean_pd.sort_values(key).reset_index(drop=True)
-    b = dup_pd.sort_values(key).reset_index(drop=True)
-    assert len(a) == len(b)
-    assert (a["contrib_type"] == b["contrib_type"]).all()
-    assert (a["geometry"].isna() == b["geometry"].isna()).all()
-    ga, gb = a["geometry"].dropna(), b["geometry"].dropna()
-    assert list(ga) == list(gb)
-
-    assert _compare_table(doubled) == len(a)
+    clean = relation_partition_table(_packed_table(base))
+    dup = relation_partition_table(_packed_table(doubled))
+    assert dup.equals(clean)
+    assert len(_compare_table(doubled)) == clean.num_rows
