@@ -2211,18 +2211,12 @@ def relation_contributions(
 
         from .relation_arrow import relation_partition_table
 
-        joiner = None
-        if bc is not None:
-            idx = bc.value
-
-            def joiner(geom_t):
-                return idx.join_geom(geom_t[0], geom_t[1])
-
         batch_list = list(batches)
         if not batch_list:
             return
         out = relation_partition_table(
-            pa.Table.from_batches(batch_list), joiner)
+            pa.Table.from_batches(batch_list),
+            bc.value if bc is not None else None)
         if out is None:
             return
         step = 1 << 16

@@ -25,7 +25,10 @@ reference's `ContributionsEntity.computeNext`
   tags/tags_before/refs/user are `take`s from the INPUT columns, the small
   categorical columns (status, contrib_type, geometry_type) are dictionary
   `take`s. XZ2 codes are computed in-kernel from the request bboxes, so
-  the separate post-pass Arrow round-trip disappears.
+  the separate post-pass Arrow round-trip disappears;
+* the country join is one `PolygonIndex.join_geoms` probe over every
+  distinct geometry the partition emits, spread to rows by an Arrow `take`
+  (no per-geometry Python call).
 
 `way_partition_table` is the production way kernel. The dict kernel
 `history._way_partition_kernel` is its reference twin, which no Spark plan
@@ -49,7 +52,6 @@ from .history import (
     VALID_TO_SENTINEL_NS,
     _CS_MAX,
     _MinQueue,
-    _request_geom_tuple,
     batch_geometries,
 )
 
@@ -282,12 +284,13 @@ def _dict_take(values: list[str], codes: np.ndarray,
     return pa.array(values, type=pa.string()).take(idx)
 
 
-def way_partition_table(tbl: pa.Table, joiner=None) -> pa.RecordBatch | None:
+def way_partition_table(tbl: pa.Table, index=None) -> pa.RecordBatch | None:
     """One partition of the way merge, Arrow in → Arrow out.
 
     tbl must be sorted by (way_id, kind, node_id, version, ts) — the plan
-    does this JVM-side with sortWithinPartitions. joiner: optional
-    (kind_name, data) -> list[str] country join (broadcast PIP index).
+    does this JVM-side with sortWithinPartitions. index: optional country
+    `PolygonIndex` (the broadcast value); every geometry the partition
+    emits is joined in one `join_geoms` probe.
     """
     n = tbl.num_rows
     if not n:
@@ -550,23 +553,21 @@ def way_partition_table(tbl: pa.Table, joiner=None) -> pa.RecordBatch | None:
         xz_lvl = np.where(nonempty, lv_all[eff_c], -1).astype(np.int32)
         xz_cod = np.where(nonempty, cd_all[eff_c], 0)
 
-    if joiner is None:
+    if index is None:
         countries_col = pa.ListArray.from_arrays(
             np.zeros(nk + 1, np.int32), pa.array([], type=pa.string()))
     else:
-        cache: dict[int, list] = {}
-        rows_c: list[list] = []
-        for i in range(nk):
-            r = int(eff_req[i]) if nonempty[i] else -1
-            if r < 0:
-                rows_c.append([])
-                continue
-            hit = cache.get(r)
-            if hit is None:
-                kname, data = _request_geom_tuple(geo, r)
-                hit = cache[r] = joiner(kname, data)
-            rows_c.append(hit)
-        countries_col = pa.array(rows_c, type=pa.list_(pa.string()))
+        # one probe over the distinct requests the emitted rows use
+        used = np.unique(eff_req[nonempty])
+        vcnt = geo["voff"][used + 1] - geo["voff"][used]
+        vi = np.repeat(geo["voff"][used], vcnt) + _ranges(vcnt)
+        off = np.concatenate([[0], np.cumsum(vcnt)])
+        hits = index.join_geoms(geo["xs"][vi], geo["ys"][vi], off,
+                                np.arange(used.size + 1), geo["kind"][used])
+        slot = np.full(R + 1, used.size)  # R + 1: eff_c is 0 when R == 0
+        slot[used] = np.arange(used.size)
+        countries_col = pa.array(hits + [[]], type=pa.list_(pa.string())).take(
+            pa.array(np.where(nonempty, slot[eff_c], used.size)))
 
     # map/list/string columns: C++ takes from the INPUT arrays; the
     # appended sentinel row supplies the {} fill for null/absent maps
@@ -683,18 +684,12 @@ def way_contributions_arrow(ways, nodes, country_index=None):
     )
 
     def partition_fn(batches):
-        joiner = None
-        if bc is not None:
-            idx = bc.value
-
-            def joiner(kind, data):
-                return idx.join_geom(kind, data)
-
         batch_list = list(batches)
         if not batch_list:
             return
         out = way_partition_table(
-            pa.Table.from_batches(batch_list), joiner)
+            pa.Table.from_batches(batch_list),
+            bc.value if bc is not None else None)
         if out is None:
             return
         # bounded batch sizes for the downstream consumers

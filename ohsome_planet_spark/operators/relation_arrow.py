@@ -25,8 +25,12 @@ production kernel applies the way kernel's machinery end to end:
   encoded member positions — float-identical to `_combine_centroid`'s +=
   chain), envelope WKB, XZ2 codes, and the per-member geometry list
   columns are all NumPy/Arrow-kernel work; only the MultiPolygon assembly
-  (`mpbuild`, inherently iterative ring-joining) and the optional country
-  join remain per-row Python. No pandas materialization anywhere.
+  (`mpbuild`, inherently iterative ring-joining) remains per-row Python.
+  No pandas materialization anywhere;
+* the optional country join is two probes per partition: one
+  `PolygonIndex.join_points` over every member point of the
+  GeometryCollection rows, one `join_geoms` over every MultiPolygon
+  polygon, each unioned per row.
 
 tests/test_relation_arrow.py pins `relation_partition_table` bit for bit
 against the dict twin on adversarial fixtures (with and without a country
@@ -44,6 +48,7 @@ import pyarrow.compute as pc
 from ..functions import geometry_np as gnp
 from ..functions import geodesy as gd
 from ..functions.cells import xz2_code
+from ..functions.pip_index import POLYGON
 from ..functions.waygeom import is_area
 from ..functions.wkb import wkb_dumps
 from .history import (
@@ -299,21 +304,32 @@ def _drop_adjacent_node_dups(tbl: pa.Table) -> pa.Table:
     return tbl.filter(pa.array(~dup)).combine_chunks()
 
 
-def relation_partition_table(tbl: pa.Table, joiner=None) -> pa.RecordBatch | None:
+def _union_by_row(rows: list, hits: list, out: list) -> None:
+    """out[row] = sorted union of the id lists of the probes of that row."""
+    acc: dict = {}
+    for r, h in zip(rows, hits):
+        acc.setdefault(r, set()).update(h)
+    for r, ids in acc.items():
+        out[r] = sorted(ids)
+
+
+def relation_partition_table(tbl: pa.Table, index=None) -> pa.RecordBatch | None:
     """One partition of the relation merge, Arrow in → Arrow out.
 
     tbl must be sorted by (rel_id, kind, member_id, version, ts) — the plan
     does this JVM-side with sortWithinPartitions (kind literals sort
     node < rel < way, the order the stream collector expects).
-    joiner: optional one-tuple (kind, data, wkb) -> list[str] country join.
+    index: optional country `PolygonIndex` (the broadcast value), probed
+    once per partition for the GeometryCollection member points and once
+    for the MultiPolygon polygons.
 
     Semantics are `convert_relation_contributions` verbatim, re-expressed
     as whole-partition array work (see the module docstring); the only
-    per-row Python left is MultiPolygon ring assembly and the country
-    join. Float doctrine: the GeometryCollection centroid folds run
-    np.add.reduceat over per-member moment columns in member order —
-    reduceat is a sequential left fold, so every sum associates exactly
-    like the dict twin's `_combine_centroid` += chain.
+    per-row Python left is MultiPolygon ring assembly. Float doctrine: the
+    GeometryCollection centroid folds run np.add.reduceat over per-member
+    moment columns in member order — reduceat is a sequential left fold, so
+    every sum associates exactly like the dict twin's `_combine_centroid`
+    += chain.
     """
     n = tbl.num_rows
     if not n:
@@ -647,27 +663,29 @@ def relation_partition_table(tbl: pa.Table, joiner=None) -> pa.RecordBatch | Non
         from .history import _envelope_geom
         info_wkb[i] = wkb_dumps(_envelope_geom(
             (own_xmin[i], own_ymin[i], own_xmax[i], own_ymax[i])))
-        if joiner is not None:
-            hits: set = set()
-            s0, e0 = int(moffs[i]), int(moffs[i + 1])
-            for p in range(s0, e0):
-                ec = int(enc[p])
-                if ec < 0 or not pos_valid[ec]:
-                    continue
-                if ec < n:
-                    hits.update(joiner(
-                        ("Point", (float(lon_np[ec]), float(lat_np[ec])), b"")))
-                else:
-                    jj = ec - n
-                    for q in range(int(gvoff[jj]), int(gvoff[jj + 1])):
-                        hits.update(joiner(
-                            ("Point", (float(gxs[q]), float(gys[q])), b"")))
-            info_countries[i] = sorted(hits)
+    if index is not None and gc_rows.size:
+        # every valid member point of the non-empty GeometryCollection rows
+        # (a node member's own point, every vertex of a way member) in one
+        # join_points probe, then the union per row
+        gc_ne = np.zeros(nk, bool)
+        gc_ne[gc_rows] = own_has[gc_rows]
+        slots = np.flatnonzero(vmask & gc_ne[row_of])
+        start = enc[slots]
+        cnt = np.ones(slots.size, np.int64)
+        w = np.flatnonzero(start >= n)
+        jw = start[w] - n
+        cnt[w] = gvoff[jw + 1] - gvoff[jw]
+        start[w] = n + gvoff[jw]
+        vi = np.repeat(start, cnt) + _ranges(cnt)
+        hits = index.join_points(np.concatenate([lon_np, gxs])[vi],
+                                 np.concatenate([lat_np, gys])[vi])
+        _union_by_row(np.repeat(row_of[slots], cnt).tolist(), hits, info_countries)
 
     mp_rows = np.nonzero(is_mp_row)[0]
     if mp_rows.size:
         from ..functions.mpbuild import MultiPolygonBuildError, build_multipolygon
         _EMPTY_MP_WKB = wkb_dumps(("MultiPolygon", None))
+        mp_polys: list = []  # (row, rings) of every assembled polygon
         for i in mp_rows.tolist():
             mrefs = rml_of(int(cmaj[i]))
             s0 = int(moffs[i])
@@ -721,11 +739,16 @@ def relation_partition_table(tbl: pa.Table, joiner=None) -> pa.RecordBatch | Non
                 )
                 for rings in data
             )
-            if joiner is not None:
-                hits = set()
-                for rings in data:
-                    hits.update(joiner(("Polygon", list(rings), b"")))
-                info_countries[i] = sorted(hits)
+            mp_polys.extend((i, rings) for rings in data)
+        if index is not None and mp_polys:
+            # every polygon of the partition in one join_geoms probe
+            rings = [r for _, poly in mp_polys for r in poly]
+            xy = np.vstack(rings)
+            hits = index.join_geoms(
+                xy[:, 0], xy[:, 1], np.cumsum([0] + [len(r) for r in rings]),
+                np.cumsum([0] + [len(poly) for _, poly in mp_polys]),
+                np.full(len(mp_polys), POLYGON))
+            _union_by_row([i for i, _ in mp_polys], hits, info_countries)
 
     # ----- carry-forward chain (deleted rows reuse the previous info)
     rowpos = np.arange(nk)
@@ -784,7 +807,7 @@ def relation_partition_table(tbl: pa.Table, joiner=None) -> pa.RecordBatch | Non
     geometry_col = pa.array(
         [info_wkb[int(eff[i])] if info_ok[i] else None for i in range(nk)],
         type=pa.binary())
-    if joiner is None:
+    if index is None:
         countries_col = pa.ListArray.from_arrays(
             np.zeros(nk + 1, np.int32), pa.array([], type=pa.string()))
     else:

@@ -24,6 +24,7 @@ from ohsome_planet_spark.operators.history import (
     way_contributions,
 )
 from ohsome_planet_spark.operators.history_arrow import _minor_node_keep_mask
+from tests.test_pip_index import join_geom_spec
 
 _WAYS_DDL = (
     "id long, version int, ts timestamp_ntz, changeset long, user_id long, "
@@ -75,7 +76,7 @@ def _reference_rows(ways_rows, node_rows, country_index=None):
     joiner = None
     if country_index is not None:
         def joiner(kind, data):
-            return country_index.join_geom(kind, data)
+            return join_geom_spec(country_index, kind, data)
     out = _way_partition_kernel(pdf, joiner)
 
     valid = out["xmin"].notna().to_numpy()

@@ -14,6 +14,7 @@ import pytest
 
 from ohsome_planet_spark.operators.history import _way_partition_kernel
 from ohsome_planet_spark.operators.history_arrow import way_partition_table
+from tests.test_pip_index import join_geom_spec
 
 SCHEMA = pa.schema([
     ("way_id", pa.int64()), ("kind", pa.string()), ("version", pa.int64()),
@@ -94,15 +95,36 @@ def _to_arrow(pdf: pd.DataFrame) -> pa.Table:
 
 @pytest.mark.parametrize("seed", range(8))
 def test_arrow_kernel_sweep(seed):
+    _sweep(seed)
+
+
+@pytest.mark.parametrize("seed", range(8))
+def test_arrow_kernel_sweep_countries(seed):
+    """With the fixture country index: the production kernel's one probe per
+    partition equals the dict twin's per-geometry spec joins."""
+    from ohsome_planet_spark.operators.spatial_join import build_index
+    from ohsome_planet_spark.sources.countries import fixture_features
+
+    new = _sweep(seed, build_index(fixture_features()))
+    assert new is not None and new["countries"].map(len).gt(0).sum() > 0
+
+
+def _sweep(seed, index=None):
+    """Dict twin vs production kernel on seeded fixture `seed`, every
+    column exact; returns the production rows (None when both are empty)."""
     pdf = _random_fixture(seed)
     dict_in = pdf.copy()
     dict_in["ts"] = dict_in["ts"].astype("int64").astype("datetime64[us]").astype("datetime64[ns]")
     dict_in["tags"] = dict_in["tags"].map(lambda d: d if isinstance(d, dict) else None)
-    old = _way_partition_kernel(dict_in)
-    new_batch = way_partition_table(_to_arrow(pdf))
+    joiner = None
+    if index is not None:
+        def joiner(kind, data):
+            return join_geom_spec(index, kind, data)
+    old = _way_partition_kernel(dict_in, joiner)
+    new_batch = way_partition_table(_to_arrow(pdf), index)
     if old is None or not len(old):
         assert new_batch is None or new_batch.num_rows == 0
-        return
+        return None
     new = new_batch.to_pandas()
     key = ["osm_id", "osm_version", "valid_from", "changeset"]
     old = old.sort_values(key).reset_index(drop=True)
@@ -144,3 +166,4 @@ def test_arrow_kernel_sweep(seed):
                     assert x == y, (seed, col, i, x, y)
                 else:
                     assert pd.isna(y), (seed, col, i)
+    return new

@@ -13,6 +13,7 @@ from ohsome_planet_spark.operators.history import (
     way_contributions,
 )
 from ohsome_planet_spark.sources.countries import fixture_features
+from tests.test_pip_index import join_geom_spec
 
 WAY_SCHEMA = (
     "id long, version int, ts timestamp_ntz, changeset long, user_id long, "
@@ -88,7 +89,7 @@ def local_expected(ways_rows, nodes_rows, way_id, index=None):
         for k, v in by_node.items() if k in ref_ids
     }
     raw = merge_contributions(majors, hists)
-    joiner = (lambda g: index.join_geom(g[0], g[1])) if index else None
+    joiner = (lambda g: join_geom_spec(index, g[0], g[1])) if index else None
     return convert_contributions("way", way_id, raw, country_join=joiner)
 
 

@@ -1,11 +1,123 @@
-"""PolygonIndex: PIP join parity, covered-cell shortcut equivalence."""
+"""PolygonIndex: PIP join parity, covered-cell shortcut equivalence, and the
+batched geometry probe `join_geoms` against the per-geometry spec."""
 
 import numpy as np
 import pytest
 
+from ohsome_planet_spark.functions import pip_index
+from ohsome_planet_spark.functions.geometry_np import points_in_polygon
 from ohsome_planet_spark.functions.pip_index import PolygonIndex
 from ohsome_planet_spark.sources.countries import fixture_features, parse_countries_csv
 from ohsome_planet_spark.sources.gazetteer import GAZETTEER
+
+
+def join_geom_spec(index: PolygonIndex, kind: str, data) -> list[str]:
+    """Sorted id set for one geometry (JTS `intersects` analog, J4) — the
+    per-geometry spec `PolygonIndex.join_geoms` must equal exactly.
+
+    Point → PIP; LineString/Polygon → intersects = any geometry vertex in
+    the part, OR any part-shell vertex in the geometry (polygon only), OR
+    any edge crossing. Mirrors the exact-test fallback of
+    `SpatialIndexJoiner.join:32-43`.
+    """
+    if data is None:
+        return []
+    if kind == "Point":
+        hits = set()
+        for pi, (fid, part) in enumerate(zip(index.ids, index.rings)):
+            b = index.boxes[pi]
+            x, y = data
+            if x >= b[0] and x <= b[2] and y >= b[1] and y <= b[3]:
+                if points_in_polygon(np.asarray([x]), np.asarray([y]), part)[0]:
+                    hits.add(fid)
+        return sorted(hits)
+    if kind == "LineString":
+        coords = np.asarray(data, np.float64)
+        rings = [coords]
+        closed = False
+    elif kind == "Polygon":
+        rings = [np.asarray(r, np.float64) for r in data]
+        coords = rings[0]
+        closed = True
+    else:
+        raise ValueError(kind)
+    gx0, gy0 = coords[:, 0].min(), coords[:, 1].min()
+    gx1, gy1 = coords[:, 0].max(), coords[:, 1].max()
+    hits: set[str] = set()
+    for pi in range(len(index.ids)):
+        b = index.boxes[pi]
+        if gx1 < b[0] or gx0 > b[2] or gy1 < b[1] or gy0 > b[3]:
+            continue
+        part = index.rings[pi]
+        # any geometry vertex inside the part
+        allv = np.vstack(rings)
+        if points_in_polygon(allv[:, 0], allv[:, 1], part).any():
+            hits.add(index.ids[pi])
+            continue
+        # part shell vertex inside the (closed) geometry
+        if closed:
+            sx, sy = part[0]
+            inside = points_in_polygon(
+                np.asarray(sx), np.asarray(sy),
+                [(r[:, 0], r[:, 1]) for r in rings],
+            )
+            if inside.any():
+                hits.add(index.ids[pi])
+                continue
+        # edge crossings
+        if _edges_cross_spec(rings, part):
+            hits.add(index.ids[pi])
+    return sorted(hits)
+
+
+def _edges_cross_spec(rings: list[np.ndarray], part_rings) -> bool:
+    for arr in rings:
+        ax1, ay1 = arr[:-1, 0], arr[:-1, 1]
+        ax2, ay2 = arr[1:, 0], arr[1:, 1]
+        for rx, ry in part_rings:
+            bx1, by1 = rx[:-1], ry[:-1]
+            bx2, by2 = rx[1:], ry[1:]
+            # vectorized proper-crossing test over the (A,B) edge grid
+            d1 = (ax2[:, None] - ax1[:, None]) * (by1[None, :] - ay1[:, None]) - (
+                ay2[:, None] - ay1[:, None]
+            ) * (bx1[None, :] - ax1[:, None])
+            d2 = (ax2[:, None] - ax1[:, None]) * (by2[None, :] - ay1[:, None]) - (
+                ay2[:, None] - ay1[:, None]
+            ) * (bx2[None, :] - ax1[:, None])
+            d3 = (bx2[None, :] - bx1[None, :]) * (ay1[:, None] - by1[None, :]) - (
+                by2[None, :] - by1[None, :]
+            ) * (ax1[:, None] - bx1[None, :])
+            d4 = (bx2[None, :] - bx1[None, :]) * (ay2[:, None] - by1[None, :]) - (
+                by2[None, :] - by1[None, :]
+            ) * (ax2[:, None] - bx1[None, :])
+            cross = ((d1 > 0) != (d2 > 0)) & ((d3 > 0) != (d4 > 0))
+            if cross.any():
+                return True
+            touch = (d1 == 0) | (d2 == 0) | (d3 == 0) | (d4 == 0)
+            if touch.any():
+                # exact-touch check over ALL flagged pairs
+                ii, jj = np.nonzero(touch)
+                a1x, a1y, a2x, a2y = ax1[ii], ay1[ii], ax2[ii], ay2[ii]
+                b1x, b1y, b2x, b2y = bx1[jj], by1[jj], bx2[jj], by2[jj]
+                if (
+                    _on_segment_spec(b1x, b1y, a1x, a1y, a2x, a2y).any()
+                    or _on_segment_spec(b2x, b2y, a1x, a1y, a2x, a2y).any()
+                    or _on_segment_spec(a1x, a1y, b1x, b1y, b2x, b2y).any()
+                ):
+                    return True
+    return False
+
+
+def _on_segment_spec(px, py, x1, y1, x2, y2) -> np.ndarray:
+    """Elementwise: point i exactly on segment i (collinear + within bbox)."""
+    cross = (x2 - x1) * (py - y1) - (y2 - y1) * (px - x1)
+    return (
+        (cross == 0.0)
+        & (px >= np.minimum(x1, x2))
+        & (px <= np.maximum(x1, x2))
+        & (py >= np.minimum(y1, y2))
+        & (py <= np.maximum(y1, y2))
+    )
 
 
 @pytest.fixture(scope="module")
@@ -91,3 +203,135 @@ def test_csv_header_sniffing():
 def test_empty_index():
     idx = PolygonIndex([], grid_zoom=8)
     assert idx.join_points(np.array([1.0]), np.array([1.0])) == [[]]
+
+
+# -- join_geoms: the batched probe equals the per-geometry spec --------------
+
+def _pack(geoms):
+    """[(kind, data)] → the flat (xs, ys, ring_off, geom_off, kinds) batch;
+    data None packs as a geometry without rings."""
+    rings, geom_off, kinds = [], [0], []
+    for kind, data in geoms:
+        if data is not None:
+            if kind == "Point":
+                rings.append(np.asarray([data], np.float64))
+            elif kind == "LineString":
+                rings.append(np.asarray(data, np.float64))
+            else:
+                rings.extend(np.asarray(r, np.float64) for r in data)
+        geom_off.append(len(rings))
+        kinds.append(pip_index._KIND_CODE[kind])
+    xy = np.vstack(rings) if rings else np.zeros((0, 2))
+    ring_off = np.cumsum([0] + [len(r) for r in rings])
+    return xy[:, 0], xy[:, 1], ring_off, np.asarray(geom_off), np.asarray(kinds)
+
+
+def _random_geoms(rng: np.random.Generator, index: PolygonIndex, n: int):
+    """Points, lines and polygons (some with holes, some empty), a third of
+    their coordinates snapped onto the index's part vertices and edges."""
+    edges = [(rx[j], ry[j], rx[j + 1], ry[j + 1])
+             for rings in index.rings for rx, ry in rings for j in range(len(rx) - 1)]
+    if not edges:
+        edges = [(0.0, 0.0, 10.0, 10.0)]
+
+    def coord():
+        r = rng.random()
+        if r < 0.35:
+            x1, y1, x2, y2 = edges[rng.integers(len(edges))]
+            t = rng.choice([0.0, 0.25, 0.5, 1.0])  # dyadic: exactly on the edge
+            return (x1 + t * (x2 - x1), y1 + t * (y2 - y1))
+        if r < 0.6:
+            return tuple(float(v) for v in rng.integers(-2, 42, 2))
+        return tuple(rng.uniform(-5.0, 45.0, 2))
+
+    def box(x0, y0, w, h):
+        return np.asarray([(x0, y0), (x0 + w, y0), (x0 + w, y0 + h),
+                           (x0, y0 + h), (x0, y0)], np.float64)
+
+    geoms = []
+    for _ in range(n):
+        k = rng.random()
+        if k < 0.04:
+            geoms.append((["Point", "LineString", "Polygon"][rng.integers(3)], None))
+        elif k < 0.35:
+            geoms.append(("Point", coord()))
+        elif k < 0.65:
+            geoms.append(("LineString", [coord() for _ in range(rng.integers(1, 9))]))
+        elif k < 0.85:
+            x0, y0 = coord()
+            w, h = (float(v) for v in rng.integers(1, 25, 2))
+            shell = box(x0, y0, w, h)
+            if rng.random() < 0.5 and w > 2 and h > 2:
+                geoms.append(("Polygon", [shell, box(x0 + 1, y0 + 1, w - 2, h - 2)[::-1]]))
+            else:
+                geoms.append(("Polygon", [shell]))
+        else:
+            pts = [coord() for _ in range(rng.integers(3, 7))]
+            geoms.append(("Polygon", [np.asarray(pts + [pts[0]], np.float64)]))
+    return geoms
+
+
+def _repeat_index() -> PolygonIndex:
+    """Ids repeat across parts; one part has a hole."""
+    def ring(pts):
+        return np.asarray(pts + [pts[0]], np.float64)
+
+    return PolygonIndex([
+        ("XX", [ring([(0, 0), (12, 0), (12, 12), (0, 12)]),
+                ring([(4, 4), (8, 4), (8, 8), (4, 8)])]),
+        ("YY", [ring([(10, 10), (25, 10), (25, 25)])]),
+        ("XX", [ring([(20, 0), (30, 0), (30, 8), (20, 8)])]),
+        ("ZZ", [ring([(6, 5), (7, 5), (7, 7), (6, 7)])]),
+        ("YY", [ring([(-3, 30), (40, 30), (40, 31), (-3, 31)])]),
+    ], grid_zoom=None)
+
+
+@pytest.mark.parametrize("which,n", [("fixture", 5000), ("repeat", 2000), ("empty", 200)])
+def test_join_geoms_equals_spec(which, n, index_nogrid):
+    idx = {"fixture": index_nogrid, "repeat": _repeat_index(),
+           "empty": PolygonIndex([], grid_zoom=None)}[which]
+    rng = np.random.default_rng(7 + n)
+    geoms = _random_geoms(rng, idx, n)
+    got = idx.join_geoms(*_pack(geoms))
+    want = [join_geom_spec(idx, kind, data) for kind, data in geoms]
+    assert got == want
+    assert [idx.join_geom(kind, data) for kind, data in geoms[:300]] == want[:300]
+    if which != "empty":
+        assert sum(map(bool, want)) > n // 3 and sum(len(w) > 1 for w in want) > 10
+
+
+def test_join_points_equals_spec(index_nogrid):
+    rng = np.random.default_rng(11)
+    pts = [g[1] for g in _random_geoms(rng, index_nogrid, 3000)
+           if g[0] == "Point" and g[1] is not None]
+    got = index_nogrid.join_points(np.asarray([p[0] for p in pts]),
+                                   np.asarray([p[1] for p in pts]))
+    assert got == [join_geom_spec(index_nogrid, "Point", p) for p in pts]
+
+
+@pytest.mark.parametrize("budget", [pip_index._GRID_BUDGET, 61])
+def test_join_geoms_chunked_grids_equal_spec(budget, monkeypatch):
+    """Grids that cross the chunk budget must still equal the spec.
+
+    A 64-edge circular part; a 20,000-vertex line winding through every
+    part (vertex test: 20,000 x 64 cells), a 20,000-vertex ring around the
+    circle that touches no part vertex inside it (edge test over the full
+    grid), and many small polygons (shell-vertex test). The tiny budget
+    runs the same cases on shorter lines."""
+    monkeypatch.setattr(pip_index, "_GRID_BUDGET", budget)
+    nv = 20_000 if budget > 61 else 2_000
+    t = np.linspace(0.0, 2 * np.pi, 65)
+    circle = np.column_stack([20 + 9 * np.cos(t), 20 + 9 * np.sin(t)])
+    circle[-1] = circle[0]
+    idx = PolygonIndex(fixture_features() + [("CIR", [circle])], grid_zoom=None)
+    s = np.linspace(0.0, 1.0, nv)
+    wave = np.column_stack([-4 + 48 * s, 20 + 22 * np.sin(40 * s)])
+    u = np.linspace(0.0, 2 * np.pi, nv)
+    around = np.column_stack([20 + 9.5 * np.cos(u), 20 + 9.5 * np.sin(u)])
+    geoms = [("LineString", wave), ("LineString", around),
+             ("Polygon", [np.vstack([around, around[:1]])])]
+    geoms += _random_geoms(np.random.default_rng(3), idx, 1500 if budget > 61 else 200)
+    got = idx.join_geoms(*_pack(geoms))
+    assert got == [join_geom_spec(idx, kind, data) for kind, data in geoms]
+    assert got[0] == ["AAA", "BBB", "CIR", "DDD", "EEE", "FFF"]
+    assert "CIR" not in got[1] and "CIR" in got[2]

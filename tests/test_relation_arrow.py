@@ -14,6 +14,7 @@ import pytest
 from ohsome_planet_spark.functions.cells import xz2_code
 from ohsome_planet_spark.operators.history import _relation_partition_kernel
 from ohsome_planet_spark.operators.relation_arrow import relation_partition_table
+from tests.test_pip_index import join_geom_spec
 
 _PACKED_PA_SCHEMA = pa.schema([
     ("rel_id", pa.int64()),
@@ -65,12 +66,17 @@ def _isna(v):
         return False
 
 
-def _compare_table(pdf, joiner=None) -> pd.DataFrame:
-    """relation_partition_table (production) vs the dict twin, every output
-    column, floats exact (the dict kernel's xz post-pass is replayed).
-    Returns the production rows, sorted."""
+def _compare_table(pdf, index=None) -> pd.DataFrame:
+    """relation_partition_table (production, probing `index` once per
+    partition) vs the dict twin (the per-geometry spec joiner over the same
+    index), every output column, floats exact (the dict kernel's xz
+    post-pass is replayed). Returns the production rows, sorted."""
+    joiner = None
+    if index is not None:
+        def joiner(geom_t):
+            return join_geom_spec(index, geom_t[0], geom_t[1])
     old = _relation_partition_kernel(pdf.copy(), joiner)
-    batch = relation_partition_table(_packed_table(pdf), joiner)
+    batch = relation_partition_table(_packed_table(pdf), index)
     assert (old is None) == (batch is None)
     if old is None:
         return pd.DataFrame()
@@ -110,17 +116,12 @@ def _compare_table(pdf, joiner=None) -> pd.DataFrame:
 
 
 @pytest.fixture(scope="module")
-def country_joiner():
-    """The relation plan's joiner over the fixture country index."""
+def country_index():
+    """The relation plan's country index over the fixture features."""
     from ohsome_planet_spark.operators.spatial_join import build_index
     from ohsome_planet_spark.sources.countries import fixture_features
 
-    index = build_index(fixture_features())
-
-    def joiner(geom_t):
-        return index.join_geom(geom_t[0], geom_t[1])
-
-    return joiner
+    return build_index(fixture_features())
 
 
 def _with_countries(out: pd.DataFrame) -> int:
@@ -392,9 +393,9 @@ def _giant_gc_ways_pdf():
     return pd.DataFrame(rows)
 
 
-def test_relation_arrow_parity_adversarial(country_joiner):
+def test_relation_arrow_parity_adversarial(country_index):
     """Adversarial fixture through the country join."""
-    out = _compare_table(_adversarial_pdf(), country_joiner)
+    out = _compare_table(_adversarial_pdf(), country_index)
     assert len(out) > 10
     assert _with_countries(out) > 0
 
@@ -403,9 +404,9 @@ def test_relation_table_parity_adversarial():
     assert len(_compare_table(_adversarial_pdf())) > 10
 
 
-def test_relation_arrow_parity_randomized(country_joiner):
+def test_relation_arrow_parity_randomized(country_index):
     """Randomized fixture through the country join."""
-    out = _compare_table(_randomized_pdf(), country_joiner)
+    out = _compare_table(_randomized_pdf(), country_index)
     assert len(out) > 40
     assert _with_countries(out) > 0
 
@@ -414,9 +415,9 @@ def test_relation_table_parity_randomized():
     assert len(_compare_table(_randomized_pdf())) > 40
 
 
-def test_relation_arrow_parity_bench_shape(sf_dir, country_joiner):
+def test_relation_arrow_parity_bench_shape(sf_dir, country_index):
     """Bench-shaped routes through the country join."""
-    out = _compare_table(_build_rel_packed(sf_dir, 40), country_joiner)
+    out = _compare_table(_build_rel_packed(sf_dir, 40), country_index)
     assert len(out) > 100
     assert _with_countries(out) > 0
 
@@ -434,16 +435,33 @@ def test_relation_arrow_parity_giant_gc():
 
 @pytest.mark.parametrize("with_countries", [False, True])
 def test_relation_table_parity_giant_gc_way_members(with_countries,
-                                                    country_joiner):
+                                                    country_index):
     """A >_LADDER_MAX GeometryCollection with way members: the fold must
     leave the partition's encoded member space (nodes below the row count,
     way snapshots above it) intact for the tags columns, the member
     columns and the country join."""
-    joiner = country_joiner if with_countries else None
-    out = _compare_table(_giant_gc_ways_pdf(), joiner)
+    index = country_index if with_countries else None
+    out = _compare_table(_giant_gc_ways_pdf(), index)
     assert len(out) >= 4
     if with_countries:
         assert _with_countries(out) == len(out)
+
+
+def test_relation_table_parity_multipolygon_two_countries(country_index):
+    """A multipolygon whose two polygons lie in different countries: the
+    batched polygon probe must union both polygons' hits into the row."""
+    rows = []
+    squares = {40: (1.0, 1.0), 41: (31.0, 26.0)}  # in AAA; in DDD's 2nd part
+    for wid, (x0, y0) in squares.items():
+        corners = [(x0, y0), (x0 + 2, y0), (x0 + 2, y0 + 2), (x0, y0 + 2)]
+        nids = [wid * 10 + k for k in range(4)]
+        for nid, (lon, lat) in zip(nids, corners):
+            rows.append(_node(20, nid, 1, 0, 1, lon=lon, lat=lat))
+        rows.append(_way(20, wid, 1, 1, 2, nids + nids[:1]))
+    rows.append(_rel(20, 1, 2, 3, [m("way", 40, "outer"), m("way", 41, "outer")]))
+    rows.append(_rel(20, 2, 5, 4, [m("way", 41, "outer")]))
+    out = _compare_table(pd.DataFrame(rows), country_index)
+    assert out["countries"].map(list).tolist() == [["AAA", "DDD"], ["DDD"]]
 
 
 def test_node_dup_rows_collapse():
@@ -458,3 +476,31 @@ def test_node_dup_rows_collapse():
     dup = relation_partition_table(_packed_table(doubled))
     assert dup.equals(clean)
     assert len(_compare_table(doubled)) == clean.num_rows
+
+
+def test_kernels_probe_countries_without_join_geom(monkeypatch, country_index):
+    """The production kernels join countries with one batched probe per
+    partition: with the per-geometry spec and `PolygonIndex.join_geom`
+    raising, both kernels still give rows their countries (GeometryCollection
+    and MultiPolygon relation rows alike)."""
+    import tests.test_pip_index as spec_mod
+    from ohsome_planet_spark.functions.pip_index import PolygonIndex
+    from ohsome_planet_spark.operators.history_arrow import way_partition_table
+    from tests.test_history_arrow_sweep import _random_fixture, _to_arrow
+
+    def boom(*_args, **_kw):
+        raise AssertionError("per-geometry country join called")
+
+    monkeypatch.setattr(spec_mod, "join_geom_spec", boom)
+    monkeypatch.setattr(PolygonIndex, "join_geom", boom)
+    way_hits = 0
+    for seed in range(4):
+        out = way_partition_table(_to_arrow(_random_fixture(seed)), country_index)
+        way_hits += sum(map(bool, out.column("countries").to_pylist()))
+    assert way_hits > 0
+    rel = pa.Table.from_batches([
+        relation_partition_table(_packed_table(pdf), country_index)
+        for pdf in (_adversarial_pdf(), _giant_gc_ways_pdf())
+    ]).to_pandas()
+    got = rel[rel["countries"].map(len) > 0]
+    assert set(got["geometry_type"]) == {"GeometryCollection", "MultiPolygon"}
