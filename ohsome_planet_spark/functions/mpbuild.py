@@ -358,15 +358,6 @@ def _ring_area(ring) -> float:
     return abs(gnp.ring_signed_area(arr[:, 0], arr[:, 1]))
 
 
-def _point_in_ring(pt, ring) -> bool:
-    arr = np.asarray(ring, np.float64)
-    return bool(
-        gnp.points_in_polygon(
-            np.asarray([pt[0]]), np.asarray([pt[1]]), [(arr[:, 0], arr[:, 1])]
-        )[0]
-    )
-
-
 def _ring_contains_ring(outer, inner) -> bool:
     """outer contains inner: every inner vertex inside-or-on outer and at
     least one strictly inside (shared-boundary rings don't contain)."""

@@ -20,7 +20,6 @@ Scale notes:
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -1116,9 +1115,7 @@ def exact_substring_dedup(
     rows; the hash groupBy is an algebraic count (map-side combine eats
     same-doc repeats), and flagged spans re-join per doc id. Hashing here
     is md5 over the joined slice — O(words x window) chars per doc, chosen
-    because the DuckDB twin can replay it byte-for-byte; a production run
-    swaps in a Rabin-Karp rolling hash over per-word hashes (O(words) per
-    doc, same plan shape, no cross-engine oracle). The per-word coverage
+    because the DuckDB twin can replay it byte-for-byte. The per-word coverage
     test is exists() over the doc's flagged starts — flagged starts are
     rare (zipf head), so it stays near-linear.
     """
@@ -1140,23 +1137,9 @@ def exact_substring_dedup(
         "_id", "_s",
         F.md5(F.array_join(F.slice("_w", F.col("_s"), L), " ")).alias("_h"),
     )
-    return _substring_dedup_from_spans(words, spans, L, min_count, id_col)
-
-
-def _substring_dedup_from_spans(
-    words: DataFrame,
-    spans: DataFrame,
-    L: int,
-    min_count: int,
-    id_col: str,
-) -> DataFrame:
-    """Shared second half of the substring-dedup family: given (_id, _w)
-    and the span table (_id, _s, _h), flag hot hashes, merge covered
-    intervals per doc and re-join the surviving words in order.
-
-    The span table feeds BOTH the hot-hash aggregate and the flagged
-    semi-join; unpersisted, the span-hash pass (the expensive half) runs
-    once per consumer — slot-persisted (r7, the multi-consumer law)."""
+    # the span table feeds BOTH the hot-hash aggregate and the flagged
+    # semi-join; unpersisted, the span-hash pass (the expensive half) runs
+    # once per consumer — slot-persisted (r7, the multi-consumer law)
     from .cache_util import swap_persist
 
     spans = swap_persist("substring_spans", spans)
@@ -1217,83 +1200,3 @@ def _substring_dedup_from_spans(
         F.size("_w").alias("n_words"),
         (F.size("_w") - F.size(kept)).alias("n_dropped_words"),
     )
-
-
-def exact_substring_dedup_rk(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    window: int = 50,
-    min_count: int = 2,
-) -> DataFrame:
-    """The PRODUCTION variant of ``exact_substring_dedup`` (r6 verdict
-    item 3): identical semantics and plan shape, but span hashes come
-    from a Rabin-Karp rolling polynomial over per-word hashes — O(words)
-    hashed bytes per doc instead of the md5 path's O(words × window)
-    (a 50× hashing amplification at the default window).
-
-    Per doc, with word hashes wh[i] (JVM ``xxhash64``, computed in
-    whole-stage codegen BEFORE the kernel — the Python side never
-    touches strings) and an odd base B (hence invertible mod 2^64):
-
-        h_s = Σ_{i<L} wh[s+i]·B^{L-1-i}  (mod 2^64)
-            = B^{s+L-1} · (P[s+L] − P[s]),  P[j] = Σ_{m<j} wh[m]·B^{−m}
-
-    so every span hash is two prefix-array lookups — the whole doc is
-    hashed once, vectorized in NumPy uint64 (natural mod-2^64 wrap)
-    inside one Arrow-batched kernel. Downstream (hot-hash groupBy,
-    interval merge, re-join) is byte-identical shared code.
-
-    Trade vs the md5 twin: equal flagged spans except for rolling-hash
-    collisions (probability ~spans²/2^64 — negligible at any real
-    corpus); the md5 path stays as the DuckDB-replayable oracle twin."""
-    from pyspark.sql.types import ArrayType, LongType
-
-    L = window
-    B = 0x100000001B3  # odd (FNV prime), invertible mod 2^64
-    M = 1 << 64
-    inv_b = pow(B, -1, M)
-
-    @F.pandas_udf(ArrayType(LongType()))
-    def rk_hashes(word_hash_arrays: pd.Series) -> pd.Series:
-        import numpy as np
-
-        out = []
-        for ws in word_hash_arrays:
-            n = len(ws)
-            if n < L:
-                out.append([])
-                continue
-            wh = np.asarray(ws, dtype=np.int64).view(np.uint64)
-            with np.errstate(over="ignore"):
-                inv_pow = np.cumprod(
-                    np.concatenate((
-                        np.ones(1, dtype=np.uint64),
-                        np.full(n, inv_b, dtype=np.uint64),
-                    ))
-                )  # invB^j, j=0..n (wraps mod 2^64)
-                pow_b = np.cumprod(
-                    np.concatenate((
-                        np.full(1, pow(B, L - 1, M), dtype=np.uint64),
-                        np.full(n - L, B, dtype=np.uint64),
-                    ))
-                )  # B^(s+L-1), s=0..n-L
-                pref = np.concatenate((
-                    np.zeros(1, dtype=np.uint64),
-                    np.cumsum(wh * inv_pow[:n]),
-                ))
-                h = (pref[L:] - pref[:-L]) * pow_b
-            out.append(h.astype(np.int64).tolist())
-        return pd.Series(out)
-
-    words = df.select(
-        F.col(id_col).alias("_id"),
-        F.split(F.col(text_col), " ").alias("_w"),
-    )
-    word_hashes = F.transform(F.col("_w"), lambda w: F.xxhash64(w))
-    spans = (
-        words.select("_id", rk_hashes(word_hashes).alias("_hs"))
-        .select("_id", F.posexplode("_hs").alias("_s0", "_h"))
-        .select("_id", (F.col("_s0") + 1).alias("_s"), "_h")
-    )
-    return _substring_dedup_from_spans(words, spans, L, min_count, id_col)

@@ -146,25 +146,6 @@ def pmi_collocations(
     )
 
 
-def doc_bigrams_indexed(df: DataFrame, id_col: str = "doc_id",
-                        text_col: str = "text") -> DataFrame:
-    """(_id, i, w1, w2) — doc_bigrams plus the bigram's 1-based document
-    position, so downstream float folds can pin document order even after
-    a join scrambles row order."""
-    toks = _tokens_col(F.col(text_col))
-    pairs = F.expr(
-        "zip_with(slice(_toks, 1, greatest(size(_toks) - 1, 0)), "
-        "slice(_toks, 2, greatest(size(_toks) - 1, 0)), "
-        "(a, b) -> struct(a AS w1, b AS w2))"
-    )
-    return (
-        df.select(F.col(id_col).alias("_id"), toks.alias("_toks"))
-        .select("_id", F.posexplode(pairs).alias("_i", "_p"))
-        .select("_id", (F.col("_i") + 1).alias("i"),
-                F.col("_p.w1").alias("w1"), F.col("_p.w2").alias("w2"))
-    )
-
-
 def with_lm_logprob_exact(
     df: DataFrame,
     model: DataFrame,

@@ -17,7 +17,8 @@ java/org/heigit/ohsome/contributions/spatialjoin/SpatialGridJoiner.java:48-62`):
   all of them).
 
 Invalid coordinates (per coord_valid) get an empty array — the reference's
-empty-geometry → empty-set behavior.
+empty-geometry → empty-set behavior. That per-point rule is `point_countries`,
+which the driver-side gazetteer enrichment (plans/enrich.py) calls too.
 """
 
 from __future__ import annotations
@@ -35,31 +36,37 @@ def build_index(features, grid_zoom: int | None = 8) -> PolygonIndex:
     return PolygonIndex(features, grid_zoom=grid_zoom)
 
 
-def countries_udf(spark, index: PolygonIndex, use_grid: bool = True):
+def point_countries(index: PolygonIndex, lon: np.ndarray, lat: np.ndarray) -> list[list[str]]:
+    """Sorted country ids per point (float64 arrays, NaN = missing); [] for
+    a missing or out-of-range coordinate."""
+    ok = ~(np.isnan(lon) | np.isnan(lat))
+    ok &= (lon >= -180.0) & (lon <= 180.0) & (lat >= -90.0) & (lat <= 90.0)
+    result: list[list[str]] = [[]] * len(lon)
+    if ok.any():
+        sel = np.nonzero(ok)[0]
+        # memoize repeated coordinates: entity mentions repeat massively,
+        # so probe only the unique points (the reference memoizes
+        # geometry per contribution the same way — Contribution.data,
+        # `contrib/Contribution.java:26-28`)
+        pts = np.column_stack([lon[sel], lat[sel]])
+        uniq, inverse = np.unique(pts, axis=0, return_inverse=True)
+        hits = index.join_points_grid(uniq[:, 0], uniq[:, 1])
+        for pos, inv in zip(sel, inverse):
+            result[pos] = hits[inv]
+    return result
+
+
+def countries_udf(spark, index: PolygonIndex):
     """Returns a pandas UDF (lon, lat) → array<string> over broadcast index."""
     bc = spark.sparkContext.broadcast(index)
 
     @F.pandas_udf(ArrayType(StringType()))
     def pip_countries(lon: pd.Series, lat: pd.Series) -> pd.Series:
-        idx = bc.value
-        lon_v = lon.to_numpy(dtype=np.float64, na_value=np.nan)
-        lat_v = lat.to_numpy(dtype=np.float64, na_value=np.nan)
-        ok = ~(np.isnan(lon_v) | np.isnan(lat_v))
-        ok &= (lon_v >= -180.0) & (lon_v <= 180.0) & (lat_v >= -90.0) & (lat_v <= 90.0)
-        result: list[list[str]] = [[]] * len(lon_v)
-        if ok.any():
-            sel = np.nonzero(ok)[0]
-            # memoize repeated coordinates: entity mentions repeat massively,
-            # so probe only the batch's unique points (the reference memoizes
-            # geometry per contribution the same way — Contribution.data,
-            # `contrib/Contribution.java:26-28`)
-            pts = np.column_stack([lon_v[sel], lat_v[sel]])
-            uniq, inverse = np.unique(pts, axis=0, return_inverse=True)
-            join = idx.join_points_grid if use_grid else idx.join_points
-            hits = join(uniq[:, 0], uniq[:, 1])
-            for pos, inv in zip(sel, inverse):
-                result[pos] = hits[inv]
-        return pd.Series(result)
+        return pd.Series(point_countries(
+            bc.value,
+            lon.to_numpy(dtype=np.float64, na_value=np.nan),
+            lat.to_numpy(dtype=np.float64, na_value=np.nan),
+        ))
 
     # asNondeterministic (r7, optimization-guide §4.4): a filter derived
     # from the UDF's output (e.g. the size(countries) > 0 an explode
@@ -77,7 +84,6 @@ def with_countries(
     lon_col: str = "lon",
     lat_col: str = "lat",
     out_col: str = "countries",
-    use_grid: bool = True,
 ) -> DataFrame:
-    udf = countries_udf(points.sparkSession, index, use_grid=use_grid)
+    udf = countries_udf(points.sparkSession, index)
     return points.withColumn(out_col, udf(F.col(lon_col), F.col(lat_col)))

@@ -5,9 +5,6 @@ functions/cells.py (hex/H3 res 7–10, S2, XZ2) — the Spark analog of the
 reference's per-contribution XZ2 column (`ContributionsAvroConverter.java:127`).
 The zxy quadkey is computed as a **pure JVM column expression** (no UDF at
 all) — it is the partition/oracle-friendly cell and the fastest path.
-
-Per-cell counting supports the salted two-level local/global aggregation the
-north rule requires for mega-cells (see operators/skew.py).
 """
 
 from __future__ import annotations
@@ -36,18 +33,27 @@ def zxy_cell_col(lon: Column, lat: Column, z: int) -> Column:
     )
 
 
+def point_cells(fn, lat: np.ndarray, lon: np.ndarray) -> pd.arrays.IntegerArray:
+    """`fn(lat, lon)` over the points with both coordinates present
+    (float64 arrays, NaN = missing); NULL where either is missing.
+
+    The result is a masked Int64 array: an int64 Series with None
+    assigned into it upcasts to float64, which rounds ids above 2^53."""
+    ok = ~(np.isnan(lon) | np.isnan(lat))
+    out = np.zeros(len(lon), dtype=np.int64)
+    if ok.any():
+        out[ok] = fn(lat[ok], lon[ok])
+    return pd.arrays.IntegerArray(out, ~ok)
+
+
 def _series_udf(fn):
     @F.pandas_udf(LongType())
     def udf(lon: pd.Series, lat: pd.Series) -> pd.Series:
-        lon_v = lon.to_numpy(dtype=np.float64, na_value=np.nan)
-        lat_v = lat.to_numpy(dtype=np.float64, na_value=np.nan)
-        ok = ~(np.isnan(lon_v) | np.isnan(lat_v))
-        out = np.zeros(len(lon_v), dtype=np.int64)
-        if ok.any():
-            out[ok] = fn(lat_v[ok], lon_v[ok])
-        res = pd.Series(out)
-        res[~ok] = None
-        return res
+        return pd.Series(point_cells(
+            fn,
+            lat.to_numpy(dtype=np.float64, na_value=np.nan),
+            lon.to_numpy(dtype=np.float64, na_value=np.nan),
+        ))
 
     return udf
 
@@ -112,16 +118,6 @@ def with_cells(
     if geohash_precision is not None:
         df = df.withColumn("geohash", geohash_col(lon, lat, geohash_precision))
     return df
-
-
-def cell_counts(df: DataFrame, cell_col: str, salted: bool = False, salt_buckets: int = 32) -> DataFrame:
-    """count(*) per cell. With salted=True, uses explicit two-level
-    local/global aggregation (operators/skew.py) for mega-cell skew."""
-    if not salted:
-        return df.groupBy(cell_col).agg(F.count("*").alias("n"))
-    from .skew import salted_count
-
-    return salted_count(df, [cell_col], out_col="n", salt_buckets=salt_buckets)
 
 
 def geohash_col(lon: Column, lat: Column, precision: int = 8) -> Column:

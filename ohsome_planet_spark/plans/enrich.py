@@ -30,7 +30,8 @@ single mentions — the mention side only contributes a count per entity:
 
 Every stage is a DataFrame transformation: Catalyst prunes `html` out of the
 scan (we never touch it after generation), pushes filters, and broadcasts the
-small sides. The default gazetteer path runs no Python at all.
+small sides. The gazetteer is enriched on the driver, so no Spark job of the
+pipeline runs Python.
 """
 
 from __future__ import annotations
@@ -41,10 +42,10 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import BinaryType
 
 from ..operators.geocode import extract_mentions, geocode_mentions
-from ..operators.spatial_join import build_index, with_countries
-from ..operators.tiling import with_cells
+from ..operators.spatial_join import build_index, point_countries
+from ..operators.tiling import point_cells
 from ..sources.countries import fixture_features
-from ..sources.gazetteer import gazetteer_df
+from ..sources.gazetteer import gazetteer_rows
 
 
 def _point_wkb(lon: pd.Series, lat: pd.Series) -> pd.Series:
@@ -81,21 +82,10 @@ def point_wkb_udf(lon: Column, lat: Column) -> Column:
     return F.pandas_udf(_point_wkb, BinaryType())(lon, lat)
 
 
-def _empty_point_wkb() -> bytes:
-    """The exact 21 bytes point_wkb_udf emits for invalid/missing coords
-    (big-endian Point with the masked-NaN ordinates), built with the same
-    numpy ops so the coalesce fallback is bit-identical."""
-    import numpy as np
-
-    buf = np.empty(21, dtype=np.uint8)
-    buf[0:5] = np.array([0, 0, 0, 0, 1], dtype=np.uint8)
-    nan = np.array([np.nan], dtype=np.float64).astype(">f8").view(np.uint8)
-    buf[5:13] = nan
-    buf[13:21] = nan
-    return buf.tobytes()
-
-
-_EMPTY_POINT_WKB = _empty_point_wkb()
+# the exact 21 bytes _point_wkb emits for invalid/missing coords, so the
+# coalesce fallback for unmatched mentions is bit-identical
+_EMPTY_POINT_WKB = _point_wkb(
+    pd.Series([float("nan")]), pd.Series([float("nan")]))[0]
 
 
 # zxy_cell_col evaluated on NULL lon/lat: Spark's greatest/least SKIP
@@ -106,46 +96,44 @@ _EMPTY_POINT_WKB = _empty_point_wkb()
 _ZXY_NULL_CELL = 12 * 288230376151711744 + 4095 * 536870912 + 4095
 
 
-_GAZ_LOCAL_MAX = 50_000  # rows; above this fall back to the Spark path
-
-# Enriched-DEFAULT-gazetteer memo, keyed per session + options. The
-# default gazetteer and country features are CODE LITERALS
-# (sources/gazetteer.GAZETTEER, sources/countries.fixture_features) —
-# their enrichment is a pure function of program constants, equivalent
-# to precomputing it at import time. Nothing derived from any input
-# table is ever memoized (the rule this respects: every bench/oracle
-# run computes from the parquet inputs).
+# Enriched-DEFAULT-gazetteer memo: (hex_resolutions, with_geometry) →
+# (applicationId, frame). The default gazetteer and country features are
+# CODE LITERALS (sources/gazetteer.GAZETTEER,
+# sources/countries.fixture_features) — their enrichment is a pure
+# function of program constants, equivalent to precomputing it at import
+# time. Nothing derived from any input table is ever memoized (the rule
+# this respects: every bench/oracle run computes from the parquet
+# inputs). One entry per option set, so a stopped context's frame is
+# replaced on the next call instead of pinned beside the live one.
 _GAZ_DEFAULT_MEMO: dict = {}
 
 
-def _enrich_gazetteer_local(
+def _enrich_gazetteer(
     spark: SparkSession,
-    gazetteer: DataFrame,
+    rows: list,
     index,
     hex_resolutions: tuple[int, ...],
     with_geometry: bool,
-    rows: list | None = None,
-) -> DataFrame | None:
-    """Enriched gazetteer computed DRIVER-SIDE with the same numpy
-    kernels the Arrow UDFs wrap (r7): the gazetteer is broadcast-tiny by
-    contract, but enriching it through Spark jobs cost a FIXED ~0.6 s of
-    Python-worker stage dispatch per pipeline run — measured as the
-    whole flagship regression at 1M pages (2.12 s vs 1.43 s), invisible
-    at 10M. Returns None when the gazetteer exceeds _GAZ_LOCAL_MAX rows
-    (caller falls back to the distributed path).
+) -> DataFrame:
+    """Enriched gazetteer for `rows` of (entity, lat, lon), computed
+    DRIVER-SIDE with the numpy kernels the Arrow UDFs wrap
+    (`point_countries`, `point_cells`, `_point_wkb`). The geocode join
+    broadcasts every gazetteer, so enriching it in Spark jobs would only
+    put Python-worker stages in front of that same collect (r7 measured
+    them as a fixed ~0.6 s per pipeline run).
 
     The result is built from a pyarrow Table, which plans as a
     LocalRelation: broadcasting it needs no collect job, and scanning it
     starts no Python worker (a `createDataFrame(list)` frame is a Python
     RDD scan and paid both on every run).
 
-    Value contract (pinned by the enrich equality tests): identical to
-    with_countries + with_cells + point_wkb_udf row by row — including
-    NULL cells for invalid/missing coords (the _series_udf mask), [] for
-    invalid countries, the zxy clamp (C.zxy_cell is the expression's
-    bit-exact twin, clamped per axis: a NULL coordinate takes the last
-    index on its own axis, as the JVM expression's null-skipping
-    greatest/least does), and the masked-NaN WKB."""
+    Value contract (pinned by the enrich equality tests against the UDF
+    composition with_countries + with_cells + point_wkb_udf): [] countries
+    for invalid/missing coords, NULL cells where a coordinate is missing,
+    the zxy clamp (C.zxy_cell is the expression's bit-exact twin, clamped
+    per axis: a NULL coordinate takes the last index on its own axis, as
+    the JVM expression's null-skipping greatest/least does), and the
+    masked-NaN WKB."""
     import numpy as np
     import pyarrow as pa
     from pyspark.sql.types import (
@@ -155,61 +143,28 @@ def _enrich_gazetteer_local(
 
     from ..functions import cells as C
 
-    if rows is None:
-        rows = [
-            (r["entity"], r["lat"], r["lon"])
-            for r in gazetteer.select("entity", "lat", "lon").limit(
-                _GAZ_LOCAL_MAX + 1).collect()
-        ]
-    if len(rows) > _GAZ_LOCAL_MAX:
-        return None
-    n = len(rows)
-    lat = np.array([float("nan") if r[1] is None else r[1]
-                    for r in rows], dtype=np.float64)
-    lon = np.array([float("nan") if r[2] is None else r[2]
-                    for r in rows], dtype=np.float64)
+    lat = np.array([r[1] for r in rows], dtype=np.float64)  # None → NaN
+    lon = np.array([r[2] for r in rows], dtype=np.float64)
     lat_null, lon_null = np.isnan(lat), np.isnan(lon)
-    notnan = ~(lat_null | lon_null)
-    with np.errstate(invalid="ignore"):
-        ok = (notnan & (lon >= -180.0) & (lon <= 180.0)
-              & (lat >= -90.0) & (lat <= 90.0))
-        # countries: the pip UDF's semantics — [] unless valid
-        countries: list[list[str]] = [[] for _ in range(n)]
-        if ok.any():
-            sel = np.nonzero(ok)[0]
-            pts = np.column_stack([lon[sel], lat[sel]])
-            uniq, inverse = np.unique(pts, axis=0, return_inverse=True)
-            hits = index.join_points_grid(uniq[:, 0], uniq[:, 1])
-            for pos, inv in zip(sel, inverse):
-                countries[pos] = hits[inv]
-
-        # cell kernels: valid → kernel value, else NULL (_series_udf)
-        def series(fn) -> pa.Array:
-            out = np.zeros(n, dtype=np.int64)
-            if notnan.any():
-                out[notnan] = np.asarray(
-                    fn(lat[notnan], lon[notnan])).astype(np.int64)
-            return pa.array(out, mask=~notnan)
-
-        cells = [series(lambda la, lo, r=r: C.hex_cell(la, lo, r))
-                 for r in hex_resolutions]
-        cells.append(series(lambda la, lo: C.s2_cell_id(la, lo, 12)))
-        # zxy clamps each axis on its own: a NULL lon (lat) becomes 180
-        # (-90), whose index clips to n-1 — the JVM expression's
-        # null-skipping greatest/least output for that axis alone
-        cells.append(pa.array(C.zxy_cell(np.where(lon_null, 180.0, lon),
-                                         np.where(lat_null, -90.0, lat), 12)))
-        cells.append(series(lambda la, lo: C.xz2_point(lo, la, 16)))
-        columns = [
-            pa.array([r[0] for r in rows], pa.string()),
-            pa.array(lat, mask=lat_null),
-            pa.array(lon, mask=lon_null),
-            pa.array(countries, pa.list_(pa.string())),
-            *cells,
-        ]
-        if with_geometry:
-            columns.append(pa.array(
-                _point_wkb(pd.Series(lon), pd.Series(lat)), pa.binary()))
+    cells = [point_cells(lambda la, lo, r=r: C.hex_cell(la, lo, r), lat, lon)
+             for r in hex_resolutions]
+    cells.append(point_cells(lambda la, lo: C.s2_cell_id(la, lo, 12), lat, lon))
+    # zxy clamps each axis on its own: a NULL lon (lat) becomes 180
+    # (-90), whose index clips to n-1 — the JVM expression's
+    # null-skipping greatest/least output for that axis alone
+    cells.append(C.zxy_cell(np.where(lon_null, 180.0, lon),
+                            np.where(lat_null, -90.0, lat), 12))
+    cells.append(point_cells(lambda la, lo: C.xz2_point(lo, la, 16), lat, lon))
+    columns = [
+        pa.array([r[0] for r in rows], pa.string()),
+        pa.array(lat, mask=lat_null),
+        pa.array(lon, mask=lon_null),
+        pa.array(point_countries(index, lon, lat), pa.list_(pa.string())),
+        *map(pa.array, cells),
+    ]
+    if with_geometry:
+        columns.append(pa.array(
+            _point_wkb(pd.Series(lon), pd.Series(lat)), pa.binary()))
     fields = [
         StructField("entity", StringType()),
         StructField("lat", DoubleType()),
@@ -239,46 +194,29 @@ def _enriched_gazetteer(
 
     r7 (guide §8: decide with small rows): every mention's coordinates
     come FROM the gazetteer, so the country set is a function of the
-    entity row — run the PIP kernel once over the (tiny) gazetteer
-    instead of probing the index per mention (the per-mention Arrow PIP
-    stage was ~1.4 s of the 10M-page pipeline)."""
+    entity row — run the PIP kernel once over the gazetteer instead of
+    probing the index per mention (the per-mention Arrow PIP stage was
+    ~1.4 s of the 10M-page pipeline). A custom gazetteer is collected
+    once; the default one is read from code (`gazetteer_rows`)."""
     if features is None and gazetteer is None:
-        # default fixture gazetteer+features are code literals: enrich
-        # once per session from gazetteer_rows() (no collect job, no
-        # index rebuild per call — see _GAZ_DEFAULT_MEMO note)
-        # applicationId is unique per context — id(spark) could be
-        # reused by a NEW session after the old one is GC'd, handing a
-        # dead-session DataFrame out of the memo
-        key = (spark.sparkContext.applicationId, hex_resolutions,
-               with_geometry)
-        gaz_cty = _GAZ_DEFAULT_MEMO.get(key)
-        if gaz_cty is None:
-            from ..sources.gazetteer import gazetteer_rows
+        # default fixture gazetteer+features: enrich once per session (no
+        # index rebuild per call — see _GAZ_DEFAULT_MEMO). applicationId
+        # is unique per context — id(spark) could be reused by a NEW
+        # session after the old one is GC'd
+        app_id = spark.sparkContext.applicationId
+        key = (hex_resolutions, with_geometry)
+        hit = _GAZ_DEFAULT_MEMO.get(key)
+        if hit is None or hit[0] != app_id:
+            hit = (app_id, _enrich_gazetteer(
+                spark, gazetteer_rows(), build_index(fixture_features()),
+                hex_resolutions, with_geometry))
+            _GAZ_DEFAULT_MEMO[key] = hit
+        return hit[1]
 
-            gaz_cty = _enrich_gazetteer_local(
-                spark, None, build_index(fixture_features()),
-                hex_resolutions, with_geometry, rows=gazetteer_rows(),
-            )
-            _GAZ_DEFAULT_MEMO[key] = gaz_cty
-        return gaz_cty
-
-    features = features if features is not None else fixture_features()
-    gazetteer = gazetteer if gazetteer is not None else gazetteer_df(spark)
-    index = build_index(features)
-    gaz_cty = _enrich_gazetteer_local(
-        spark, gazetteer, index, hex_resolutions, with_geometry
-    )
-    if gaz_cty is None:
-        # gazetteer too large to collect: same enrichment as Spark jobs
-        gaz_cty = with_cells(
-            with_countries(gazetteer, index),
-            hex_resolutions=hex_resolutions,
-        )
-        if with_geometry:
-            gaz_cty = gaz_cty.withColumn(
-                "geometry", point_wkb_udf(F.col("lon"), F.col("lat"))
-            )
-    return gaz_cty
+    rows = (gazetteer_rows() if gazetteer is None
+            else gazetteer.select("entity", "lat", "lon").collect())
+    index = build_index(features if features is not None else fixture_features())
+    return _enrich_gazetteer(spark, rows, index, hex_resolutions, with_geometry)
 
 
 def enrich_pages(

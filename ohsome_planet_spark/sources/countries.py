@@ -86,9 +86,3 @@ def read_countries_csv(path: str | Path) -> list[tuple[str, list[np.ndarray]]]:
 
 def fixture_features() -> list[tuple[str, list[np.ndarray]]]:
     return parse_countries_csv(COUNTRY_CSV)
-
-
-def fixture_csv_path(tmpdir: str | Path) -> Path:
-    p = Path(tmpdir) / "countries.csv"
-    p.write_text(COUNTRY_CSV, encoding="utf-8")
-    return p

@@ -55,8 +55,3 @@ def gazetteer_rows() -> list[tuple[str, float, float]]:
 
 def gazetteer_df(spark: SparkSession) -> DataFrame:
     return spark.createDataFrame(GAZETTEER, "entity string, lat double, lon double")
-
-
-def valid_coord(lat: float, lon: float) -> bool:
-    """ContributionGeometry.invalid, negated."""
-    return -180.0 <= lon <= 180.0 and -90.0 <= lat <= 90.0

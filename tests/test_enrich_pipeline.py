@@ -151,16 +151,46 @@ def test_cell_counts_equal_per_mention_reference(spark, skewed_pages, cell_col):
     assert _sorted_rows(got) == _sorted_rows(ref)
 
 
-def test_one_null_coordinate_matches_jvm_and_distributed_paths(spark, monkeypatch):
+def _udf_spec(pages, gazetteer, hex_resolutions=(7, 8, 9, 10), with_geometry=True):
+    """Spec twin of `enrich_pages(gazetteer=...)`: the gazetteer enriched
+    by the Arrow UDF composition, run as Spark stages, instead of on the
+    driver."""
+    from ohsome_planet_spark.operators.geocode import extract_mentions, geocode_mentions
+    from ohsome_planet_spark.operators.spatial_join import build_index, with_countries
+    from ohsome_planet_spark.operators.tiling import with_cells
+    from ohsome_planet_spark.plans.enrich import _assemble_enriched, point_wkb_udf
+    from ohsome_planet_spark.sources.countries import fixture_features
+
+    gaz = with_cells(with_countries(gazetteer, build_index(fixture_features())),
+                     hex_resolutions=hex_resolutions)
+    if with_geometry:
+        gaz = gaz.withColumn("geometry", point_wkb_udf(F.col("lon"), F.col("lat")))
+    return _assemble_enriched(
+        geocode_mentions(extract_mentions(pages), gaz), hex_resolutions, with_geometry)
+
+
+_PAGE_SCHEMA = "url string, warc_ts timestamp, html binary, text string, lang string"
+
+
+def _mention_pages(spark, names, per_page=25):
+    ts = pd.Timestamp("2024-01-01").to_pydatetime()
+    return spark.createDataFrame(
+        [(f"https://gaz.example/{i}", ts, None,
+          " ".join(f"@@{n}@@" for n in names[k:k + per_page]), "en")
+         for i, k in enumerate(range(0, len(names), per_page))],
+        _PAGE_SCHEMA,
+    )
+
+
+def test_one_null_coordinate_matches_jvm_and_udf_spec(spark):
     """A custom gazetteer row with exactly one null coordinate: the JVM zxy
     expression clamps only the null axis (to the last index), so the
     driver-side enrichment must keep the valid axis's real index. The
-    whole enriched row must also equal the distributed (Spark job) path."""
+    whole enriched row must also equal the UDF spec twin."""
     import numpy as np
 
     from ohsome_planet_spark.functions import cells as C
     from ohsome_planet_spark.operators.tiling import zxy_cell_col
-    from ohsome_planet_spark.plans import enrich
 
     gaz = spark.createDataFrame(
         [("Lat_Null", None, 10.0), ("Lon_Null", 20.0, None),
@@ -168,14 +198,10 @@ def test_one_null_coordinate_matches_jvm_and_distributed_paths(spark, monkeypatc
          ("Plain", 12.3, 7.6)],
         "entity string, lat double, lon double",
     )
-    pages = spark.createDataFrame(
-        [("https://gaz.example/1", pd.Timestamp("2024-01-01").to_pydatetime(), None,
-          "@@Lat_Null@@ @@Lon_Null@@ @@Both_Null@@ @@Far_Out@@ @@Plain@@ @@Unlisted@@",
-          "en")],
-        "url string, warc_ts timestamp, html binary, text string, lang string",
-    )
-    local = enrich_pages(spark, pages, gazetteer=gaz).orderBy("mention_idx")
-    rows = local.select(
+    pages = _mention_pages(
+        spark, ["Lat_Null", "Lon_Null", "Both_Null", "Far_Out", "Plain", "Unlisted"])
+    got = enrich_pages(spark, pages, gazetteer=gaz).orderBy("mention_idx")
+    rows = got.select(
         "entity", "zxy_cell",
         zxy_cell_col(F.col("lon"), F.col("lat"), 12).alias("jvm")).collect()
     assert len(rows) == 6
@@ -186,10 +212,64 @@ def test_one_null_coordinate_matches_jvm_and_distributed_paths(spark, monkeypatc
     assert (ix[0], iy[0]) == (int((10.0 + 180.0) / 360.0 * 4096), 4095)
     assert (ix[1], iy[1]) == (4095, int((90.0 - 20.0) / 180.0 * 4096))
 
-    monkeypatch.setattr(enrich, "_GAZ_LOCAL_MAX", 0)
-    distributed = enrich_pages(spark, pages, gazetteer=gaz).orderBy("mention_idx")
-    assert local.columns == distributed.columns
-    assert [tuple(r) for r in local.collect()] == [tuple(r) for r in distributed.collect()]
+    spec = _udf_spec(pages, gaz).orderBy("mention_idx")
+    assert _name_types(got) == _name_types(spec)
+    assert [tuple(r) for r in got.collect()] == [tuple(r) for r in spec.collect()]
+
+
+def _random_gazetteer(seed, n=2400):
+    """(entity, lat, lon) rows over the fixture countries: plain points,
+    points snapped to fixture vertices, range extremes, out-of-range
+    coordinates, NULL lat / lon / both, and reused entity names."""
+    import numpy as np
+
+    from ohsome_planet_spark.sources.countries import fixture_features
+
+    rng = np.random.default_rng(seed)
+    verts = np.concatenate([r for _, rings in fixture_features() for r in rings])
+    rows = []
+    for i in range(n):
+        kind = i % 8
+        if kind == 0:
+            lon, lat = verts[rng.integers(len(verts))]
+        elif kind == 1:
+            lon, lat = rng.choice([-180.0, 180.0]), rng.choice([-90.0, 90.0])
+        elif kind == 2:
+            lon = rng.choice([-1.0, 1.0]) * rng.uniform(180.0, 400.0)
+            lat = rng.uniform(-100.0, 100.0)
+        elif kind == 3:
+            lon, lat = rng.uniform(-200.0, 200.0), rng.choice([-1.0, 1.0]) * rng.uniform(90.0, 200.0)
+        else:
+            lon, lat = rng.uniform(-5.0, 45.0), rng.uniform(-5.0, 45.0)
+        lat, lon = float(lat), float(lon)
+        if i % 29 == 0:
+            lat = None
+        if i % 31 == 0:
+            lon = None
+        # every 11th row repeats an earlier entity name with new coords
+        name = f"E{i - 7}" if i % 11 == 10 else f"E{i}"
+        rows.append((name, lat, lon))
+    return rows
+
+
+@pytest.mark.parametrize("hex_resolutions,with_geometry",
+                         [((7, 8, 9, 10), True), ((8,), False)])
+def test_custom_gazetteer_matches_udf_spec(spark, hex_resolutions, with_geometry):
+    """Driver-side enrichment of a custom gazetteer equals the UDF spec
+    twin row for row, exactly, on every kind of coordinate."""
+    rows = _random_gazetteer(seed=5)
+    nulls = {(r[1] is None, r[2] is None) for r in rows}
+    assert {(True, False), (False, True), (True, True)} <= nulls
+    gaz = spark.createDataFrame(rows, "entity string, lat double, lon double")
+    names = sorted({r[0] for r in rows}) + [f"Unlisted_{i}" for i in range(5)]
+    pages = _mention_pages(spark, names)
+    got = enrich_pages(spark, pages, gazetteer=gaz, hex_resolutions=hex_resolutions,
+                       with_geometry=with_geometry)
+    spec = _udf_spec(pages, gaz, hex_resolutions, with_geometry)
+    assert _name_types(got) == _name_types(spec)
+    got_rows = _sorted_rows(got)
+    assert len(got_rows) > len(names)  # reused names join twice
+    assert got_rows == _sorted_rows(spec)
 
 
 def test_cell_counts_salted_equals_plain(spark, pages):

@@ -62,6 +62,24 @@ def test_enrich_counts_entities_below_local_gazetteer_join(spark, agg):
         assert node not in plan
 
 
+def test_large_custom_gazetteer_broadcasts_local_relation(spark):
+    """A custom gazetteer of 50,001 rows is enriched on the driver like the
+    built-in one: the broadcast side is a local relation and no Python
+    eval node runs."""
+    from ohsome_planet_spark.plans.enrich import enrich_pages
+    from ohsome_planet_spark.sources.pages import pages_df
+
+    gaz = spark.createDataFrame(
+        [(f"G{i}", float(i % 170 - 85), float(i % 350 - 175)) for i in range(50_001)],
+        "entity string, lat double, lon double",
+    )
+    df = enrich_pages(spark, pages_df(spark, 20), gazetteer=gaz)
+    df.collect()
+    plan = physical(df)
+    assert "LocalTableScan" in _subtree(plan, "BroadcastExchange")
+    assert "ArrowEvalPython" not in plan
+
+
 def test_salted_agg_two_level(spark):
     from ohsome_planet_spark.operators.skew import salted_count
 

@@ -85,6 +85,24 @@ def test_with_cells_geohash_option(spark):
     assert geohash_cell(np.array([42.605]), np.array([-5.603]), 5)[0] == "ezs42"
 
 
+def test_hex_cell_udf_exact_beside_a_null_coordinate(spark):
+    """A NULL coordinate in an Arrow batch leaves the other rows' ids
+    exact: hex ids exceed 2^53, so a float64 round trip would round them."""
+    from ohsome_planet_spark.functions.cells import hex_cell
+    from ohsome_planet_spark.operators.tiling import hex_cell_udf
+
+    rng = np.random.default_rng(3)
+    lon = rng.uniform(-180, 180, 200)
+    lat = rng.uniform(-85, 85, 200)
+    rows = [(i, float(x), float(y)) for i, (x, y) in enumerate(zip(lon, lat))]
+    df = spark.createDataFrame(rows + [(200, None, 10.0)],
+                               "i int, lon double, lat double").coalesce(1)
+    got = [r[1] for r in df.select(
+        "i", hex_cell_udf(8)(F.col("lon"), F.col("lat"))).orderBy("i").collect()]
+    assert got[-1] is None
+    assert got[:-1] == hex_cell(lat, lon, 8).tolist()
+
+
 def test_tile_top_k(spark):
     from ohsome_planet_spark.operators.tiling import tile_top_k
 
