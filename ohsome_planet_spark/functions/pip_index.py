@@ -64,6 +64,11 @@ class PolygonIndex:
 
     # -- grid build (BuildGridAction analog) --------------------------------
     def _build_grid(self, zoom: int) -> None:
+        """Classify every cell of each part's bbox at once: a cell some
+        segment's bbox overlaps is a boundary cell (the part is a candidate
+        there); any other cell is fully inside or fully outside, so its
+        center decides whether the part covers it. Cells enter the dict in
+        part order, then x-major cell order."""
         n = 1 << zoom
         cell_w = 360.0 / n
         cell_h = 180.0 / n
@@ -80,30 +85,34 @@ class PolygonIndex:
                 # exclude it from the grid and probe it exactly every time
                 self._nongrid_parts.append(pi)
                 continue
-            shell_x, shell_y = rings[0]
-            seg_x1 = np.concatenate([r[0][:-1] for r in rings])
-            seg_y1 = np.concatenate([r[1][:-1] for r in rings])
-            seg_x2 = np.concatenate([r[0][1:] for r in rings])
-            seg_y2 = np.concatenate([r[1][1:] for r in rings])
-            for ix in range(ix0, ix1 + 1):
-                for iy in range(iy0, iy1 + 1):
-                    cell = (zoom << 58) | (ix << 29) | iy
-                    bxmin = ix * cell_w - 180.0
-                    bxmax = bxmin + cell_w
-                    bymax = 90.0 - iy * cell_h
-                    bymin = bymax - cell_h
-                    touches_boundary = gnp.segments_intersect_bbox(
-                        seg_x1, seg_y1, seg_x2, seg_y2, bxmin, bymin, bxmax, bymax
-                    )
-                    if touches_boundary:
-                        per_cell.setdefault(cell, ([], []))[1].append(pi)
-                        continue
-                    # no boundary inside the cell ⇒ cell is fully inside or
-                    # fully outside: test the center
-                    cx = np.asarray([(bxmin + bxmax) / 2.0])
-                    cy = np.asarray([(bymin + bymax) / 2.0])
-                    if gnp.points_in_polygon(cx, cy, rings)[0]:
-                        per_cell.setdefault(cell, ([], []))[0].append(fid)
+            ix = np.arange(ix0, ix1 + 1)
+            iy = np.arange(iy0, iy1 + 1)
+            bxmin = ix * cell_w - 180.0
+            bxmax = bxmin + cell_w
+            bymax = 90.0 - iy * cell_h
+            bymin = bymax - cell_h
+            x1 = np.concatenate([r[0][:-1] for r in rings])
+            y1 = np.concatenate([r[1][:-1] for r in rings])
+            x2 = np.concatenate([r[0][1:] for r in rings])
+            y2 = np.concatenate([r[1][1:] for r in rings])
+            boundary = _bbox_overlap_any(
+                bxmin, bxmax, np.minimum(x1, x2), np.maximum(x1, x2),
+                bymin, bymax, np.minimum(y1, y2), np.maximum(y1, y2))
+            qx, qy = np.nonzero(~boundary)
+            cx = (bxmin + bxmax) / 2.0
+            cy = (bymin + bymax) / 2.0
+            covered = np.zeros_like(boundary)
+            step = max(1, _GRID_BUDGET // max(x1.size, 1))
+            for s in range(0, qx.size, step):
+                covered[qx[s:s + step], qy[s:s + step]] = gnp.points_in_polygon(
+                    cx[qx[s:s + step]], cy[qy[s:s + step]], rings)
+            for a, b in zip(*np.nonzero(boundary | covered)):
+                cell = (zoom << 58) | (int(ix[a]) << 29) | int(iy[b])
+                entry = per_cell.setdefault(cell, ([], []))
+                if boundary[a, b]:
+                    entry[1].append(pi)
+                else:
+                    entry[0].append(fid)
         self.grid = {
             c: (tuple(sorted(set(cov))), tuple(cand)) for c, (cov, cand) in per_cell.items()
         }
@@ -307,6 +316,21 @@ _KIND_CODE = {"Point": POINT, "LineString": LINESTRING, "Polygon": POLYGON}
 # cells per chunk of a (point x edge) or (edge x edge) grid: about a dozen
 # float64 temporaries of this many cells are live at once (~2 MB each)
 _GRID_BUDGET = 1 << 18
+
+
+def _bbox_overlap_any(bxmin, bxmax, sxmin, sxmax, bymin, bymax, symin, symax) -> np.ndarray:
+    """(cols x rows) grid: does any segment bbox overlap cell (i, j), whose
+    bbox is (bxmin[i], bymin[j], bxmax[i], bymax[j])? The overlap test
+    splits per axis, so the (cells x segments) grid is an (x-overlap) by
+    (y-overlap) matrix product, taken over segment chunks of the budget."""
+    out = np.zeros((bxmin.size, bymin.size), bool)
+    step = max(1, _GRID_BUDGET // max(bxmin.size + bymin.size, 1))
+    for s in range(0, sxmin.size, step):
+        c = slice(s, s + step)
+        ox = ~((sxmax[None, c] < bxmin[:, None]) | (sxmin[None, c] > bxmax[:, None]))
+        oy = ~((symax[None, c] < bymin[:, None]) | (symin[None, c] > bymax[:, None]))
+        out |= (ox.astype(np.float32) @ oy.T.astype(np.float32)) > 0
+    return out
 
 
 def _once_each(ids: np.ndarray, rep: np.ndarray, test) -> np.ndarray:

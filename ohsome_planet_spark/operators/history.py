@@ -84,6 +84,7 @@ CONTRIB_SCHEMA = (
     "countries array<string>, area double, area_delta double, "
     "length double, length_delta double, refs array<long>"
 )
+_CONTRIB_COLS = [f.split()[0] for f in CONTRIB_SCHEMA.split(", ")]
 
 
 class _Hist:
@@ -980,12 +981,13 @@ def finalize_columnar(bufs: _ConvertBufs, joiner=None, ts_int=False) -> pd.DataF
         "area": area_row, "area_delta": area_row - area_prev,
         "length": length_row, "length_delta": length_row - length_prev,
     }
-    cols = [f.split()[0] for f in CONTRIB_SCHEMA.split(", ")]
-    return pd.DataFrame({c: out[c] for c in cols})
+    return pd.DataFrame({c: out[c] for c in _CONTRIB_COLS})
 
 
-def with_xz2_from_bbox(df: DataFrame) -> DataFrame:
-    """Fill xz_level/xz_code from (xmin..ymax) in one vectorized Arrow batch.
+def xz2_udf():
+    """(xmin, ymin, xmax, ymax) → struct<level int, code long> as one
+    vectorized Arrow batch per call: the XZ2 kernel shared by
+    `with_xz2_from_bbox` and the node plan's single Python projection.
 
     Every xz value in the converters derives from the row's bbox, so the
     computation factors out of the per-element merge kernels entirely —
@@ -995,7 +997,8 @@ def with_xz2_from_bbox(df: DataFrame) -> DataFrame:
     (`ContributionsAvroConverter.java:127`)."""
 
     @F.pandas_udf("level int, code long")
-    def k(xmin: pd.Series, ymin: pd.Series, xmax: pd.Series, ymax: pd.Series) -> pd.DataFrame:
+    def xz2_from_bbox(xmin: pd.Series, ymin: pd.Series, xmax: pd.Series,
+                      ymax: pd.Series) -> pd.DataFrame:
         x0 = np.asarray(pd.to_numeric(xmin, errors="coerce"), np.float64)
         y0 = np.asarray(pd.to_numeric(ymin, errors="coerce"), np.float64)
         x1 = np.asarray(pd.to_numeric(xmax, errors="coerce"), np.float64)
@@ -1009,8 +1012,13 @@ def with_xz2_from_bbox(df: DataFrame) -> DataFrame:
             code[valid] = c
         return pd.DataFrame({"level": lvl, "code": code})
 
+    return xz2_from_bbox
+
+
+def with_xz2_from_bbox(df: DataFrame) -> DataFrame:
+    """Fill xz_level/xz_code from (xmin..ymax) with `xz2_udf`."""
     return (
-        df.withColumn("_xz", k("xmin", "ymin", "xmax", "ymax"))
+        df.withColumn("_xz", xz2_udf()("xmin", "ymin", "xmax", "ymax"))
         .withColumn("xz_level", F.col("_xz.level"))
         .withColumn("xz_code", F.col("_xz.code"))
         .drop("_xz")
@@ -1120,6 +1128,19 @@ def _way_partition_kernel(pdf: pd.DataFrame, joiner=None) -> pd.DataFrame:
     return finalize_columnar(bufs, joiner=joiner, ts_int=True)
 
 
+# The node plan is built from SQL text: one gateway round trip per
+# expression, where every Column method (alias, cast, over, ==, ...) pays
+# about eight for the call-site capture of pyspark's DataFrame debugging.
+# Every window shares one partitioning and ordering, so the plan sorts once.
+_NODE_W = "OVER (PARTITION BY id ORDER BY version, ts)"
+_NODE_W_RUN = (
+    "OVER (PARTITION BY id ORDER BY version, ts "
+    "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
+)
+_EMPTY_TAGS = "CAST(map() AS MAP<STRING, STRING>)"
+_NO_COUNTRIES = "CAST(array() AS ARRAY<STRING>)"
+
+
 def node_contributions(nodes: DataFrame, country_index=None) -> DataFrame:
     """Node contribution view (the TransformerNodes path) — DECLARATIVE.
 
@@ -1130,6 +1151,10 @@ def node_contributions(nodes: DataFrame, country_index=None) -> DataFrame:
     via the existing Arrow kernels. Zero per-row Python — on a planet-scale
     run nodes are ~90% of the entities, so this path staying whole-stage-
     codegen'd is THE throughput lever (measured ~10× over the kernel).
+
+    The executed plan has one Sort (every window is over id ordered by
+    version, ts) and one ArrowEvalPython, after the last window, that
+    computes the point WKB, the countries and the XZ2 cell together.
 
     `node_contributions_kernel` below is the original imperative twin,
     kept as the cross-check (tests assert row-identical output on
@@ -1142,171 +1167,130 @@ def node_contributions(nodes: DataFrame, country_index=None) -> DataFrame:
     Input contract (as for the kernel): one row per (id, version, ts);
     duplicate (id, version, ts) keys have no defined collapse order.
     """
-    from pyspark.sql.window import Window
-
     from ..plans.enrich import point_wkb_udf
 
-    w_raw = Window.partitionBy("id").orderBy("version", "ts")
-    w_emit = Window.partitionBy("id").orderBy("version", "ts")
-    w_carry = w_emit.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-
-    coord_valid = (
-        F.col("lon").isNotNull()
-        & F.col("lat").isNotNull()
-        & (F.col("lon") >= -180.0) & (F.col("lon") <= 180.0)
-        & (F.col("lat") >= -90.0) & (F.col("lat") <= 90.0)
-    )
-    raw = nodes.select(
+    w, run = _NODE_W, _NODE_W_RUN
+    raw = nodes.selectExpr(
         "id", "version", "ts", "changeset", "user_id", "user", "visible",
-        F.coalesce("tags", F.create_map().cast("map<string,string>")).alias("tags"),
-        "lon", "lat", coord_valid.alias("_cv"),
-    ).withColumns(
-        {
-            # RAW-neighbor columns (computed before the collapse filter:
-            # valid_to/last_edit/tags_before come from raw neighbors)
-            "_before_version": F.lag("version").over(w_raw),
-            "_last_edit": F.lag("ts").over(w_raw),
-            "_valid_to": F.lead("ts").over(w_raw),
-            "_tags_before": F.lag("tags").over(w_raw),
-            "_before_visible": F.lag("visible").over(w_raw),
-            "_is_first": F.lag("id").over(w_raw).isNull(),
-            # run collapse: keep the LAST row of each (version, changeset) run
-            "_keep": ~(
-                (F.lead("version").over(w_raw) == F.col("version"))
-                & (F.lead("changeset").over(w_raw) == F.col("changeset"))
-            ).eqNullSafe(F.lit(True)),
-        }
+        f"coalesce(tags, {_EMPTY_TAGS}) AS tags", "lon", "lat",
+        "lon IS NOT NULL AND lat IS NOT NULL AND lon >= -180.0D AND lon <= 180.0D"
+        " AND lat >= -90.0D AND lat <= 90.0D AS _cv",
+    ).selectExpr(
+        "*",
+        # RAW-neighbor columns (computed before the collapse filter:
+        # valid_to/last_edit/tags_before come from raw neighbors)
+        f"lag(version) {w} AS _before_version",
+        f"lag(ts) {w} AS _last_edit",
+        f"lead(ts) {w} AS _valid_to",
+        f"lag(tags) {w} AS _tags_before",
+        f"lag(visible) {w} AS _before_visible",
+        f"lag(id) {w} IS NULL AS _is_first",
+        # run collapse: keep the LAST row of each (version, changeset) run
+        f"NOT ((lead(version) {w} = version AND lead(changeset) {w} = changeset)"
+        " <=> true) AS _keep",
     )
-    emitted = raw.where("_keep")
     # carry-forward state over EMITTED rows: coords + validity of the most
     # recent VISIBLE row (including the current row when visible)
-    lv_valid = F.last(F.when(F.col("visible"), F.col("_cv")), ignorenulls=True).over(w_carry)
-    lv_lon = F.last(F.when(F.col("visible") & F.col("_cv"), F.col("lon")), ignorenulls=True).over(w_carry)
-    lv_lat = F.last(F.when(F.col("visible") & F.col("_cv"), F.col("lat")), ignorenulls=True).over(w_carry)
-    # minor_version (converter :86-90, with its quirks): per EMITTED row,
-    # reset to 0 when the RAW predecessor is absent or a different version;
-    # otherwise previous emitted value + 1. So a new version whose first run
-    # collapsed raw rows does NOT reset (its raw predecessor shares the
-    # version) — it keeps counting from the previous version's value, and a
-    # collapsed FIRST run starts at 1, not 0.
-    reset = F.col("_is_first") | ~F.col("_before_version").eqNullSafe(F.col("version"))
-    emitted = emitted.withColumn(
-        "_mv_grp", F.sum(reset.cast("int")).over(w_carry)
+    emitted = raw.where("_keep").selectExpr(
+        "*",
+        # _eff: a non-empty geometry exists; _had_vis: any visible row yet
+        f"last(CASE WHEN visible THEN _cv END) IGNORE NULLS {run} <=> true AS _eff",
+        f"last(CASE WHEN visible THEN _cv END) IGNORE NULLS {run} IS NOT NULL AS _had_vis",
+        f"last(CASE WHEN visible AND _cv THEN lon END) IGNORE NULLS {run} AS _glon",
+        f"last(CASE WHEN visible AND _cv THEN lat END) IGNORE NULLS {run} AS _glat",
+        f"row_number() {w} AS _edits",
+    ).selectExpr(
+        "*",
+        # minor_version (converter :86-90, with its quirks): per EMITTED
+        # row, reset to 0 when the RAW predecessor is absent or a different
+        # version; otherwise previous emitted value + 1. So a new version
+        # whose first run collapsed raw rows does NOT reset (its raw
+        # predecessor shares the version) — it keeps counting from the
+        # previous version's value, and a collapsed FIRST run starts at 1.
+        "_is_first OR NOT (_before_version <=> version) AS _reset",
+        # geometry-change state: the kernel compares the internal geometry
+        # tuple's WKB (empty-LineString sentinel for an invalid-coords
+        # state). Here the comparison runs on the pre-WKB state struct
+        # instead, so that NO window runs after the WKB pandas UDF: a Python
+        # eval node between two same-key windows re-shuffles the whole
+        # stream (ArrowEvalPython does not propagate partitioning to
+        # EnsureRequirements), and nodes are ~90% of planet rows.
+        # struct<e,x,y> equality ≡ WKB-bytes equality: null ⟺ never-visible
+        # (no bytes), e=false ⟺ the empty-LS sentinel, (x,y) ⟺ the point
+        # payload. Only divergence: SQL doubles compare by value (-0.0 =
+        # 0.0) while bytes are bitwise — unreachable for OSM coords, which
+        # decode from fixed-point integers (int 0 → +0.0 only).
+        "CASE WHEN _had_vis THEN named_struct('e', _eff,"
+        " 'x', CASE WHEN _eff THEN _glon END, 'y', CASE WHEN _eff THEN _glat END)"
+        " END AS _gstate",
+    ).selectExpr(
+        "*",
+        f"lag(_gstate) {w} AS _gstate_prev",
+        # the emitted row number at which the current minor-version group
+        # started; groups are contiguous runs in (version, ts) order, so
+        # _edits - start is the group's row_number - 1, and the rows before
+        # the first reset (a collapsed first run) count from 1: _edits
+        f"last(CASE WHEN _reset THEN _edits END) IGNORE NULLS {run} AS _grp_start",
     )
-    emitted = emitted.withColumns(
-        {
-            "_mv": F.row_number().over(
-                Window.partitionBy("id", "_mv_grp").orderBy("version", "ts")
-            ) - 1 + F.when(F.col("_mv_grp") == 0, 1).otherwise(0),
-            "_eff": lv_valid.eqNullSafe(F.lit(True)),  # non-empty geometry exists
-            "_had_vis": lv_valid.isNotNull(),
-            "_glon": lv_lon,
-            "_glat": lv_lat,
-            "_edits": F.row_number().over(w_emit),
-        }
-    )
-    # geometry-change flag: the kernel compares the internal geometry
-    # tuple's WKB (empty-LineString sentinel for an invalid-coords state).
-    # Here the comparison runs on the pre-WKB state struct instead, so that
-    # NO window runs after the WKB pandas UDF: a Python eval node between
-    # two same-key windows re-shuffles the whole stream (ArrowEvalPython
-    # does not propagate partitioning to EnsureRequirements), and nodes are
-    # ~90% of planet rows. struct<e,x,y> equality ≡ WKB-bytes equality:
-    # null ⟺ never-visible (no bytes), e=false ⟺ the empty-LS sentinel,
-    # (x,y) ⟺ the point payload. Only divergence: SQL doubles compare by
-    # value (-0.0 = 0.0) while bytes are bitwise — unreachable for OSM
-    # coords, which decode from fixed-point integers (int 0 → +0.0 only).
-    geom_state = F.when(
-        F.col("_had_vis"),
-        F.struct(
-            F.col("_eff").alias("e"),
-            F.when(F.col("_eff"), F.col("_glon")).alias("x"),
-            F.when(F.col("_eff"), F.col("_glat")).alias("y"),
-        ),
-    )
-    emitted = emitted.withColumn("_gstate", geom_state).withColumn(
-        "_gstate_prev", F.lag("_gstate").over(w_emit)
-    )
-    geom_changed = ~F.col("_gstate").eqNullSafe(F.col("_gstate_prev"))
-    contrib_type = (
-        F.when(~F.col("visible"), F.lit("DELETION"))
-        .when(F.col("_is_first") | ~F.col("_before_visible"), F.lit("CREATION"))
-        .otherwise(
-            F.concat_ws(
-                "_",
-                # reference quirk: TAG set when tags did NOT change (:156-158)
-                # (maps have no SQL equality — compare sorted entry arrays)
-                F.when(
-                    F.array_sort(F.map_entries("tags")).eqNullSafe(
-                        F.array_sort(
-                            F.map_entries(
-                                F.coalesce(
-                                    "_tags_before",
-                                    F.create_map().cast("map<string,string>"),
-                                )
-                            )
-                        )
-                    ),
-                    F.lit("TAG"),
-                ),
-                F.when(geom_changed, F.lit("GEOMETRY")),
-            )
-        )
-    )
-    base_status = F.when(~F.col("visible"), F.lit("deleted")).when(
-        F.col("_valid_to").isNotNull(), F.lit("history")
-    ).otherwise(F.lit("latest"))
-    status = F.when(~F.col("_eff"), F.lit("invalid")).otherwise(base_status)
-    # the single Python eval of the plan, after every window: vectorized
-    # point-WKB assembly only for rows that actually carry a geometry
-    geometry = F.when(F.col("_eff"), point_wkb_udf(F.col("_glon"), F.col("_glat")))
-
-    out = emitted.select(
-        F.lit("node").alias("osm_type"),
-        F.col("id").alias("osm_id"),
-        F.col("version").cast("int").alias("osm_version"),
-        F.col("_mv").cast("int").alias("osm_minor_version"),
-        F.col("_edits").cast("int").alias("osm_edits"),
-        F.col("_last_edit").alias("osm_last_edit"),
-        F.col("ts").alias("valid_from"),
-        F.coalesce("_valid_to", F.lit(str(VALID_TO_SENTINEL)).cast("timestamp_ntz")).alias("valid_to"),
+    out = emitted.selectExpr(
+        "'node' AS osm_type",
+        "id AS osm_id",
+        "CAST(version AS INT) AS osm_version",
+        "CAST(_edits - coalesce(_grp_start, 0) AS INT) AS osm_minor_version",
+        "CAST(_edits AS INT) AS osm_edits",
+        "_last_edit AS osm_last_edit",
+        "ts AS valid_from",
+        f"coalesce(_valid_to, CAST('{VALID_TO_SENTINEL}' AS TIMESTAMP_NTZ)) AS valid_to",
         "user_id",
         "user",
         "changeset",
         "tags",
-        F.coalesce("_tags_before", F.create_map().cast("map<string,string>")).alias("tags_before"),
-        status.alias("status"),
-        contrib_type.alias("contrib_type"),
-        F.lit("Point").alias("geometry_type"),
-        geometry.alias("geometry"),
-        F.when(F.col("_eff"), F.col("_glon")).alias("xmin"),
-        F.when(F.col("_eff"), F.col("_glat")).alias("ymin"),
-        F.when(F.col("_eff"), F.col("_glon")).alias("xmax"),
-        F.when(F.col("_eff"), F.col("_glat")).alias("ymax"),
-        F.when(F.col("_eff"), F.col("_glon")).alias("centroid_x"),
-        F.when(F.col("_eff"), F.col("_glat")).alias("centroid_y"),
-        F.lit(-1).alias("xz_level"),
-        F.lit(0).cast("long").alias("xz_code"),
-        F.lit(None).cast("array<string>").alias("countries"),
-        F.lit(0.0).alias("area"),
-        F.lit(0.0).alias("area_delta"),
-        F.lit(0.0).alias("length"),
-        F.lit(0.0).alias("length_delta"),
-        F.array().cast("array<long>").alias("refs"),
+        f"coalesce(_tags_before, {_EMPTY_TAGS}) AS tags_before",
+        "CASE WHEN NOT _eff THEN 'invalid' ELSE CASE WHEN NOT visible THEN 'deleted'"
+        " WHEN _valid_to IS NOT NULL THEN 'history' ELSE 'latest' END END AS status",
+        "CASE WHEN NOT visible THEN 'DELETION'"
+        " WHEN _is_first OR NOT _before_visible THEN 'CREATION'"
+        " ELSE concat_ws('_',"
+        # reference quirk: TAG set when tags did NOT change (:156-158)
+        # (maps have no SQL equality — compare sorted entry arrays)
+        "  CASE WHEN array_sort(map_entries(tags)) <=> array_sort(map_entries("
+        f"coalesce(_tags_before, {_EMPTY_TAGS}))) THEN 'TAG' END,"
+        "  CASE WHEN NOT (_gstate <=> _gstate_prev) THEN 'GEOMETRY' END)"
+        " END AS contrib_type",
+        "'Point' AS geometry_type",
+        "CASE WHEN _eff THEN _glon END AS xmin",
+        "CASE WHEN _eff THEN _glat END AS ymin",
+        "CASE WHEN _eff THEN _glon END AS xmax",
+        "CASE WHEN _eff THEN _glat END AS ymax",
+        "CASE WHEN _eff THEN _glon END AS centroid_x",
+        "CASE WHEN _eff THEN _glat END AS centroid_y",
+        "0D AS area",
+        "0D AS area_delta",
+        "0D AS length",
+        "0D AS length_delta",
+        "CAST(array() AS ARRAY<BIGINT>) AS refs",
+        "_eff",
     )
+    # the one Python eval of the plan, after every window: point WKB, XZ2
+    # and countries in one projection, so one ArrowEvalPython computes all
+    # three from (xmin, ymin) — a point's bbox and centroid are the point.
+    # Every guard is _eff: the WKB kernel never returns null for a row it
+    # runs on, so "geometry IS NOT NULL" would only inline the kernel again.
+    x, y = F.col("xmin"), F.col("ymin")
+    py = {"_wkb": point_wkb_udf(x, y), "_xz": xz2_udf()(x, y, x, y)}
+    countries = _NO_COUNTRIES
     if country_index is not None:
         from .spatial_join import countries_udf
 
-        udf = countries_udf(nodes.sparkSession, country_index)
-        out = out.withColumn(
-            "countries",
-            F.when(
-                F.col("geometry").isNotNull(), udf(F.col("centroid_x"), F.col("centroid_y"))
-            ).otherwise(F.array().cast("array<string>")),
-        )
-    else:
-        out = out.withColumn("countries", F.array().cast("array<string>"))
-    return with_xz2_from_bbox(out)
+        py["_countries"] = countries_udf(nodes.sparkSession, country_index)(x, y)
+        countries = f"CASE WHEN _eff THEN _countries ELSE {_NO_COUNTRIES} END"
+    final = {
+        "geometry": "CASE WHEN _eff THEN _wkb END AS geometry",
+        "xz_level": "_xz.level AS xz_level",
+        "xz_code": "_xz.code AS xz_code",
+        "countries": f"{countries} AS countries",
+    }
+    return out.withColumns(py).selectExpr(*(final.get(c, c) for c in _CONTRIB_COLS))
 
 
 def node_contributions_kernel(nodes: DataFrame, country_index=None) -> DataFrame:
@@ -1494,6 +1478,7 @@ REL_CONTRIB_SCHEMA = CONTRIB_SCHEMA.replace(
     "member_geom_types array<string>, member_geoms array<binary>",
 )
 
+_MEMBERS_TYPE = "ARRAY<STRUCT<type: STRING, id: BIGINT, role: STRING>>"
 MEMBERS_THRESHOLD = 500  # ContributionGeometry.java:24
 
 
@@ -2125,10 +2110,11 @@ def relation_contributions(
     spark = relations.sparkSession
     bc = spark.sparkContext.broadcast(country_index) if country_index is not None else None
 
-    rel_way_ids = relations.select(
-        F.col("id").alias("rel_id"),
-        F.explode(F.filter("members", lambda m: m.type == "way")).alias("m"),
-    ).select("rel_id", F.col("m.id").alias("way_id")).distinct()
+    # built from SQL text: one gateway round trip per expression (see
+    # node_contributions)
+    rel_way_ids = relations.selectExpr(
+        "id AS rel_id", "explode(filter(members, m -> m.type = 'way')) AS m"
+    ).selectExpr("rel_id", "m.id AS way_id").distinct()
     # ONE dedup exchange for the whole (rel_id, node_id) feed: the old
     # plan paid three (per-feed distinct + union distinct). Dup sources —
     # refs repeated across way VERSIONS (factor = version count, large at
@@ -2137,53 +2123,59 @@ def relation_contributions(
     # kernel additionally drops any adjacent identical node rows
     # (`_adjacent_node_dup_mask`), so correctness never depends on this
     # plan-level dedup — it is purely the shuffle-volume optimization.
-    rel_node_direct = relations.select(
-        F.col("id").alias("rel_id"),
-        F.explode(F.filter("members", lambda m: m.type == "node")).alias("m"),
-    ).select("rel_id", F.col("m.id").alias("node_id"))
+    rel_node_direct = relations.selectExpr(
+        "id AS rel_id", "explode(filter(members, m -> m.type = 'node')) AS m"
+    ).selectExpr("rel_id", "m.id AS node_id")
 
-    rel_ways = rel_way_ids.join(ways.withColumnRenamed("id", "way_id"), "way_id")
-    rel_way_nodes = rel_ways.select("rel_id", F.explode("refs").alias("node_id"))
+    rel_ways = rel_way_ids.join(
+        ways.selectExpr("id AS way_id", "version", "ts", "changeset", "user_id",
+                        "user", "visible", "tags", "refs"),
+        "way_id",
+    )
+    rel_way_nodes = rel_ways.selectExpr("rel_id", "explode(refs) AS node_id")
     rel_nodes = (
         rel_node_direct.unionByName(rel_way_nodes)
         .distinct()
-        .join(nodes.withColumnRenamed("id", "node_id"), "node_id")
+        .join(nodes.selectExpr("id AS node_id", "version", "ts", "changeset",
+                               "user_id", "user", "visible", "lon", "lat"),
+              "node_id")
     )
 
     # pack ways + nodes into one side for the 2-way cogroup
-    ways_packed = rel_ways.select(
+    ways_packed = rel_ways.selectExpr(
         "rel_id",
-        F.lit("way").alias("kind"),
-        F.col("way_id").alias("member_id"),
+        "'way' AS kind",
+        "way_id AS member_id",
         "version", "ts", "changeset", "user_id", "user", "visible",
         "tags", "refs",
-        F.lit(None).cast("double").alias("lon"),
-        F.lit(None).cast("double").alias("lat"),
+        "CAST(NULL AS DOUBLE) AS lon",
+        "CAST(NULL AS DOUBLE) AS lat",
+        f"CAST(NULL AS {_MEMBERS_TYPE}) AS rel_member_list",
     )
-    nodes_packed = rel_nodes.select(
+    nodes_packed = rel_nodes.selectExpr(
         "rel_id",
-        F.lit("node").alias("kind"),
-        F.col("node_id").alias("member_id"),
+        "'node' AS kind",
+        "node_id AS member_id",
         "version", "ts", "changeset", "user_id", "user", "visible",
-        F.lit(None).cast("map<string,string>").alias("tags"),
-        F.lit(None).cast("array<long>").alias("refs"),
+        "CAST(NULL AS MAP<STRING, STRING>) AS tags",
+        "CAST(NULL AS ARRAY<BIGINT>) AS refs",
         "lon", "lat",
+        f"CAST(NULL AS {_MEMBERS_TYPE}) AS rel_member_list",
     )
-    members_packed = ways_packed.unionByName(nodes_packed)
 
     # relations ride in the same frame (kind='rel'), so one repartition to
     # the relation id feeds a partition-level kernel (same shape as the
     # node/way operators — per-key applyInPandas machinery is the bottleneck)
-    rels_packed = relations.select(
-        F.col("id").alias("rel_id"),
-        F.lit("rel").alias("kind"),
-        F.col("id").alias("member_id"),
+    rels_packed = relations.selectExpr(
+        "id AS rel_id",
+        "'rel' AS kind",
+        "id AS member_id",
         "version", "ts", "changeset", "user_id", "user", "visible",
         "tags",
-        F.lit(None).cast("array<long>").alias("refs"),
-        F.lit(None).cast("double").alias("lon"),
-        F.lit(None).cast("double").alias("lat"),
-        F.col("members").alias("rel_member_list"),
+        "CAST(NULL AS ARRAY<BIGINT>) AS refs",
+        "CAST(NULL AS DOUBLE) AS lon",
+        "CAST(NULL AS DOUBLE) AS lat",
+        "members AS rel_member_list",
     )
 
     # explicit partition count: exempt from AQE post-shuffle coalescing,
@@ -2194,10 +2186,7 @@ def relation_contributions(
 
     nparts = kernel_partitions(spark)
     all_packed = (
-        members_packed.withColumn(
-            "rel_member_list",
-            F.lit(None).cast("array<struct<type:string, id:long, role:string>>"),
-        )
+        ways_packed.unionByName(nodes_packed)
         .unionByName(rels_packed)
         .repartition(nparts, "rel_id")
         # kind literals sort node < rel < way — the order the stream

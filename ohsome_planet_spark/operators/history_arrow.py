@@ -632,36 +632,33 @@ def way_contributions_arrow(ways, nodes, country_index=None):
     Arrow in, Arrow out, no pandas materialization and no post-pass XZ2
     round trip.
     """
-    from pyspark.sql import functions as F
-
     spark = ways.sparkSession
     bc = (spark.sparkContext.broadcast(country_index)
           if country_index is not None else None)
 
-    refs_pairs = ways.select(
-        F.col("id").alias("way_id"), F.explode("refs").alias("node_id")
-    ).distinct()
+    # built from SQL text: one gateway round trip per expression (see
+    # history.node_contributions)
+    refs_pairs = ways.selectExpr("id AS way_id", "explode(refs) AS node_id").distinct()
     member_hist = refs_pairs.join(
-        nodes.withColumnRenamed("id", "node_id"), "node_id"
-    ).select(
-        "way_id", "node_id", "version", "ts", "changeset", "user_id", "user",
-        "visible", "lon", "lat",
+        nodes.selectExpr("id AS node_id", "version", "ts", "changeset", "user_id",
+                         "user", "visible", "lon", "lat"),
+        "node_id",
     )
-    ways_packed = ways.select(
-        F.col("id").alias("way_id"),
-        F.lit("w").alias("kind"),
+    ways_packed = ways.selectExpr(
+        "id AS way_id",
+        "'w' AS kind",
         "version", "ts", "changeset", "user_id", "user", "visible",
         "tags", "refs",
-        F.lit(None).cast("long").alias("node_id"),
-        F.lit(None).cast("double").alias("lon"),
-        F.lit(None).cast("double").alias("lat"),
+        "CAST(NULL AS BIGINT) AS node_id",
+        "CAST(NULL AS DOUBLE) AS lon",
+        "CAST(NULL AS DOUBLE) AS lat",
     )
-    nodes_packed = member_hist.select(
+    nodes_packed = member_hist.selectExpr(
         "way_id",
-        F.lit("n").alias("kind"),
+        "'n' AS kind",
         "version", "ts", "changeset", "user_id", "user", "visible",
-        F.lit(None).cast("map<string,string>").alias("tags"),
-        F.lit(None).cast("array<long>").alias("refs"),
+        "CAST(NULL AS MAP<STRING, STRING>) AS tags",
+        "CAST(NULL AS ARRAY<BIGINT>) AS refs",
         "node_id", "lon", "lat",
     )
     # explicit partition count ON PURPOSE (same call as the relation op):

@@ -258,7 +258,12 @@ def test_declarative_matches_kernel_randomized(spark):
 
 def test_node_declarative_plan_shape(spark):
     """Plan guard: the declarative node path must stay window-ops + Arrow
-    kernels — no BatchEvalPython (row-at-a-time Python) anywhere."""
+    kernels — no BatchEvalPython (row-at-a-time Python) anywhere. With a
+    country index, every window shares one sort, and the point WKB, the
+    countries and the XZ2 cell run in one ArrowEvalPython, the WKB kernel
+    once."""
+    import re
+
     import pandas as pd
 
     from ohsome_planet_spark.operators.history import node_contributions
@@ -272,3 +277,36 @@ def test_node_declarative_plan_shape(spark):
     assert "BatchEvalPython" not in plan  # only ArrowEvalPython kernels
     assert "Window" in plan
     assert "mapInPandas" not in plan and "MapInPandas" not in plan
+    idx = PolygonIndex(fixture_features())
+    plan = node_contributions(nodes, idx)._jdf.queryExecution().executedPlan().toString()
+    assert len(re.findall(r"\bSort \[", plan)) == 1, plan
+    assert plan.count("ArrowEvalPython") == 1, plan
+    assert plan.count("_point_wkb(") == 1, plan
+    assert "pip_countries(" in plan and "xz2_from_bbox(" in plan
+
+
+def test_node_minor_version_hand_computed(spark):
+    """osm_minor_version on one history, computed by hand from the converter
+    rule (reset when the RAW predecessor is absent or another version, else
+    the previous EMITTED value + 1):
+
+    raw rows (version, changeset)   emitted   minor
+    (1, 10) (1, 10)                 1 row     1   collapsed first run
+    (2, 11)                         1 row     0   new version
+    (3, 12)                         1 row     0   new version
+    (3, 13)                         1 row     1   same-version repeat
+    (4, 14) (4, 14)                 1 row     2   new version, first run
+                                                  collapsed: keeps counting
+    """
+    from ohsome_planet_spark.operators.history import node_contributions_kernel
+
+    raw = [(1, 10), (1, 10), (2, 11), (3, 12), (3, 13), (4, 14), (4, 14)]
+    nodes = spark.createDataFrame(
+        [(7, v, ts(i + 1), cs, 1, "u", True, {}, 1.0, 2.0) for i, (v, cs) in enumerate(raw)],
+        NODE_SCHEMA,
+    )
+    want = [(1, 1, 1), (2, 2, 0), (3, 3, 0), (4, 3, 1), (5, 4, 2)]
+    cols = ["osm_edits", "osm_version", "osm_minor_version"]
+    for df in (node_contributions(nodes), node_contributions_kernel(nodes)):
+        got = [tuple(r) for r in df.select(*cols).orderBy("osm_edits").collect()]
+        assert got == want

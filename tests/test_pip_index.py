@@ -5,7 +5,7 @@ import numpy as np
 import pytest
 
 from ohsome_planet_spark.functions import pip_index
-from ohsome_planet_spark.functions.geometry_np import points_in_polygon
+from ohsome_planet_spark.functions.geometry_np import points_in_polygon, segments_intersect_bbox
 from ohsome_planet_spark.functions.pip_index import PolygonIndex
 from ohsome_planet_spark.sources.countries import fixture_features, parse_countries_csv
 from ohsome_planet_spark.sources.gazetteer import GAZETTEER
@@ -118,6 +118,117 @@ def _on_segment_spec(px, py, x1, y1, x2, y2) -> np.ndarray:
         & (py >= np.minimum(y1, y2))
         & (py <= np.maximum(y1, y2))
     )
+
+
+def build_grid_spec(index: PolygonIndex, zoom: int):
+    """The covered-cell grid cell by cell — the spec `PolygonIndex._build_grid`
+    must equal exactly, dict order included: a cell whose bbox some segment's
+    bbox overlaps lists the part as a candidate; any other cell in the part's
+    bbox is covered iff its center lies in the part. Returns (grid, parts
+    left out of the grid)."""
+    n = 1 << zoom
+    cell_w = 360.0 / n
+    cell_h = 180.0 / n
+    per_cell: dict[int, tuple[list[str], list[int]]] = {}
+    nongrid: list[int] = []
+    for pi, (fid, rings) in enumerate(zip(index.ids, index.rings)):
+        xmin, ymin, xmax, ymax = index.boxes[pi]
+        ix0 = max(0, int((xmin + 180.0) // cell_w))
+        ix1 = min(n - 1, int((xmax + 180.0) // cell_w))
+        iy0 = max(0, int((90.0 - ymax) // cell_h))
+        iy1 = min(n - 1, int((90.0 - ymin) // cell_h))
+        if (ix1 - ix0 + 1) * (iy1 - iy0 + 1) > 250_000:
+            nongrid.append(pi)
+            continue
+        seg_x1 = np.concatenate([r[0][:-1] for r in rings])
+        seg_y1 = np.concatenate([r[1][:-1] for r in rings])
+        seg_x2 = np.concatenate([r[0][1:] for r in rings])
+        seg_y2 = np.concatenate([r[1][1:] for r in rings])
+        for ix in range(ix0, ix1 + 1):
+            for iy in range(iy0, iy1 + 1):
+                cell = (zoom << 58) | (ix << 29) | iy
+                bxmin = ix * cell_w - 180.0
+                bxmax = bxmin + cell_w
+                bymax = 90.0 - iy * cell_h
+                bymin = bymax - cell_h
+                if segments_intersect_bbox(seg_x1, seg_y1, seg_x2, seg_y2,
+                                           bxmin, bymin, bxmax, bymax):
+                    per_cell.setdefault(cell, ([], []))[1].append(pi)
+                    continue
+                cx = np.asarray([(bxmin + bxmax) / 2.0])
+                cy = np.asarray([(bymin + bymax) / 2.0])
+                if points_in_polygon(cx, cy, rings)[0]:
+                    per_cell.setdefault(cell, ([], []))[0].append(fid)
+    grid = {c: (tuple(sorted(set(cov))), tuple(cand)) for c, (cov, cand) in per_cell.items()}
+    return grid, nongrid
+
+
+def _assert_grid_equals_spec(idx: PolygonIndex, zoom: int) -> None:
+    grid, nongrid = build_grid_spec(idx, zoom)
+    assert list(idx.grid.items()) == list(grid.items())
+    assert idx._nongrid_parts == nongrid
+
+
+def _random_parts(rng: np.random.Generator, zoom: int):
+    """Random parts at `zoom`: polygons with holes, parts whose vertices and
+    edges lie exactly on cell boundaries, parts narrower than one cell,
+    degenerate rings (one point, zero area, repeated vertices), parts
+    crossing the antimeridian box, and a part too large for the grid."""
+    cw, ch = 360.0 / (1 << zoom), 180.0 / (1 << zoom)
+
+    def ring(pts):
+        return np.asarray(list(pts) + [pts[0]], np.float64)
+
+    def box(x0, y0, w, h):
+        return ring([(x0, y0), (x0 + w, y0), (x0 + w, y0 + h), (x0, y0 + h)])
+
+    parts = []
+    for k in range(24):
+        fid = "P%d" % (k % 7)  # ids repeat across parts
+        x0, y0 = rng.uniform(-40.0, 40.0), rng.uniform(-40.0, 40.0)
+        kind = k % 6
+        if kind == 0:  # polygon with a hole
+            w, h = rng.uniform(3 * cw, 9 * cw, 2)
+            parts.append((fid, [box(x0, y0, w, h), box(x0 + w / 3, y0 + h / 3, w / 3, h / 3)[::-1]]))
+        elif kind == 1:  # vertices and edges on cell boundaries
+            n = 1 << zoom
+            gx = int(rng.integers(n // 4, 3 * n // 4)) * cw - 180.0
+            gy = 90.0 - int(rng.integers(n // 4, 3 * n // 4)) * ch
+            nx, ny = (int(v) for v in rng.integers(1, 6, 2))
+            parts.append((fid, [box(gx, gy, nx * cw, ny * ch)]))
+        elif kind == 2:  # random star-shaped ring
+            t = np.sort(rng.uniform(0.0, 2 * np.pi, int(rng.integers(3, 12))))
+            r = rng.uniform(0.2, 8.0, t.size)
+            parts.append((fid, [ring(list(zip(x0 + r * np.cos(t), y0 + r * np.sin(t))))]))
+        elif kind == 3:  # narrower than one cell
+            parts.append((fid, [box(x0, y0, cw / 7, ch / 5)]))
+        elif kind == 4:  # degenerate: one point, zero area, repeated vertex
+            parts.append((fid, [np.asarray([(x0, y0)], np.float64)]))
+            parts.append((fid, [ring([(x0, y0), (x0 + 2.0, y0 + 2.0), (x0 + 2.0, y0 + 2.0)])]))
+        else:  # crossing the map edge
+            parts.append((fid, [box(175.0, 80.0, 10.0, 15.0)]))
+    if zoom >= 9:  # more than 250k cells: left out of the grid
+        parts.append(("BIG", [box(-179.0, -89.0, 358.0, 178.0)]))
+    else:
+        parts.append(("BIG", [box(-60.0, -30.0, 100.0, 70.0)[::-1]]))
+    return parts
+
+
+@pytest.mark.parametrize("zoom", [6, 7, 8, 9, 10])
+def test_grid_build_equals_spec_fixture(zoom):
+    _assert_grid_equals_spec(PolygonIndex(fixture_features(), grid_zoom=zoom), zoom)
+
+
+@pytest.mark.parametrize("zoom,budget", [(6, 61), (7, None), (8, None), (9, None), (10, 61)])
+def test_grid_build_equals_spec_random(zoom, budget, monkeypatch):
+    """Also with a tiny chunk budget, so the segment and center chunks split."""
+    if budget:
+        monkeypatch.setattr(pip_index, "_GRID_BUDGET", budget)
+    idx = PolygonIndex(_random_parts(np.random.default_rng(zoom), zoom), grid_zoom=zoom)
+    _assert_grid_equals_spec(idx, zoom)
+    assert idx._nongrid_parts == ([len(idx.ids) - 1] if zoom >= 9 else [])
+    assert any(cov for cov, _ in idx.grid.values())
+    assert sum(len(cand) > 1 for _, cand in idx.grid.values()) > 0
 
 
 @pytest.fixture(scope="module")
