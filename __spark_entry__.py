@@ -519,12 +519,9 @@ def _q_doc_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_embedding_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-5 neighbors for query vectors (vec_id%100==0),
-    computed with built-in higher-order array functions (JVM-side), ranked on
+    dots and norms as sequential folds in one Arrow kernel, ranked on
     round(cos,4) with vec_id tiebreak so cross-engine float order agrees."""
-    from pyspark.sql.window import Window
-
-    from ohsome_planet_spark.operators.similarity import (
-        brute_force_topk_arrow)
+    from ohsome_planet_spark.operators.similarity import brute_force_topk
 
     emb = _t(spark, sf_dir, "embeddings")
     q = emb.where(F.col("vec_id") % 100 == 0).select(
@@ -535,11 +532,7 @@ def _q_embedding_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ohsome_planet_spark.session import kernel_partitions
     q = q.repartition(kernel_partitions(spark))
     c = emb.select(F.col("vec_id").alias("cand_id"), "embedding")
-    # r7: the cumsum Arrow kernel — bit-identical scores (same doubles,
-    # same fold order; rounding/ranking stay JVM), ~256M interpreted
-    # lambda evals removed; falls back to the staged-norm HOF path for
-    # oversized candidate batches
-    return brute_force_topk_arrow(q, c, k=5)
+    return brute_force_topk(q, c, k=5)
 
 
 def _q_cell_assign_hex(spark: SparkSession, sf_dir: str) -> DataFrame:

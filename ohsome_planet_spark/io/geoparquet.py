@@ -5,9 +5,8 @@ sink writes files from inside the tasks with pyarrow (one file per partition,
 Arrow batches — no driver collect). This mirrors the reference's writer
 configuration (`/root/reference/ohsome-contributions/src/main/java/org/
 heigit/ohsome/contributions/transformer/Transformer.java:110-149`): GeoParquet
-`geo` metadata declaring the WKB geometry column, ZSTD compression, and the
-same per-column tuning intents (bloom-filter columns, dictionary disabled for
-id-like columns).
+`geo` metadata declaring the WKB geometry column, ZSTD compression, 128Ki-row
+row groups, and dictionary encoding disabled for id-like columns.
 
 Idempotency: files are named from the Spark TaskContext partitionId and
 written via tmp-file + atomic os.replace, so a retried or speculative task
@@ -29,16 +28,18 @@ from pathlib import Path
 from pyspark.sql import DataFrame
 
 GEOPARQUET_VERSION = "1.1.0"
+COMPRESSION = "zstd"
+ROW_GROUP_ROWS = 128 * 1024
 
 
-def geo_metadata(geometry_col: str = "geometry", geometry_types: list[str] | None = None) -> dict:
+def geo_metadata(geometry_col: str = "geometry") -> dict:
     return {
         "version": GEOPARQUET_VERSION,
         "primary_column": geometry_col,
         "columns": {
             geometry_col: {
                 "encoding": "WKB",
-                "geometry_types": geometry_types or [],
+                "geometry_types": [],
                 "crs": None,  # OGC:CRS84 default per GeoParquet spec
             }
         },
@@ -49,11 +50,7 @@ def write_geoparquet(
     df: DataFrame,
     path: str | Path,
     geometry_col: str = "geometry",
-    geometry_types: list[str] | None = None,
-    bloom_columns: tuple[str, ...] = (),
     no_dict_columns: tuple[str, ...] = (),
-    compression: str = "zstd",
-    row_group_rows: int = 128 * 1024,
     partition_by: str | None = None,
 ) -> list[str]:
     """Write df as GeoParquet; returns the written file names (relative).
@@ -73,9 +70,8 @@ def write_geoparquet(
         stale += list(out_dir.glob(f"{partition_by}=*/part-*.parquet"))
     for old in stale:
         old.unlink()
-    meta_json = json.dumps(geo_metadata(geometry_col, geometry_types))
+    meta_json = json.dumps(geo_metadata(geometry_col))
     out_str = str(out_dir)
-    blooms = list(bloom_columns)
     no_dict = list(no_dict_columns)
     part_col = partition_by
 
@@ -87,17 +83,15 @@ def write_geoparquet(
         use_dict: bool | list[str] = [
             c for c in table.column_names if c not in no_dict
         ] if no_dict else True
-        kwargs = dict(
-            compression=compression,
-            row_group_size=row_group_rows,
+        tmp = fname + ".tmp"
+        pq.write_table(
+            table,
+            tmp,
+            compression=COMPRESSION,
+            row_group_size=ROW_GROUP_ROWS,
             use_dictionary=use_dict,
             data_page_version="2.0",
         )
-        tmp = fname + ".tmp"
-        try:  # bloom filters need pyarrow ≥ 17; degrade gracefully
-            pq.write_table(table, tmp, bloom_filter_columns=blooms or None, **kwargs)
-        except TypeError:
-            pq.write_table(table, tmp, **kwargs)
         os.replace(tmp, fname)  # atomic: retries overwrite, never duplicate
 
     def write_partition(batches):

@@ -1,11 +1,12 @@
-"""Similarity search over embedding columns: brute-force and LSH-bucketed ANN.
+"""Similarity search over embedding columns: brute-force and LSH/IVF ANN.
 
-Brute-force cosine top-k is the exactness baseline (cross join — fine for
-query batches, never for all-pairs at scale). The scale path is
-random-hyperplane LSH with multi-probe: vectors shuffle into sign-pattern
-buckets; each query probes its own bucket plus all 1-bit-flip neighbors, so
-the candidate set stays tiny while recall stays high. All vector math is
-JVM-side higher-order array expressions (zip_with/aggregate) — no Python.
+Brute-force cosine top-k is the exactness baseline (the candidates are
+broadcast to one Arrow kernel — fine for query batches, never for all-pairs
+at scale). The scale path is random-hyperplane LSH with multi-probe: vectors
+shuffle into sign-pattern buckets; each query probes its own bucket plus all
+1-bit-flip neighbors, so the candidate set stays tiny while recall stays
+high. The ANN pair math is JVM-side higher-order array expressions
+(zip_with/aggregate).
 """
 
 from __future__ import annotations
@@ -21,23 +22,52 @@ def _to_double(col) -> Column:
     return F.transform(col, lambda x: x.cast("double"))
 
 
-def cosine_col(a, b) -> Column:
-    dot = F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v)
-    na = F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v))
-    nb = F.sqrt(F.aggregate(b, F.lit(0.0), lambda acc, v: acc + v * v))
-    return dot / (na * nb)
-
-
 def norm_col(a) -> Column:
-    """Sequential-fold L2 norm — the same left-fold order as cosine_col's
-    inline norms, so staging it per VECTOR (instead of per pair) keeps
-    scores bit-identical."""
+    """Sequential-fold L2 norm, staged once per VECTOR so that each pair
+    only pays for its dot fold."""
     return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v))
 
 
 def _dot_over_norms(a, b, na, nb) -> Column:
     dot = F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v)
     return dot / (na * nb)
+
+
+def _fold(m: np.ndarray) -> np.ndarray:
+    """Row sums in the order ``aggregate(x, 0.0, (acc, v) -> acc + v)``
+    adds them: np.cumsum accumulates strictly left to right (np.sum's
+    pairwise summation would not), and the leading ``0.0 +`` gives an
+    all-negative-zero row the fold's +0.0."""
+    if m.shape[-1] == 0:
+        return np.zeros(m.shape[:-1])
+    return 0.0 + np.cumsum(m, axis=-1)[..., -1]
+
+
+def _candidate_groups(ids, vecs):
+    """The candidates sorted by vector length, one float64 matrix per length.
+
+    Returns the sorted ids, their norms and ``(start, stop, matrix, ok)``
+    per length, where ``ok`` is False for a vector with a null element.
+    Such a vector, and a null vector (in no group), has a NULL norm."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    lens = np.asarray(pc.list_value_length(vecs).fill_null(-1))
+    order = np.argsort(lens, kind="stable")
+    vecs, lens = vecs.cast(pa.list_(pa.float64())).take(order), lens[order]
+    cn, ok, groups = np.zeros(len(lens)), np.zeros(len(lens), dtype=bool), []
+    dims, starts = np.unique(lens, return_index=True)
+    for n_dim, start, stop in zip(dims, starts, [*starts[1:], len(lens)]):
+        if n_dim < 0:
+            continue
+        flat = vecs.slice(start, stop - start).flatten()
+        shape = (stop - start, int(n_dim))
+        ok[start:stop] = ~np.asarray(flat.is_null()).reshape(shape).any(axis=1)
+        mat = np.asarray(flat.fill_null(0.0)).reshape(shape)
+        with np.errstate(all="ignore"):
+            cn[start:stop] = np.sqrt(_fold(mat * mat))
+        groups.append((start, stop, mat, ok[start:stop]))
+    return ids.take(order), pa.array(cn, mask=~ok), groups
 
 
 def brute_force_topk(
@@ -50,108 +80,66 @@ def brute_force_topk(
 ) -> DataFrame:
     """Exact cosine top-k (rank on round(cos,4), id tiebreak).
 
-    Norms are staged per VECTOR before the join — the inline formulation
-    re-ran both interpreted norm folds for every PAIR (3× the HOF work of
-    the dot product alone). Same float ops in the same order → scores
-    unchanged."""
-    q = queries.select(
-        F.col(query_id), _to_double(F.col(vec_col)).alias("qv")
-    ).select(query_id, "qv", norm_col(F.col("qv")).alias("qn"))
-    c = candidates.select(
-        F.col(cand_id), _to_double(F.col(vec_col)).alias("cv")
-    ).select(cand_id, "cv", norm_col(F.col("cv")).alias("cn"))
-    # explicit broadcast (r7): with a tiny query batch the planner
-    # builds the QUERY side and streams the candidates at the scan's
-    # (often 1-task) partitioning — the per-pair HOF dots then run
-    # serially (measured 3.8 -> 25 s). Broadcasting the candidate side
-    # keeps the pair stream on the queries' partitioning, the r5 shape.
-    pairs = q.crossJoin(F.broadcast(c)).where(
-        F.col(query_id) != F.col(cand_id))
-    scored = pairs.select(
-        query_id, cand_id,
-        F.round(_dot_over_norms(F.col("qv"), F.col("cv"),
-                                F.col("qn"), F.col("cn")), 4).alias("cos_sim"),
-    )
-    w = Window.partitionBy(query_id).orderBy(F.desc("cos_sim"), F.asc(cand_id))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(query_id, cand_id, "cos_sim", "rank")
-    )
+    The candidates are read once with ``toArrow()`` and broadcast as
+    float64 matrices, one per vector length. One Arrow kernel computes,
+    per query, the dot against every candidate and both norms with the
+    same sequential fold as ``aggregate(zip_with(q, c, (x, y) -> x * y),
+    0.0, (acc, v) -> acc + v)`` (see ``_fold``), so the scores are that
+    expression's bit for bit. Division, round(…, 4) and ranking stay in
+    the JVM.
 
-
-BRUTE_ARROW_CAND_MAX = 200_000  # candidate rows; above → JVM HOF path
-
-
-def brute_force_topk_arrow(
-    queries: DataFrame,
-    candidates: DataFrame,
-    k: int = 5,
-    query_id: str = "query_id",
-    cand_id: str = "cand_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Exact cosine top-k, bit-identical to ``brute_force_topk``, with
-    the per-pair dot/norm folds in ONE Arrow kernel (r7, guide §4.2).
-
-    The JVM HOF path evaluates an interpreted lambda per (pair, dim) —
-    256M lambda invocations for a 200×20k×64 batch (~2.8 s). Here the
-    candidate matrix is collected once (bounded by
-    BRUTE_ARROW_CAND_MAX; larger batches fall back to the HOF path) and
-    broadcast; the kernel computes, per query, dots against ALL
-    candidates vectorized — with ``np.cumsum`` along the dim axis, whose
-    strictly SEQUENTIAL accumulation reproduces the HOF left fold bit
-    for bit (np.sum's pairwise summation would not). Norms use the same
-    cumsum trick; division + round(…,4) + ranking stay in the JVM,
-    unchanged, so every float op happens in the same order on the same
-    doubles as the HOF plan (equality-pinned by pytest + the oracle)."""
-    import pandas as pd
+    NULLs follow the folds: a null vector or a null element makes its
+    norm and every dot it takes part in NULL, a pair whose lengths differ
+    has a NULL dot, and a NULL cos_sim ranks after every score. ids keep
+    their input types."""
     import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+    from pyspark.sql.types import DoubleType, StructField, StructType
 
-    rows = candidates.select(cand_id, vec_col).limit(
-        BRUTE_ARROW_CAND_MAX + 1).collect()
-    if len(rows) > BRUTE_ARROW_CAND_MAX:
-        return brute_force_topk(queries, candidates, k,
-                                query_id, cand_id, vec_col)
-    c_ids = np.array([r[cand_id] for r in rows], dtype=np.int64)
-    c_mat = np.array([list(r[vec_col]) for r in rows], dtype=np.float64)
-    with np.errstate(all="ignore"):
-        c_norm = np.sqrt(np.cumsum(c_mat * c_mat, axis=1)[:, -1]) \
-            if c_mat.size else np.zeros(0)
-    spark = queries.sparkSession
-    bc = spark.sparkContext.broadcast((c_ids, c_mat, c_norm))
-
-    out_schema = (
-        f"{query_id} long, {cand_id} long, _dot double, _qn double, "
-        f"_cn double"
+    q_field, c_field = queries.schema[query_id], candidates.schema[cand_id]
+    table = candidates.select(cand_id, vec_col).toArrow()
+    c_ids, c_cn, groups = _candidate_groups(
+        table.column(0).combine_chunks().cast(to_arrow_type(c_field.dataType)),
+        table.column(1).combine_chunks(),
+    )
+    bc = queries.sparkSession.sparkContext.broadcast((c_ids, c_cn, groups))
+    names = [query_id, cand_id, "_dot", "_qn", "_cn"]
+    out_schema = StructType(
+        [q_field, c_field]
+        + [StructField(c, DoubleType()) for c in names[2:]]
     )
 
     def kernel(batches):
-        ids, mat, cn = bc.value
+        ids, cn, groups = bc.value
         n = len(ids)
         for batch in batches:
-            qids = batch.column(0).to_numpy(zero_copy_only=False)
-            qvecs = batch.column(1).to_pylist()
-            for qid, qv in zip(qids, qvecs):
-                q = np.asarray(qv, dtype=np.float64)
-                with np.errstate(all="ignore"):
-                    dots = (np.cumsum(mat * q[None, :], axis=1)[:, -1]
-                            if n and q.size else np.zeros(n))
-                    qn = float(np.sqrt(np.cumsum(q * q)[-1])) \
-                        if q.size else 0.0
-                yield pa.RecordBatch.from_pandas(
-                    pd.DataFrame({
-                        query_id: np.full(n, qid, dtype=np.int64),
-                        cand_id: ids,
-                        "_dot": dots,
-                        "_qn": np.full(n, qn),
-                        "_cn": cn,
-                    }),
-                    preserve_index=False,
+            qids = batch.column(0)
+            qvecs = batch.column(1).cast(pa.list_(pa.float64()))
+            for i, qv in enumerate(qvecs):
+                q = qv.values
+                dot, null, qn = np.zeros(n), np.ones(n, dtype=bool), None
+                if q is not None and not q.null_count:
+                    q = q.to_numpy()
+                    with np.errstate(all="ignore"):
+                        qn = float(np.sqrt(_fold(q * q)))
+                        for start, stop, mat, ok in groups:
+                            if mat.shape[1] == len(q):
+                                dot[start:stop] = _fold(mat * q[None, :])
+                                null[start:stop] = ~ok
+                yield pa.RecordBatch.from_arrays(
+                    [
+                        pa.repeat(qids[i], n),
+                        ids,
+                        pa.array(dot, mask=null),
+                        pa.repeat(pa.scalar(qn, pa.float64()), n),
+                        cn,
+                    ],
+                    names=names,
                 )
 
-    q = queries.select(F.col(query_id), F.col(vec_col))
-    scored = q.mapInArrow(kernel, out_schema).where(
+    scored = queries.select(query_id, vec_col).mapInArrow(
+        kernel, out_schema
+    ).where(
         F.col(query_id) != F.col(cand_id)
     ).select(
         query_id, cand_id,

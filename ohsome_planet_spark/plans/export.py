@@ -26,6 +26,8 @@ from pyspark.sql import functions as F
 
 from ..io.geoparquet import partition_row_counts, write_geoparquet
 
+STATUSES = ("latest", "history", "deleted", "invalid")
+
 
 def avsc_view(contribs: DataFrame, build_time_ms: int = 0) -> DataFrame:
     """Reshape the engine's flat contribution columns into the reference's
@@ -138,7 +140,6 @@ def write_contribution_export(
     contribs: DataFrame,
     path: str | Path,
     geometry_col: str = "geometry",
-    statuses: tuple[str, ...] = ("latest", "history", "deleted", "invalid"),
 ) -> dict[str, int]:
     """Write status-partitioned GeoParquet; returns per-status row counts.
 
@@ -159,7 +160,7 @@ def write_contribution_export(
         no_dict_columns=(geometry_col, "osm_id"),
         partition_by="status",
     )
-    counts = {s: 0 for s in statuses}
+    counts = {s: 0 for s in STATUSES}
     counts.update(partition_row_counts(out, "status"))
     (out / "_counts.json").write_text(json.dumps(counts, indent=1, sort_keys=True))
     return counts

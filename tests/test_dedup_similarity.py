@@ -331,17 +331,52 @@ def test_ann_pairs_unique(spark):
     assert total == distinct > 0
 
 
-def test_brute_force_arrow_matches_hof(spark):
-    # r7: the cumsum Arrow kernel must be row- and bit-identical
-    # (cos_sim included) to the staged-norm HOF path it accelerates.
-    import numpy as np
-    from pyspark.sql import functions as F
+def _hof_topk(queries, candidates, k=5, query_id="query_id",
+              cand_id="cand_id", vec_col="embedding"):
+    """Spec twin of ``brute_force_topk``: the same exact top-k as
+    interpreted higher-order array functions, norms staged per vector
+    and the candidate side broadcast."""
+    from pyspark.sql.window import Window
 
-    from ohsome_planet_spark.operators.similarity import (
-        brute_force_topk,
-        brute_force_topk_arrow,
+    q = queries.select(
+        F.col(query_id), S._to_double(F.col(vec_col)).alias("qv")
+    ).select(query_id, "qv", S.norm_col(F.col("qv")).alias("qn"))
+    c = candidates.select(
+        F.col(cand_id), S._to_double(F.col(vec_col)).alias("cv")
+    ).select(cand_id, "cv", S.norm_col(F.col("cv")).alias("cn"))
+    pairs = q.crossJoin(F.broadcast(c)).where(
+        F.col(query_id) != F.col(cand_id))
+    scored = pairs.select(
+        query_id, cand_id,
+        F.round(S._dot_over_norms(F.col("qv"), F.col("cv"),
+                                  F.col("qn"), F.col("cn")), 4).alias("cos_sim"),
+    )
+    w = Window.partitionBy(query_id).orderBy(F.desc("cos_sim"), F.asc(cand_id))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select(query_id, cand_id, "cos_sim", "rank")
     )
 
+
+def _assert_topk_matches_spec(queries, candidates, k):
+    got, spec = (f(queries, candidates, k=k)
+                 for f in (S.brute_force_topk, _hof_topk))
+    assert got.schema == spec.schema
+
+    def rows(df):  # NaN != NaN, so compare NaN scores by name
+        return sorted(
+            (tuple("NaN" if v != v else v for v in r) for r in df.collect()),
+            key=lambda r: (r[0], r[3]))
+
+    out = rows(got)
+    assert out == rows(spec)
+    return out
+
+
+def test_brute_force_arrow_matches_hof(spark):
+    # the cumsum Arrow kernel must be row- and bit-identical (cos_sim
+    # included) to the staged-norm HOF spec
     rng = np.random.default_rng(5)
     rows = [(i, [float(x) for x in rng.normal(size=16)])
             for i in range(300)]
@@ -349,6 +384,55 @@ def test_brute_force_arrow_matches_hof(spark):
     q = emb.where(F.col("vec_id") % 25 == 0).select(
         F.col("vec_id").alias("query_id"), "embedding")
     c = emb.select(F.col("vec_id").alias("cand_id"), "embedding")
-    hof = sorted(map(tuple, brute_force_topk(q, c, k=4).collect()))
-    arrow = sorted(map(tuple, brute_force_topk_arrow(q, c, k=4).collect()))
-    assert arrow == hof
+    assert len(_assert_topk_matches_spec(q, c, k=4)) == 12 * 4
+
+
+_V = [[1.0, 2.0], [2.0, 1.0], [1.0, 0.0], [-1.0, 0.5]]
+_TOPK_EDGES = {
+    # case: (id type, query vectors, candidate vectors); ids are positions
+    "string_ids": ("string", _V, _V),
+    "int_ids": ("int", _V, _V),
+    "null_query_vector": ("long", [None] + _V[1:], _V),
+    "null_candidate_vector": ("long", _V, _V[:2] + [None] + _V[3:]),
+    "null_element": ("long", _V, [[1.0, None]] + _V[1:]),
+    "nan_element": ("long", _V, [[1.0, float("nan")]] + _V[1:]),
+    "mixed_length": ("long", _V, _V[:3] + [[1.0, 2.0, 3.0]]),
+    # an empty vector only meets longer ones here: empty x empty is 0/0,
+    # which both paths raise as DIVIDE_BY_ZERO under ANSI division
+    "empty_vector": ("long", [[]] + _V[1:], [[]] + _V[1:]),
+    "empty_candidates": ("long", _V, []),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_TOPK_EDGES))
+def test_brute_force_topk_edges_match_hof(spark, case):
+    id_type, q_vecs, c_vecs = _TOPK_EDGES[case]
+
+    def frame(vecs, name):
+        ids = [str(i) if id_type == "string" else i for i in range(len(vecs))]
+        return spark.createDataFrame(
+            list(zip(ids, vecs)), f"{name} {id_type}, embedding array<double>")
+
+    queries, candidates = frame(q_vecs, "query_id"), frame(c_vecs, "cand_id")
+    rows = _assert_topk_matches_spec(queries, candidates, k=3)
+    if case == "empty_candidates":
+        assert rows == []
+    else:
+        assert rows
+    if case.startswith("null") or case in ("mixed_length", "empty_vector"):
+        assert any(r[2] is None for r in rows)
+    if case == "nan_element":
+        assert any(r[2] == "NaN" for r in rows)
+
+
+def test_brute_force_topk_plan_is_one_arrow_kernel(spark):
+    rows = [(i, [float(i), 1.0]) for i in range(20)]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    out = S.brute_force_topk(
+        emb.select(F.col("vec_id").alias("query_id"), "embedding"),
+        emb.select(F.col("vec_id").alias("cand_id"), "embedding"), k=2)
+    assert len(out.collect()) == 40
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    plan = plan.split("== Initial Plan ==")[0]  # the final plan only
+    assert plan.count("MapInArrow") == 1, plan
+    assert "BroadcastNestedLoopJoin" not in plan, plan

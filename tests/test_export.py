@@ -49,3 +49,30 @@ def test_status_partitioned_export(spark, tmp_path):
     assert meta["primary_column"] == "geometry"
     back = spark.read.parquet(str(out / "status=history"))
     assert back.count() == 2
+
+
+def test_export_file_properties(spark, tmp_path):
+    # one task writes 128Ki + 5 rows: ZSTD everywhere, no dictionary on
+    # the geometry and id columns, the `geo` footer, 128Ki-row groups
+    import pyarrow.parquet as pq
+
+    rows = 128 * 1024 + 5
+    contribs = spark.range(rows, numPartitions=1).selectExpr(
+        "id AS osm_id",
+        "'latest' AS status",
+        "CAST(CAST(id AS string) AS binary) AS geometry",
+        "CAST(id % 3 AS string) AS user",
+    )
+    out = tmp_path / "contributions"
+    assert write_contribution_export(contribs, out)["latest"] == rows
+    (f,) = (out / "status=latest").glob("part-*.parquet")
+    meta = pq.ParquetFile(f).metadata
+    assert [meta.row_group(i).num_rows for i in range(meta.num_row_groups)] \
+        == [128 * 1024, 5]
+    cols = {meta.row_group(0).column(i).path_in_schema: meta.row_group(0).column(i)
+            for i in range(meta.num_columns)}
+    assert {c.compression for c in cols.values()} == {"ZSTD"}
+    assert not cols["geometry"].has_dictionary_page
+    assert not cols["osm_id"].has_dictionary_page
+    assert cols["user"].has_dictionary_page
+    assert read_geo_metadata(f)["columns"]["geometry"]["encoding"] == "WKB"

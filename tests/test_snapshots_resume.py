@@ -123,7 +123,6 @@ def test_geoparquet_footer_metadata(spark, tmp_path):
     files = write_geoparquet(
         enriched.select("url", "entity", "lon", "lat", "geometry"),
         out,
-        bloom_columns=("url",),
         no_dict_columns=("geometry",),
     )
     assert files
