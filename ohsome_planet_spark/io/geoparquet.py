@@ -1,35 +1,57 @@
 """GeoParquet sink: distributed parquet writes with `geo` footer metadata.
 
 Spark's parquet writer cannot attach custom key/value footer metadata, so the
-sink writes files from inside the tasks with pyarrow (one file per partition,
-Arrow batches — no driver collect). This mirrors the reference's writer
+sink writes files from inside the tasks with pyarrow (Arrow batches — no
+driver collect of the data). This mirrors the reference's writer
 configuration (`/root/reference/ohsome-contributions/src/main/java/org/
 heigit/ohsome/contributions/transformer/Transformer.java:110-149`): GeoParquet
 `geo` metadata declaring the WKB geometry column, ZSTD compression, 128Ki-row
 row groups, and dictionary encoding disabled for id-like columns.
 
+One writer task per core: the input is coalesced (narrow, no shuffle) to
+`session.kernel_partitions`, so each task writes one file per partition
+value, whatever the upstream partition count. Every Python node-task pays
+pyspark's worker set-up, so fewer, larger writer tasks cost less and write
+fewer, better-compressed files. Each task streams: per partition value it
+keeps one open `ParquetWriter` and buffers fewer than `ROW_GROUP_ROWS` rows
+before writing a row group, so a task's memory is bounded by its number of
+partition values, not by its input.
+
 Idempotency: files are named from the Spark TaskContext partitionId and
-written via tmp-file + atomic os.replace, so a retried or speculative task
-overwrites its own output instead of duplicating it; the driver clears any
-prior part files first (overwrite semantics), so re-running to the same path
-never appends.
+written to a per-attempt tmp file that is atomically `os.replace`d on close,
+so a retried or speculative task overwrites its own output instead of
+duplicating it; the driver clears any prior part files first (overwrite
+semantics), so re-running to the same path never appends.
 
 `partition_by` routes rows into hive-style `<col>=<value>/` subdirectories
 from inside the same single pass (the reference's status-routing writers,
 `Transformer.java:186-209`) — no per-partition re-scan of the input.
+
+Counts come from the write job: each task yields one row per file it wrote
+(relative path, partition value, row count), and the driver collects those
+rows, so it never re-lists the output or opens a footer.
 """
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 from pathlib import Path
+from typing import NamedTuple
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame
+
+from ..session import kernel_partitions
 
 GEOPARQUET_VERSION = "1.1.0"
 COMPRESSION = "zstd"
 ROW_GROUP_ROWS = 128 * 1024
+# Spark's name for the directory of a NULL partition value
+NULL_PARTITION = "__HIVE_DEFAULT_PARTITION__"
 
 
 def geo_metadata(geometry_col: str = "geometry") -> dict:
@@ -46,16 +68,73 @@ def geo_metadata(geometry_col: str = "geometry") -> dict:
     }
 
 
+class WrittenFile(NamedTuple):
+    """One file a writer task wrote: its path relative to the sink root, its
+    partition directory value (None without `partition_by`) and its rows."""
+
+    path: str
+    value: str | None
+    rows: int
+
+
+_WRITTEN = pa.schema(
+    [("path", pa.string()), ("value", pa.string()), ("rows", pa.int64())])
+
+
+class _PartFile:
+    """One open part file: row groups of exactly ROW_GROUP_ROWS rows (the
+    last one shorter), written to a tmp file renamed into place on close."""
+
+    def __init__(self, root: str, rel: str, schema: pa.Schema,
+                 no_dict: list[str], attempt: int):
+        self.rel, self.path = rel, os.path.join(root, rel)
+        self.tmp = f"{self.path}.{attempt}.tmp"
+        os.makedirs(os.path.dirname(self.path), exist_ok=True)
+        use_dict: bool | list[str] = [
+            c for c in schema.names if c not in no_dict] if no_dict else True
+        self.writer = pq.ParquetWriter(
+            self.tmp, schema, compression=COMPRESSION,
+            use_dictionary=use_dict, data_page_version="2.0")
+        self.buffer: list[pa.RecordBatch] = []
+        self.buffered = self.rows = 0
+
+    def append(self, batch: pa.RecordBatch) -> None:
+        self.buffer.append(batch)
+        self.buffered += batch.num_rows
+        self.rows += batch.num_rows
+        if self.buffered >= ROW_GROUP_ROWS:
+            table = pa.Table.from_batches(self.buffer)
+            while table.num_rows >= ROW_GROUP_ROWS:
+                self._write(table.slice(0, ROW_GROUP_ROWS))
+                table = table.slice(ROW_GROUP_ROWS)
+            self.buffer, self.buffered = table.to_batches(), table.num_rows
+
+    def _write(self, table: pa.Table) -> None:
+        self.writer.write_table(table, row_group_size=ROW_GROUP_ROWS)
+
+    def close(self) -> None:
+        if self.buffered:
+            self._write(pa.Table.from_batches(self.buffer))
+        self.writer.close()
+        os.replace(self.tmp, self.path)  # atomic: retries overwrite, never duplicate
+
+    def abort(self) -> None:
+        self.writer.close()
+        with contextlib.suppress(FileNotFoundError):  # gone if already closed
+            os.remove(self.tmp)
+
+
 def write_geoparquet(
     df: DataFrame,
     path: str | Path,
     geometry_col: str = "geometry",
     no_dict_columns: tuple[str, ...] = (),
     partition_by: str | None = None,
-) -> list[str]:
-    """Write df as GeoParquet; returns the written file names (relative).
+) -> list[WrittenFile]:
+    """Write df as GeoParquet; returns the written files, sorted by path.
 
-    Each task writes its own deterministically-named file via mapInArrow
+    The input is coalesced to one writer task per core; each task streams
+    its rows into its own deterministically-named file via mapInArrow
     (distributed, no shuffle, retry-safe); the 'geo' JSON lands in every
     footer. With `partition_by`, each task routes its rows into
     `<col>=<value>/part-<taskid>.parquet` — one input pass for all values.
@@ -70,76 +149,56 @@ def write_geoparquet(
         stale += list(out_dir.glob(f"{partition_by}=*/part-*.parquet"))
     for old in stale:
         old.unlink()
-    meta_json = json.dumps(geo_metadata(geometry_col))
+    geo = {b"geo": json.dumps(geo_metadata(geometry_col)).encode()}
     out_str = str(out_dir)
     no_dict = list(no_dict_columns)
     part_col = partition_by
 
-    def _write_table(table, fname):
-        import pyarrow.parquet as pq
-
-        schema_meta = {**(table.schema.metadata or {}), b"geo": meta_json.encode()}
-        table = table.replace_schema_metadata(schema_meta)
-        use_dict: bool | list[str] = [
-            c for c in table.column_names if c not in no_dict
-        ] if no_dict else True
-        tmp = fname + ".tmp"
-        pq.write_table(
-            table,
-            tmp,
-            compression=COMPRESSION,
-            row_group_size=ROW_GROUP_ROWS,
-            use_dictionary=use_dict,
-            data_page_version="2.0",
-        )
-        os.replace(tmp, fname)  # atomic: retries overwrite, never duplicate
-
     def write_partition(batches):
-        import pyarrow as pa
-        import pyarrow.compute as pc
         from pyspark import TaskContext
 
         ctx = TaskContext.get()
         pid = ctx.partitionId() if ctx is not None else 0
-        batches = list(batches)
-        if batches:
-            table = pa.Table.from_batches(batches)
-            if part_col is None:
-                _write_table(table, os.path.join(out_str, f"part-{pid:05d}.parquet"))
-            else:
-                for v in pc.unique(table.column(part_col)).to_pylist():
-                    sub = table.filter(pc.equal(table[part_col], v))
-                    d = os.path.join(out_str, f"{part_col}={v}")
-                    os.makedirs(d, exist_ok=True)
-                    _write_table(sub, os.path.join(d, f"part-{pid:05d}.parquet"))
-        if False:
-            yield  # generator with no output rows
+        attempt = ctx.taskAttemptId() if ctx is not None else 0
+        fname = f"part-{pid:05d}.parquet"
+        files: dict[str | None, _PartFile] = {}
 
-    df.mapInArrow(write_partition, "dummy int").count()
-    written = list(out_dir.glob("part-*.parquet"))
-    if partition_by:
-        written += list(out_dir.glob(f"{partition_by}=*/part-*.parquet"))
-    return sorted(str(p.relative_to(out_dir)) for p in written)
+        def route(value, rows):
+            f = files.get(value)
+            if f is None:
+                rel = fname if value is None else os.path.join(
+                    f"{part_col}={value}", fname)
+                schema = rows.schema.with_metadata({**(rows.schema.metadata or {}), **geo})
+                f = files[value] = _PartFile(out_str, rel, schema, no_dict, attempt)
+            f.append(rows)
+
+        try:
+            for batch in batches:
+                if not batch.num_rows:
+                    continue
+                if part_col is None:
+                    route(None, batch)
+                    continue
+                col = batch.column(part_col)
+                for v in pc.unique(col).to_pylist():
+                    mask = pc.is_null(col) if v is None else pc.equal(col, v)
+                    route(NULL_PARTITION if v is None else str(v), batch.filter(mask))
+            for f in files.values():
+                f.close()
+        except BaseException:
+            for f in files.values():
+                f.abort()
+            raise
+        yield pa.RecordBatch.from_pylist(
+            [{"path": f.rel, "value": v, "rows": f.rows} for v, f in files.items()],
+            schema=_WRITTEN)
+
+    written = df.coalesce(kernel_partitions(df.sparkSession)).mapInArrow(
+        write_partition, "path string, value string, rows long").collect()
+    return sorted(WrittenFile(*r) for r in written)
 
 
 def read_geo_metadata(file_path: str | Path) -> dict | None:
-    import pyarrow.parquet as pq
-
     meta = pq.read_schema(str(file_path)).metadata or {}
     raw = meta.get(b"geo")
     return json.loads(raw.decode()) if raw else None
-
-
-def partition_row_counts(root: str | Path, partition_by: str) -> dict[str, int]:
-    """Per-partition row counts from parquet footers only — no data read."""
-    import pyarrow.parquet as pq
-
-    counts: dict[str, int] = {}
-    for d in sorted(Path(root).glob(f"{partition_by}=*")):
-        if not d.is_dir():
-            continue
-        v = d.name.split("=", 1)[1]
-        counts[v] = sum(
-            pq.ParquetFile(f).metadata.num_rows for f in d.glob("part-*.parquet")
-        )
-    return counts

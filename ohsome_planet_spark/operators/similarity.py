@@ -30,7 +30,7 @@ def norm_col(a) -> Column:
 
 def _dot_over_norms(a, b, na, nb) -> Column:
     dot = F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v)
-    return dot / (na * nb)
+    return F.try_divide(dot, na * nb)  # a zero norm gives NULL, not DIVIDE_BY_ZERO
 
 
 def _fold(m: np.ndarray) -> np.ndarray:
@@ -90,8 +90,9 @@ def brute_force_topk(
 
     NULLs follow the folds: a null vector or a null element makes its
     norm and every dot it takes part in NULL, a pair whose lengths differ
-    has a NULL dot, and a NULL cos_sim ranks after every score. ids keep
-    their input types."""
+    has a NULL dot, a zero norm (a zero or empty vector) makes the score
+    NULL rather than raising, and a NULL cos_sim ranks after every score.
+    ids keep their input types."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_type
     from pyspark.sql.types import DoubleType, StructField, StructType
@@ -143,7 +144,7 @@ def brute_force_topk(
         F.col(query_id) != F.col(cand_id)
     ).select(
         query_id, cand_id,
-        F.round(F.col("_dot") / (F.col("_qn") * F.col("_cn")), 4)
+        F.round(F.try_divide(F.col("_dot"), F.col("_qn") * F.col("_cn")), 4)
         .alias("cos_sim"),
     )
     w = Window.partitionBy(query_id).orderBy(

@@ -10,10 +10,12 @@ FIXTURES.md §8).
 
 Single pass: the reference routes each row to a per-status writer during ONE
 traversal (`Transformer.java:186-209`); this sink does the same via
-`write_geoparquet(partition_by="status")` — tasks split their Arrow batches
-by status and write into `status=<v>/` directly. Counts come from the
-written parquet footers (metadata only), so the contributions DAG executes
-exactly once regardless of how many statuses exist.
+`write_geoparquet(partition_by="status")` — one writer task per core splits
+its Arrow batches by status and streams them into one file per status under
+`status=<v>/`, buffering at most one row group per status. Counts come from
+the write job itself (each task reports the rows of every file it wrote), so
+the contributions DAG executes exactly once regardless of how many statuses
+exist, and the driver never re-reads the output.
 """
 
 from __future__ import annotations
@@ -24,7 +26,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..io.geoparquet import partition_row_counts, write_geoparquet
+from ..io.geoparquet import write_geoparquet
 
 STATUSES = ("latest", "history", "deleted", "invalid")
 
@@ -153,7 +155,7 @@ def write_contribution_export(
     whole history partition — the right trade at 100 TB."""
     out = Path(path)
     out.mkdir(parents=True, exist_ok=True)
-    write_geoparquet(
+    files = write_geoparquet(
         contribs,
         out,
         geometry_col=geometry_col,
@@ -161,6 +163,7 @@ def write_contribution_export(
         partition_by="status",
     )
     counts = {s: 0 for s in STATUSES}
-    counts.update(partition_row_counts(out, "status"))
+    for f in files:
+        counts[f.value] = counts.get(f.value, 0) + f.rows
     (out / "_counts.json").write_text(json.dumps(counts, indent=1, sort_keys=True))
     return counts

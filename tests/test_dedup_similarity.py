@@ -331,6 +331,35 @@ def test_ann_pairs_unique(spark):
     assert total == distinct > 0
 
 
+def _zero_vector_frames(spark):
+    rows = [(0, [0.0, 0.0]), (1, [1.0, 2.0]), (2, [2.0, 1.0]), (3, [-1.0, 0.5])]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    return (emb.select(F.col("vec_id").alias("query_id"), "embedding"),
+            emb.select(F.col("vec_id").alias("cand_id"), "embedding"))
+
+
+def _assert_zero_vector_scores_null(rows):
+    # every pair with the zero vector (id 0) scores NULL; the rest do not
+    assert {(r["query_id"], r["cand_id"]) for r in rows} == {
+        (q, c) for q in range(4) for c in range(4) if q != c}
+    for r in rows:
+        assert (r["cos_sim"] is None) == (0 in (r["query_id"], r["cand_id"])), r
+
+
+def test_ann_topk_zero_vector_scores_null(spark):
+    q, c = _zero_vector_frames(spark)
+    # one plane with multiprobe probes both buckets: every pair is scored
+    _assert_zero_vector_scores_null(
+        S.ann_topk(q, c, k=10, planes=1, dim=2).collect())
+
+
+def test_ivf_topk_zero_vector_scores_null(spark):
+    q, c = _zero_vector_frames(spark)
+    _assert_zero_vector_scores_null(S.ivf_topk(
+        q, c, k=10, n_centroids=2, nprobe=2, quantizer="fixed",
+        fixed_centroids=np.eye(2)).collect())
+
+
 def _hof_topk(queries, candidates, k=5, query_id="query_id",
               cand_id="cand_id", vec_col="embedding"):
     """Spec twin of ``brute_force_topk``: the same exact top-k as
@@ -397,9 +426,10 @@ _TOPK_EDGES = {
     "null_element": ("long", _V, [[1.0, None]] + _V[1:]),
     "nan_element": ("long", _V, [[1.0, float("nan")]] + _V[1:]),
     "mixed_length": ("long", _V, _V[:3] + [[1.0, 2.0, 3.0]]),
-    # an empty vector only meets longer ones here: empty x empty is 0/0,
-    # which both paths raise as DIVIDE_BY_ZERO under ANSI division
     "empty_vector": ("long", [[]] + _V[1:], [[]] + _V[1:]),
+    # a zero norm makes the score 0/0 or x/0: NULL, not DIVIDE_BY_ZERO
+    "zero_vector": ("long", _V, [[0.0, 0.0]] + _V[1:]),
+    "empty_both": ("long", [[]] + _V[1:], [[], []] + _V[2:]),
     "empty_candidates": ("long", _V, []),
 }
 
@@ -419,7 +449,8 @@ def test_brute_force_topk_edges_match_hof(spark, case):
         assert rows == []
     else:
         assert rows
-    if case.startswith("null") or case in ("mixed_length", "empty_vector"):
+    if case.startswith("null") or case in (
+            "mixed_length", "empty_vector", "zero_vector", "empty_both"):
         assert any(r[2] is None for r in rows)
     if case == "nan_element":
         assert any(r[2] == "NaN" for r in rows)

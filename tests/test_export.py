@@ -52,23 +52,27 @@ def test_status_partitioned_export(spark, tmp_path):
 
 
 def test_export_file_properties(spark, tmp_path):
-    # one task writes 128Ki + 5 rows: ZSTD everywhere, no dictionary on
-    # the geometry and id columns, the `geo` footer, 128Ki-row groups
+    # one task writes 128Ki + 5 rows per status, the latest rows arriving
+    # in small batches interleaved with history rows: ZSTD everywhere, no
+    # dictionary on the geometry and id columns, the `geo` footer, and
+    # 128Ki-row groups however the rows of one status are batched
     import pyarrow.parquet as pq
 
     rows = 128 * 1024 + 5
-    contribs = spark.range(rows, numPartitions=1).selectExpr(
+    contribs = spark.range(2 * rows, numPartitions=1).selectExpr(
         "id AS osm_id",
-        "'latest' AS status",
+        "IF(id % 2 = 0, 'latest', 'history') AS status",
         "CAST(CAST(id AS string) AS binary) AS geometry",
         "CAST(id % 3 AS string) AS user",
     )
     out = tmp_path / "contributions"
-    assert write_contribution_export(contribs, out)["latest"] == rows
-    (f,) = (out / "status=latest").glob("part-*.parquet")
-    meta = pq.ParquetFile(f).metadata
-    assert [meta.row_group(i).num_rows for i in range(meta.num_row_groups)] \
-        == [128 * 1024, 5]
+    counts = write_contribution_export(contribs, out)
+    assert counts["latest"] == counts["history"] == rows
+    for status in ("latest", "history"):
+        (f,) = (out / f"status={status}").glob("part-*.parquet")
+        meta = pq.ParquetFile(f).metadata
+        assert [meta.row_group(i).num_rows for i in range(meta.num_row_groups)] \
+            == [128 * 1024, 5]
     cols = {meta.row_group(0).column(i).path_in_schema: meta.row_group(0).column(i)
             for i in range(meta.num_columns)}
     assert {c.compression for c in cols.values()} == {"ZSTD"}
@@ -76,3 +80,49 @@ def test_export_file_properties(spark, tmp_path):
     assert not cols["osm_id"].has_dictionary_page
     assert cols["user"].has_dictionary_page
     assert read_geo_metadata(f)["columns"]["geometry"]["encoding"] == "WKB"
+
+
+def test_export_one_file_per_status_per_writer_task(spark, tmp_path):
+    # an input split finer than one wave of cores is coalesced to one
+    # writer task per core, and _counts.json (counts reported by the write
+    # job) equals the row counts in the written footers
+    import pyarrow.parquet as pq
+
+    from ohsome_planet_spark.session import kernel_partitions
+
+    kp = kernel_partitions(spark)
+    contribs = spark.range(4000, numPartitions=3 * kp).selectExpr(
+        "id AS osm_id",
+        "element_at(array('latest', 'history', 'deleted', 'invalid'),"
+        " int(id % 7 % 4) + 1) AS status",
+        "CAST(CAST(id AS string) AS binary) AS geometry",
+    )
+    assert contribs.rdd.getNumPartitions() == 3 * kp
+    out = tmp_path / "contributions"
+    counts = write_contribution_export(contribs, out)
+    footers = {}
+    for status in ("latest", "history", "deleted", "invalid"):
+        files = list((out / f"status={status}").glob("part-*.parquet"))
+        assert 0 < len(files) <= kp, (status, len(files))
+        footers[status] = sum(pq.ParquetFile(f).metadata.num_rows for f in files)
+    assert json.loads((out / "_counts.json").read_text()) == footers == counts
+    assert sum(counts.values()) == 4000
+    assert not list(out.rglob("*.tmp"))
+
+
+def test_geoparquet_null_partition_value(spark, tmp_path):
+    # NULL partition values land in Spark's default partition directory
+    # and read back as NULL; no row is dropped
+    from ohsome_planet_spark.io.geoparquet import NULL_PARTITION, write_geoparquet
+
+    df = spark.range(10, numPartitions=2).selectExpr(
+        "id", "IF(id % 3 = 0, NULL, CAST(id % 2 AS string)) AS part")
+    files = write_geoparquet(df, tmp_path / "out", partition_by="part")
+    rows = {}
+    for f in files:
+        assert f.path.startswith(f"part={f.value}/")
+        rows[f.value] = rows.get(f.value, 0) + f.rows
+    assert rows == {NULL_PARTITION: 4, "0": 3, "1": 3}
+    back = spark.read.parquet(str(tmp_path / "out"))
+    assert back.where("part IS NULL").count() == 4
+    assert back.count() == 10

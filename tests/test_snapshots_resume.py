@@ -126,7 +126,7 @@ def test_geoparquet_footer_metadata(spark, tmp_path):
         no_dict_columns=("geometry",),
     )
     assert files
-    meta = read_geo_metadata(out / files[0])
+    meta = read_geo_metadata(out / files[0].path)
     assert meta["primary_column"] == "geometry"
     assert meta["columns"]["geometry"]["encoding"] == "WKB"
     back = spark.read.parquet(str(out))
