@@ -21,6 +21,8 @@ import pandas as pd  # module-level: pandas_udf resolves the hint strings
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import drop_spark_zip_finders
+
 
 def _perp_dist(pts: np.ndarray, a: np.ndarray, b: np.ndarray) -> np.ndarray:
     """Distance from each point to the SEGMENT ab (projection clamped to
@@ -76,6 +78,7 @@ def simplify_lines(
 
     @F.pandas_udf("binary")
     def simp(col: pd.Series) -> pd.Series:
+        drop_spark_zip_finders()
         res = []
         for blob in col:
             if blob is None:
@@ -170,6 +173,7 @@ def simplify_coord_arrays(
     tol = float(tolerance)
 
     def fn(batches):
+        drop_spark_zip_finders()
         for pdf in batches:
             n_before = []
             n_after = []

@@ -21,6 +21,8 @@ import re
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from ..session import drop_spark_zip_finders
+
 # Java: #[^ -⁯⸀-⹿\v\h\\'!"#$%()*,./:;<=>?@\[\]^`{|}~]+
 # \h (horizontal ws) ≈ [ \t  ᠎ -   　]
 # \v (vertical ws)  ≈ [\n\x0B\f\r\x85  ]
@@ -358,6 +360,7 @@ def normalize_text_col(text_c: Column, form: str = "NFC",
 
     @F.pandas_udf(StringType())
     def _norm(s):
+        drop_spark_zip_finders()
         import unicodedata
 
         def one(x):

@@ -10,12 +10,14 @@ row groups, and dictionary encoding disabled for id-like columns.
 
 One writer task per core: the input is coalesced (narrow, no shuffle) to
 `session.kernel_partitions`, so each task writes one file per partition
-value, whatever the upstream partition count. Every Python node-task pays
-pyspark's worker set-up, so fewer, larger writer tasks cost less and write
-fewer, better-compressed files. Each task streams: per partition value it
-keeps one open `ParquetWriter` and buffers fewer than `ROW_GROUP_ROWS` rows
-before writing a row group, so a task's memory is bounded by its number of
-partition values, not by its input.
+value, whatever the upstream partition count, and the job writes fewer,
+better-compressed files. Each writer task starts by dropping the cached
+finders of pyspark's own zip archives (`session.drop_spark_zip_finders`),
+so the next task's worker set-up does not re-read them. Each task
+streams: per partition value it keeps one open `ParquetWriter` and
+buffers fewer than `ROW_GROUP_ROWS` rows before writing a row group, so a
+task's memory is bounded by its number of partition values, not by its
+input.
 
 Idempotency: files are named from the Spark TaskContext partitionId and
 written to a per-attempt tmp file that is atomically `os.replace`d on close,
@@ -45,7 +47,7 @@ import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame
 
-from ..session import kernel_partitions
+from ..session import drop_spark_zip_finders, kernel_partitions
 
 GEOPARQUET_VERSION = "1.1.0"
 COMPRESSION = "zstd"
@@ -155,6 +157,7 @@ def write_geoparquet(
     part_col = partition_by
 
     def write_partition(batches):
+        drop_spark_zip_finders()
         from pyspark import TaskContext
 
         ctx = TaskContext.get()

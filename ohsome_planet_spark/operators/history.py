@@ -63,6 +63,7 @@ from ..functions import geometry_np as gnp
 from ..functions.cells import xz2_code
 from ..functions.waygeom import _segments_self_intersect, is_area, way_geometry
 from ..functions.wkb import wkb_dumps
+from ..session import drop_spark_zip_finders
 
 MAX_TS = pd.Timestamp("2262-01-01")  # practical +inf inside pandas range
 VALID_TO_SENTINEL = pd.Timestamp("2222-01-01")
@@ -999,6 +1000,7 @@ def xz2_udf():
     @F.pandas_udf("level int, code long")
     def xz2_from_bbox(xmin: pd.Series, ymin: pd.Series, xmax: pd.Series,
                       ymax: pd.Series) -> pd.DataFrame:
+        drop_spark_zip_finders()
         x0 = np.asarray(pd.to_numeric(xmin, errors="coerce"), np.float64)
         y0 = np.asarray(pd.to_numeric(ymin, errors="coerce"), np.float64)
         x1 = np.asarray(pd.to_numeric(xmax, errors="coerce"), np.float64)
@@ -1304,6 +1306,7 @@ def node_contributions_kernel(nodes: DataFrame, country_index=None) -> DataFrame
     repartitioned = nodes.repartition(kernel_partitions(spark), "id")
 
     def partition_fn(batches):
+        drop_spark_zip_finders()
         joiner = None
         if bc is not None:
             idx = bc.value
@@ -2196,6 +2199,7 @@ def relation_contributions(
     )
 
     def partition_fn(batches):
+        drop_spark_zip_finders()
         import pyarrow as pa
 
         from .relation_arrow import relation_partition_table

@@ -46,6 +46,7 @@ import pyarrow.compute as pc
 
 from ..functions.cells import xz2_code
 from ..functions.waygeom import is_area
+from ..session import drop_spark_zip_finders
 from .history import (
     CONTRIB_SCHEMA,
     MAX_TS_NS,
@@ -681,6 +682,7 @@ def way_contributions_arrow(ways, nodes, country_index=None):
     )
 
     def partition_fn(batches):
+        drop_spark_zip_finders()
         batch_list = list(batches)
         if not batch_list:
             return

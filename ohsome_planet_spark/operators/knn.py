@@ -25,6 +25,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..session import drop_spark_zip_finders
 from .tiling import zxy_cell_col
 
 
@@ -89,6 +90,7 @@ def _local_topk_arrow(k: int, qcol: str, ccol: str):
     that is the difference between shuffling ~1M and ~110M rows."""
 
     def fn(batches):
+        drop_spark_zip_finders()
         import numpy as np
         import pyarrow as pa
 

@@ -32,6 +32,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import drop_spark_zip_finders
+
 MEDIA_SCHEMA = (
     "media_id long, kind string, format string, content binary, "
     "meta struct<width:int, height:int, sample_rate:int, duration_ms:int>"
@@ -392,6 +394,7 @@ def decode_features(media: DataFrame, batch_hint: int = 256) -> DataFrame:
     """
 
     def extract(batches):
+        drop_spark_zip_finders()
         for pdf in batches:
             feats = []
             for row in pdf.itertuples():
@@ -502,6 +505,7 @@ def phash_df(media: DataFrame, width_col: str = "width",
     import pyarrow as pa
 
     def batches(it):
+        drop_spark_zip_finders()
         for batch in it:
             pdf = batch.to_pandas()
             out_ids, out_h = [], []

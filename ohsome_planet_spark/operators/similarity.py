@@ -17,6 +17,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..session import drop_spark_zip_finders
+
 
 def _to_double(col) -> Column:
     return F.transform(col, lambda x: x.cast("double"))
@@ -111,6 +113,7 @@ def brute_force_topk(
     )
 
     def kernel(batches):
+        drop_spark_zip_finders()
         ids, cn, groups = bc.value
         n = len(ids)
         for batch in batches:
@@ -293,10 +296,16 @@ def ivf_topk(
     elif quantizer == "kmeans":
         from .kmeans import kmeans as _kmeans
 
+        # trained on nonzero vectors only: a zero vector has no direction,
+        # and dividing by its norm would raise DIVIDE_BY_ZERO for the whole
+        # query (it still gets a list below and NULL scores)
         nv = _to_double(F.col(vec_col))
         normed = candidates.select(
-            F.col(cand_id).alias("vec_id"),
-            F.transform(nv, lambda x: x / norm_col(nv)).alias("embedding"),
+            F.col(cand_id).alias("vec_id"), nv.alias("_v"),
+            norm_col(nv).alias("_n"),
+        ).where("_n > 0").select(
+            "vec_id",
+            F.transform("_v", lambda x: x / F.col("_n")).alias("embedding"),
         )
         _, cent_df = _kmeans(normed, k=n_centroids,
                              iterations=kmeans_iterations)
@@ -336,6 +345,7 @@ def ivf_topk(
     def lists_udf(n_lists: int):
         @F.pandas_udf(ArrayType(IntegerType()))
         def assign(v: pd.Series) -> pd.Series:
+            drop_spark_zip_finders()
             c = bc.value
             mat = np.stack(v.map(lambda x: np.asarray(x, np.float64)))
             mat = mat / np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-12)

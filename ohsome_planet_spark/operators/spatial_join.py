@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, StringType
 
 from ..functions.pip_index import PolygonIndex
+from ..session import drop_spark_zip_finders
 
 
 def build_index(features, grid_zoom: int | None = 8) -> PolygonIndex:
@@ -62,6 +63,7 @@ def countries_udf(spark, index: PolygonIndex):
 
     @F.pandas_udf(ArrayType(StringType()))
     def pip_countries(lon: pd.Series, lat: pd.Series) -> pd.Series:
+        drop_spark_zip_finders()
         return pd.Series(point_countries(
             bc.value,
             lon.to_numpy(dtype=np.float64, na_value=np.nan),

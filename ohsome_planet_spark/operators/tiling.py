@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
 
 from ..functions import cells as C
+from ..session import drop_spark_zip_finders
 
 
 def zxy_cell_col(lon: Column, lat: Column, z: int) -> Column:
@@ -49,6 +50,7 @@ def point_cells(fn, lat: np.ndarray, lon: np.ndarray) -> pd.arrays.IntegerArray:
 def _series_udf(fn):
     @F.pandas_udf(LongType())
     def udf(lon: pd.Series, lat: pd.Series) -> pd.Series:
+        drop_spark_zip_finders()
         return pd.Series(point_cells(
             fn,
             lat.to_numpy(dtype=np.float64, na_value=np.nan),
@@ -81,6 +83,7 @@ def xz2_bbox_udf(g: int = 16):
 
     @F.pandas_udf(schema)
     def udf(xmin: pd.Series, ymin: pd.Series, xmax: pd.Series, ymax: pd.Series) -> pd.DataFrame:
+        drop_spark_zip_finders()
         level, code = C.xz2_code(
             xmin.to_numpy(np.float64),
             ymin.to_numpy(np.float64),

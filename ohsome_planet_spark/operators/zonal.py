@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.cells import zxy_cell
+from ..session import drop_spark_zip_finders
 
 PARTIAL_SCHEMA = (
     "cell long, px_sum double, px_count long, px_min double, px_max double"
@@ -49,6 +50,7 @@ def zonal_stats(
         return zxy_cell(gx, gy, zoom)
 
     def per_tile(batches):
+        drop_spark_zip_finders()
         for pdf in batches:
             out_cells = []
             out_sum = []

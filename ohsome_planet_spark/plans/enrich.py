@@ -44,6 +44,7 @@ from pyspark.sql.types import BinaryType
 from ..operators.geocode import extract_mentions, geocode_mentions
 from ..operators.spatial_join import build_index, point_countries
 from ..operators.tiling import point_cells
+from ..session import drop_spark_zip_finders
 from ..sources.countries import fixture_features
 from ..sources.gazetteer import gazetteer_rows
 
@@ -57,6 +58,7 @@ def _point_wkb(lon: pd.Series, lat: pd.Series) -> pd.Series:
     (byte-order 0x00, >u4 type=1, >f8 x, >f8 y), so the whole batch is
     assembled as one (N,21) uint8 matrix — invalid rows masked to NaN —
     and sliced into per-row bytes. No per-row arithmetic in Python."""
+    drop_spark_zip_finders()
     import numpy as np
 
     x = np.asarray(pd.to_numeric(lon, errors="coerce"), dtype=np.float64)

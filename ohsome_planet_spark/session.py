@@ -21,8 +21,35 @@ Every knob here exists for a scale reason:
 from __future__ import annotations
 
 import os
+import sys
+import zipimport
 
 from pyspark.sql import SparkSession
+
+
+def drop_spark_zip_finders() -> None:
+    """Remove the cached zip finders of pyspark's own archives from
+    `sys.path_importer_cache`; call it first in every function that runs
+    in a Python worker (pandas UDF bodies, mapInArrow / mapInPandas /
+    applyInPandas functions).
+
+    Each task a reused worker runs starts with pyspark's
+    `setup_spark_files`, whose `importlib.invalidate_caches()` makes every
+    cached `zipimporter` re-read its archive's directory under CPython
+    3.11: 16 finders over pyspark.zip, the py4j zip and the spark-core jar
+    cost ~0.21 s per task, more than most kernels run. Those archives do
+    not change during a run, and a dropped finder is rebuilt through
+    `sys.path_hooks` from `zipimport._zip_directory_cache` when an import
+    needs it again. Every other finder, including `addPyFile` /
+    `--py-files` archives, stays cached and still refreshes."""
+    cache = sys.path_importer_cache
+    for key, finder in list(cache.items()):
+        if not isinstance(finder, zipimport.zipimporter):
+            continue
+        name = os.path.basename(finder.archive)
+        if name == "pyspark.zip" or name.endswith(".jar") or (
+                name.startswith("py4j-") and name.endswith(".zip")):
+            cache.pop(key, None)
 
 
 def get_spark(

@@ -19,6 +19,8 @@ from pathlib import Path
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
+from ..session import drop_spark_zip_finders
+
 NODE_SCHEMA = (
     "id long, version int, ts timestamp_ntz, changeset long, user_id long, "
     "user string, visible boolean, tags map<string,string>, lon double, lat double"
@@ -163,6 +165,7 @@ def read_changeset_xml_bz2(spark: SparkSession, path: str | Path) -> DataFrame:
     lines = spark.read.text(str(path))
 
     def parse_partition(batches):
+        drop_spark_zip_finders()
         import pandas as pd
 
         buf: list[str] = []

@@ -27,6 +27,8 @@ import zlib
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..session import drop_spark_zip_finders
+
 PAGES_SCHEMA = (
     "url string, warc_ts timestamp, html binary, text string, lang string"
 )
@@ -128,6 +130,7 @@ def read_warc(spark: SparkSession, path: str) -> DataFrame:
     )
 
     def extract(batches):
+        drop_spark_zip_finders()
         for pdf in batches:
             rows = []
             for content in pdf["content"]:

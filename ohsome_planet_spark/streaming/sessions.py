@@ -24,6 +24,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from ..session import drop_spark_zip_finders
+
 OUTPUT_SCHEMA = StructType(
     [
         StructField("user_id", LongType()),
@@ -47,6 +49,7 @@ def make_sessionizer(gap_seconds: int = 3600):
     gap_ns = gap_seconds * 1_000_000_000
 
     def fn(key, pdf_iter, state: GroupState):
+        drop_spark_zip_finders()
         user_id = key[0]
         if state.exists:
             start_ns, last_ns, n = state.get

@@ -31,6 +31,7 @@ from pyspark.sql.types import (
 )
 
 from ..operators.urls import canonical_url_col
+from ..session import drop_spark_zip_finders
 
 OUTPUT_SCHEMA = StructType([
     StructField("canonical_url", StringType()),
@@ -48,6 +49,7 @@ STATE_SCHEMA = StructType([
 
 def make_url_deduper(idle_timeout_ms: int = 0):
     def fn(key, pdf_iter, state: GroupState):
+        drop_spark_zip_finders()
         canon = key[0]
         if state.exists:
             best_us, best_url, n = state.get

@@ -360,6 +360,13 @@ def test_ivf_topk_zero_vector_scores_null(spark):
         fixed_centroids=np.eye(2)).collect())
 
 
+def test_ivf_topk_kmeans_zero_vector_scores_null(spark):
+    q, c = _zero_vector_frames(spark)
+    # the trained quantizer must not divide by the zero vector's norm
+    _assert_zero_vector_scores_null(S.ivf_topk(
+        q, c, k=10, n_centroids=2, nprobe=2, quantizer="kmeans").collect())
+
+
 def _hof_topk(queries, candidates, k=5, query_id="query_id",
               cand_id="cand_id", vec_col="embedding"):
     """Spec twin of ``brute_force_topk``: the same exact top-k as
