@@ -66,6 +66,18 @@ def wkb_dumps(geom) -> bytes:
     raise ValueError(f"unsupported kind {kind}")
 
 
+def point_wkb_matrix(x: np.ndarray, y: np.ndarray) -> np.ndarray:
+    """(N, 21) uint8: row i is the point WKB of (x[i], y[i]) — byte order
+    0x00, >u4 type 1, >f8 x, >f8 y. A NaN pair encodes the empty point, as
+    JTS writes it."""
+    n = x.shape[0]
+    buf = np.zeros((n, 21), np.uint8)
+    buf[:, 4] = 1  # byte 0: big-endian; bytes 1-4: u32 Point code
+    buf[:, 5:13] = x.astype(">f8").view(np.uint8).reshape(n, 8)
+    buf[:, 13:21] = y.astype(">f8").view(np.uint8).reshape(n, 8)
+    return buf
+
+
 def wkb_loads(buf: bytes):
     geom, _ = _read_geom(memoryview(buf), 0)
     return geom

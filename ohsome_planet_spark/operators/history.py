@@ -2111,7 +2111,6 @@ def relation_contributions(
     `Contributions2Parquet.processRelation:233-266`).
     """
     spark = relations.sparkSession
-    bc = spark.sparkContext.broadcast(country_index) if country_index is not None else None
 
     # built from SQL text: one gateway round trip per expression (see
     # node_contributions)
@@ -2198,25 +2197,11 @@ def relation_contributions(
         .sortWithinPartitions("rel_id", "kind", "member_id", "version", "ts")
     )
 
-    def partition_fn(batches):
-        drop_spark_zip_finders()
-        import pyarrow as pa
+    from .history_arrow import run_partition_kernel
+    from .relation_arrow import relation_partition_table
 
-        from .relation_arrow import relation_partition_table
-
-        batch_list = list(batches)
-        if not batch_list:
-            return
-        out = relation_partition_table(
-            pa.Table.from_batches(batch_list),
-            bc.value if bc is not None else None)
-        if out is None:
-            return
-        step = 1 << 16
-        for off in range(0, out.num_rows, step):
-            yield out.slice(off, step)
-
-    return all_packed.mapInArrow(partition_fn, REL_CONTRIB_SCHEMA)
+    return run_partition_kernel(all_packed, relation_partition_table,
+                                REL_CONTRIB_SCHEMA, country_index)
 
 
 def _relation_partition_kernel(pdf: pd.DataFrame, joiner=None):

@@ -18,8 +18,11 @@ reference's `ContributionsEntity.computeNext`
 * the minor-node store filter (`MinorNode.java:55-63`) runs vectorized
   over the whole partition, with an exact per-segment Python fallback only
   for segments where a coordinate-revert drop cascades (rare in real data);
-* the run-collapse + window-column phase (`ContributionsAvroConverter`)
-  is pure NumPy over the emitted integer buffers;
+* the converter phase (`ContributionsAvroConverter`: run collapse, window
+  columns, minor version, edits, contribution type, status, area deltas,
+  the tags/user columns) is `contribution_batch`, pure NumPy over the
+  emitted integer buffers, and shared with the relation kernel
+  (`relation_arrow`); each kernel hands it only its own geometry phase;
 * output columns are built directly as Arrow arrays: WKB geometry is a
   zero-copy BinaryArray over the partition-wide buffer + C++ `take`,
   tags/tags_before/refs/user are `take`s from the INPUT columns, the small
@@ -30,15 +33,19 @@ reference's `ContributionsEntity.computeNext`
   distinct geometry the partition emits, spread to rows by an Arrow `take`
   (no per-geometry Python call).
 
-`way_partition_table` is the production way kernel. The dict kernel
-`history._way_partition_kernel` is its reference twin, which no Spark plan
-runs: tests/test_history_arrow.py (Spark `way_contributions` on adversarial
-fixtures, with and without a country index) and
-tests/test_history_arrow_sweep.py (the kernel alone on seeded fixtures)
-compare the two bit for bit on the same packed partition.
+`way_partition_table` is the production way kernel, and
+`run_partition_kernel` the one `mapInArrow` runner of both merge kernels.
+The dict kernel `history._way_partition_kernel` is its reference twin,
+which no Spark plan runs: tests/test_history_arrow.py (Spark
+`way_contributions` on adversarial fixtures, with and without a country
+index) and tests/test_history_arrow_sweep.py (the kernel alone on seeded
+fixtures) compare the two bit for bit on the same packed partition.
 """
 
 from __future__ import annotations
+
+from types import SimpleNamespace
+from typing import NamedTuple
 
 import numpy as np
 import pyarrow as pa
@@ -122,10 +129,10 @@ class _AHist:
 
 
 def _merge_walk(maj_rows, maj_ts, maj_cs, maj_refs, member_hists,
-                elem_ord, o_elem, o_maj, o_open, o_last, o_mem) -> None:
+                o_maj, o_open, o_last, o_mem) -> None:
     """Queue walk of ONE element emitting integer buffers.
 
-    Exact twin of `merge_contributions` (history.py:233; reference
+    Exact twin of `history.merge_contributions` (reference
     `ContributionsEntity.computeNext:107-150`): as-of consumption at each
     major (ts ≤ major.ts OR changeset == major.changeset), same-changeset
     minor grouping stamped with the LAST consumed edit's ts and the FIRST
@@ -162,7 +169,6 @@ def _merge_walk(maj_rows, maj_ts, maj_cs, maj_refs, member_hists,
         next_major_ts = maj_ts[i + 1] if i + 1 < nmaj else max_ts
 
         while True:
-            o_elem.append(elem_ord)
             o_maj.append(g)
             o_open.append(open_row)
             o_last.append(last_row)
@@ -206,7 +212,7 @@ def _merge_walk(maj_rows, maj_ts, maj_cs, maj_refs, member_hists,
 
 def _minor_node_keep_mask(node_rows, seg_new, nv, nlon, nlat) -> np.ndarray:
     """Vectorized minor-node store filter (`MinorNode.java:55-63`; dict twin
-    `minor_node_filter`, history.py:172) over ALL node rows of a partition.
+    `history.minor_node_filter`) over ALL node rows of a partition.
 
     Per segment (one member node's version feed): leading/consecutive
     invisible rows are skipped; visibility flips always keep; visible →
@@ -285,133 +291,94 @@ def _dict_take(values: list[str], codes: np.ndarray,
     return pa.array(values, type=pa.string()).take(idx)
 
 
-def way_partition_table(tbl: pa.Table, index=None) -> pa.RecordBatch | None:
-    """One partition of the way merge, Arrow in → Arrow out.
+def _chunk(tbl: pa.Table, name: str) -> pa.Array:
+    return tbl.column(name).chunk(0)
 
-    tbl must be sorted by (way_id, kind, node_id, version, ts) — the plan
-    does this JVM-side with sortWithinPartitions. index: optional country
-    `PolygonIndex` (the broadcast value); every geometry the partition
-    emits is joined in one `join_geoms` probe.
+
+def _read_columns(tbl: pa.Table) -> SimpleNamespace:
+    """The columns both packed partitions share (tbl single-chunk): NumPy
+    views of the numeric ones, ts in the int64-ns time domain (exact µs→ns;
+    python-int tuple compares in the walk), and the user/tags/refs Arrow
+    arrays, which only C++ `take`s touch."""
+
+    def num(name: str) -> np.ndarray:
+        return _chunk(tbl, name).to_numpy(zero_copy_only=False)
+
+    return SimpleNamespace(
+        n=tbl.num_rows,
+        version=num("version").astype(np.int64, copy=False),
+        ts=_chunk(tbl, "ts").cast(pa.int64()).to_numpy(zero_copy_only=False) * 1000,
+        changeset=num("changeset").astype(np.int64, copy=False),
+        user_id=num("user_id"),
+        visible=num("visible"),
+        lon=num("lon").astype(np.float64, copy=False),
+        lat=num("lat").astype(np.float64, copy=False),
+        user=_chunk(tbl, "user"),
+        tags=_chunk(tbl, "tags"),
+        refs=_chunk(tbl, "refs"),
+    )
+
+
+class _Emitted(NamedTuple):
+    """The rows `contribution_batch` emits, one entry each, as a kernel's
+    geometry phase sees them."""
+
+    K: np.ndarray  # raw-contribution index
+    major: np.ndarray  # input row of the element version
+    visible: np.ndarray
+    # geometry_before chain: a row carries the geometry of the element's
+    # last visible emitted row `source`, unless `carried` is False (no
+    # visible row yet in this element)
+    source: np.ndarray
+    carried: np.ndarray
+
+
+class _Geometry(NamedTuple):
+    """A kernel's geometry phase, per emitted row."""
+
+    valid: np.ndarray  # non-empty geometry; status "invalid" otherwise
+    key: np.ndarray  # the row's geometry in `wkb`, -1 = none
+    wkb: pa.Array
+    geometry_type: pa.Array
+    columns: list  # xmin ... countries, in schema order
+    area: np.ndarray
+    length: np.ndarray
+    tail: list  # the kernel's own columns after length_delta
+
+
+def _prev_in_element(vals: np.ndarray, efirst: np.ndarray, fill) -> np.ndarray:
+    """vals shifted down one row, `fill` on each element's first row."""
+    prev = np.empty_like(vals)
+    prev[0] = fill
+    prev[1:] = vals[:-1]
+    prev[efirst] = fill
+    return prev
+
+
+def contribution_batch(cols: SimpleNamespace, osm_type: str,
+                       elem_id: np.ndarray, majr: np.ndarray,
+                       opnr: np.ndarray, lastr: np.ndarray, tags_of,
+                       geometry, schema: pa.Schema) -> pa.RecordBatch:
+    """The converter phase of both kernels (`ContributionsAvroConverter.
+    java:57-176`): raw contributions in, one output batch out, pure NumPy
+    over the walk's integer buffers.
+
+    Per raw contribution, in walk order (each element's rows contiguous):
+    elem_id is the element's id (adjacent elements differ, which marks
+    element starts), majr its major input row, opnr the opener row
+    (changeset / user source), lastr the last-consumed row (ts source).
+    tags_of(row) is a major row's tags dict, read for the few major
+    transitions only. geometry(emitted) is the kernel's geometry phase: it
+    receives the `_Emitted` rows and returns their `_Geometry`.
     """
-    n = tbl.num_rows
-    if not n:
-        return None
-    tbl = tbl.combine_chunks()
-
-    def chunk(name: str) -> pa.Array:
-        return tbl.column(name).chunk(0)
-
-    way_np = chunk("way_id").to_numpy(zero_copy_only=False)
-    is_way = pc.equal(chunk("kind"), pa.scalar("w")).to_numpy(zero_copy_only=False)
-    node_id_np = chunk("node_id").fill_null(-1).to_numpy(zero_copy_only=False)
-    ver_np = chunk("version").to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
-    # int64-ns time domain (exact µs→ns; python-int tuple compares in the walk)
-    ts_np = chunk("ts").cast(pa.int64()).to_numpy(zero_copy_only=False) * 1000
-    cs_np = chunk("changeset").to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
-    uid_np = chunk("user_id").to_numpy(zero_copy_only=False)
-    vis_np = chunk("visible").to_numpy(zero_copy_only=False)
-    lon_np = chunk("lon").to_numpy(zero_copy_only=False)
-    lat_np = chunk("lat").to_numpy(zero_copy_only=False)
-    user_arr = chunk("user")
-    tags_arr = chunk("tags")
-    refs_arr = chunk("refs")
-
-    # ----- member ingestion: vectorized minor-node filter + array cursors
-    node_rows = np.nonzero(~is_way)[0]
-    if node_rows.size:
-        nv = vis_np[node_rows]
-        nlon = lon_np[node_rows]
-        nlat = lat_np[node_rows]
-        seg_new = np.ones(node_rows.size, bool)
-        seg_new[1:] = (
-            (np.diff(node_rows) != 1)
-            | (node_id_np[node_rows[1:]] != node_id_np[node_rows[:-1]])
-            | (way_np[node_rows[1:]] != way_np[node_rows[:-1]])
-        )
-        keep_mask = _minor_node_keep_mask(node_rows, seg_new, nv, nlon, nlat)
-        kept_m = np.nonzero(keep_mask)[0]
-        kept_g = node_rows[kept_m]
-        seg_ord = np.cumsum(seg_new) - 1
-        kept_seg = seg_ord[kept_m]
-        # per-kept-segment boundaries (a filtered-to-empty node simply has
-        # no segment here and resolves to the shared empty history)
-        kch = np.ones(kept_m.size, bool)
-        kch[1:] = kept_seg[1:] != kept_seg[:-1]
-        kseg_starts = np.nonzero(kch)[0]
-        kseg_ends = np.append(kseg_starts[1:], kept_m.size)
-        kseg_way = way_np[kept_g[kseg_starts]] if kept_m.size else np.zeros(0, np.int64)
-        kseg_nid = node_id_np[kept_g[kseg_starts]] if kept_m.size else np.zeros(0, np.int64)
-        kept_g_l = kept_g.tolist()
-        kept_keys = list(zip(ts_np[kept_g].tolist(), cs_np[kept_g].tolist()))
-    else:
-        kept_g = np.zeros(0, np.int64)
-        kseg_starts = kseg_ends = np.zeros(0, np.int64)
-        kseg_way = kseg_nid = np.zeros(0, np.int64)
-        kept_g_l = []
-        kept_keys = []
-
-    # ----- per-major python values (few rows: tags dicts, refs lists)
-    way_rows = np.nonzero(is_way)[0]
-    way_prefix = np.concatenate([[0], np.cumsum(is_way)])  # row -> way ordinal
-    w_take = pa.array(way_rows)
-    refs_py = refs_arr.take(w_take).to_pylist()
-    tags_py = [dict(x) if x else {} for x in tags_arr.take(w_take).to_pylist()]
-    refs_py = [r if r is not None else [] for r in refs_py]
-    way_ts_l = ts_np[way_rows].tolist()
-    way_cs_l = cs_np[way_rows].tolist()
-    way_ver = ver_np[way_rows]
-
-    # ----- element walk
-    cuts = np.nonzero(way_np[1:] != way_np[:-1])[0] + 1
-    e_starts = np.concatenate([[0], cuts])
-    e_ends = np.concatenate([cuts, [n]])
-    o_elem: list[int] = []
-    o_maj: list[int] = []
-    o_open: list[int] = []
-    o_last: list[int] = []
-    o_mem: list[int] = []
-    elem_ord = 0
-    for s, e in zip(e_starts.tolist(), e_ends.tolist()):
-        w0 = int(e - (way_prefix[e] - way_prefix[s]))  # first major row
-        if w0 == e:
-            continue  # member rows without a parent way (filtered ways)
-        a = int(np.searchsorted(kept_g, s, "left"))
-        b = int(np.searchsorted(kept_g, e, "left"))
-        hists: dict[int, _AHist] = {}
-        if a < b:
-            t0 = int(np.searchsorted(kseg_starts, a, "right")) - 1
-            t1 = int(np.searchsorted(kseg_starts, b, "left"))
-            for t in range(t0, t1):
-                ka, kb = int(kseg_starts[t]), int(kseg_ends[t])
-                hists[int(kseg_nid[t])] = _AHist(
-                    kept_g_l[ka:kb], kept_keys[ka:kb])
-        ords = list(range(int(way_prefix[w0]), int(way_prefix[w0]) + (e - w0)))
-        # defensive (version, ts) order — the JVM sort already guarantees it
-        ords.sort(key=lambda t: (way_ver[t], way_ts_l[t]))
-        maj_rows = [int(way_rows[t]) for t in ords]
-        maj_ts = [way_ts_l[t] for t in ords]
-        maj_cs = [way_cs_l[t] for t in ords]
-        maj_refs = [refs_py[t] for t in ords]
-        _merge_walk(maj_rows, maj_ts, maj_cs, maj_refs, hists,
-                    elem_ord, o_elem, o_maj, o_open, o_last, o_mem)
-        elem_ord += 1
-
-    n_raw = len(o_maj)
-    if not n_raw:
-        return None
-
-    # ----- run collapse + window columns: pure NumPy over the int buffers
-    elem = np.asarray(o_elem, np.int64)
-    majr = np.asarray(o_maj, np.int64)
-    opnr = np.asarray(o_open, np.int64)
-    lastr = np.asarray(o_last, np.int64)
-    mem = np.asarray(o_mem, np.int64)
-    rver = ver_np[majr]
-    rcs = cs_np[opnr]
-    rts = ts_np[lastr]
-    rvis = vis_np[majr]
+    n_raw = majr.size
+    rver = cols.version[majr]
+    rcs = cols.changeset[opnr]
+    rts = cols.ts[lastr]
+    rvis = cols.visible[majr]
     new_elem = np.ones(n_raw, bool)
-    new_elem[1:] = elem[1:] != elem[:-1]
+    new_elem[1:] = elem_id[1:] != elem_id[:-1]
+    # run collapse: of each same-(version, changeset) run keep the LAST row
     same_run = np.zeros(n_raw, bool)
     same_run[1:] = (~new_elem[1:]) & (rver[1:] == rver[:-1]) & (rcs[1:] == rcs[:-1])
     keep = np.ones(n_raw, bool)
@@ -434,7 +401,7 @@ def way_partition_table(tbl: pa.Table, index=None) -> pa.RecordBatch | None:
     # element's last reset position — hence the efirst -> j-1 floor.
     reset = ~has_before | (rver[Km1] != rver[K])
     j = np.arange(nk)
-    ke = elem[K]
+    ke = elem_id[K]
     efirst = np.ones(nk, bool)
     if nk > 1:
         efirst[1:] = ke[1:] != ke[:-1]
@@ -445,183 +412,295 @@ def way_partition_table(tbl: pa.Table, index=None) -> pa.RecordBatch | None:
 
     bmaj = majr[Km1]
     cmaj = majr[K]
-    is_del = ~rvis[K]
-    bvis = rvis[Km1]
-    is_cre = rvis[K] & (~has_before | ~bvis)
+    visK = rvis[K]
+    is_del = ~visK
+    is_cre = visK & (~has_before | ~rvis[Km1])
     # reference quirk (`:156-158`): TAG set when tags are UNCHANGED
     tag_eq = (bmaj == cmaj)
     need = np.nonzero(~is_del & ~is_cre & ~tag_eq)[0]
     for t in need.tolist():  # one per major transition — few
-        tag_eq[t] = (tags_py[int(way_prefix[bmaj[t]])]
-                     == tags_py[int(way_prefix[cmaj[t]])])
+        tag_eq[t] = tags_of(int(bmaj[t])) == tags_of(int(cmaj[t]))
     tag_un = ~is_del & ~is_cre & tag_eq
 
-    # ----- geometry requests (visible kept rows) + one batched pass
-    nref_all = pc.list_value_length(refs_arr).fill_null(0).to_numpy(
-        zero_copy_only=False).astype(np.int64)
-    rnref = nref_all[majr]
-    moff = np.concatenate([[0], np.cumsum(rnref)])
-    req_rows = np.nonzero(rvis[K])[0]
-    rk = K[req_rows]
-    counts = rnref[rk]
-    flat_idx = np.repeat(moff[rk], counts) + _ranges(counts)
-    gmem = mem[flat_idx] if flat_idx.size else np.zeros(0, np.int64)
-    okm = gmem >= 0
-    gsafe = np.where(okm, gmem, 0)
-    ml = np.where(okm, lon_np[gsafe], np.nan)
-    mt = np.where(okm, lat_np[gsafe], np.nan)
-    mvv = okm & vis_np[gsafe]
-    isarea_by_word = np.fromiter(
-        (is_area(tags_py[t], refs_py[t][0] if refs_py[t] else -1,
-                 refs_py[t][-1] if refs_py[t] else -2, len(refs_py[t]))
-         for t in range(len(way_rows))),
-        bool, len(way_rows)) if len(way_rows) else np.zeros(0, bool)
-    isarea_req = isarea_by_word[way_prefix[majr[rk]]]
-    geo = batch_geometries(counts, isarea_req, ml, mt, mvv, with_bytes=False)
-    R = counts.size
-
-    # carry-forward (converter's geometry_before chain) as array ops
-    req_of = np.full(nk, -1, np.int64)
-    req_of[req_rows] = np.arange(R)
-    rowpos = np.arange(nk)
-    acc = np.maximum.accumulate(np.where(rvis[K], rowpos, -1))
-    acc_c = np.maximum(acc, 0)
-    eff_ok = (acc >= 0) & (ke[acc_c] == ke)
-    eff_req = np.where(eff_ok, req_of[acc_c], -1)
-    eff_c = np.maximum(eff_req, 0)
-    prev_req = np.empty(nk, np.int64)
-    prev_req[0] = -1
-    prev_req[1:] = eff_req[:-1]
-    prev_req[efirst] = -1
-    nonempty = eff_ok & ~geo["empty"][eff_c]
-
-    # zero-copy WKB BinaryArray over the partition buffer
-    if geo["wkb_off"][-1] > np.iinfo(np.int32).max:
-        raise ValueError(
-            "partition WKB exceeds 2GB (arrow binary offsets are int32): "
-            "raise spark.sql.shuffle.partitions so way partitions shrink")
-    ooff = geo["wkb_off"].astype(np.int32)
-    req_bin = pa.Array.from_buffers(
-        pa.binary(), R,
-        [None, pa.py_buffer(ooff), pa.py_buffer(geo["wkb_buf"])])
-    geometry_col = req_bin.take(pa.array(eff_c, mask=~nonempty))
+    acc = np.maximum.accumulate(np.where(visK, j, -1))
+    source = np.maximum(acc, 0)
+    g = geometry(_Emitted(K, cmaj, visK, source,
+                          (acc >= 0) & (ke[source] == ke)))
 
     # GEOMETRY flag: WKB equality via C++ take + equal (converter `:156-163`)
-    cand = ~is_del & ~is_cre & (prev_req != eff_req)
-    geom_changed = cand & ((prev_req < 0) | (eff_req < 0))
-    both = np.nonzero(cand & (prev_req >= 0) & (eff_req >= 0))[0]
+    prev_key = _prev_in_element(g.key, efirst, -1)
+    cand = ~is_del & ~is_cre & (prev_key != g.key)
+    geom_changed = cand & ((prev_key < 0) | (g.key < 0))
+    both = np.nonzero(cand & (prev_key >= 0) & (g.key >= 0))[0]
     if both.size:
-        eqs = pc.equal(req_bin.take(pa.array(prev_req[both])),
-                       req_bin.take(pa.array(eff_req[both])))
+        eqs = pc.equal(g.wkb.take(pa.array(prev_key[both])),
+                       g.wkb.take(pa.array(g.key[both])))
         geom_changed[both] = np.invert(eqs.to_numpy(zero_copy_only=False))
     contrib_code = np.select(
         [is_del, is_cre, tag_un & geom_changed, tag_un, geom_changed],
         [0, 1, 2, 3, 4], default=5)
-    contrib_col = _dict_take(
-        ["DELETION", "CREATION", "TAG_GEOMETRY", "TAG", "GEOMETRY", ""],
-        contrib_code)
-
     status_code = np.where(
-        ~nonempty, 3, np.where(is_del, 0, np.where(has_next, 1, 2)))
-    status_col = _dict_take(["deleted", "history", "latest", "invalid"],
-                            status_code)
-    gt_code = geo["kind"][eff_c].astype(np.int64) - 1
-    geometry_type_col = _dict_take(["Point", "LineString", "Polygon"],
-                                   gt_code, mask=eff_req < 0)
+        ~g.valid, 3, np.where(is_del, 0, np.where(has_next, 1, 2)))
 
-    area_row = np.where(nonempty, geo["area"][eff_c], 0.0)
-    length_row = np.where(nonempty, geo["length"][eff_c], 0.0)
-    area_prev = np.empty(nk)
-    area_prev[0] = 0.0
-    area_prev[1:] = area_row[:-1]
-    area_prev[efirst] = 0.0
-    length_prev = np.empty(nk)
-    length_prev[0] = 0.0
-    length_prev[1:] = length_row[:-1]
-    length_prev[efirst] = 0.0
-
-    # XZ2 from request bboxes (folded in: no separate post-pass round trip)
-    xz_lvl = np.full(nk, -1, np.int32)
-    xz_cod = np.zeros(nk, np.int64)
-    valid_req = np.nonzero(~geo["empty"])[0]
-    if valid_req.size:
-        lv, cd = xz2_code(geo["xmin"][valid_req], geo["ymin"][valid_req],
-                          geo["xmax"][valid_req], geo["ymax"][valid_req])
-        lv_all = np.full(R, -1, np.int64)
-        cd_all = np.zeros(R, np.int64)
-        lv_all[valid_req] = lv
-        cd_all[valid_req] = cd
-        xz_lvl = np.where(nonempty, lv_all[eff_c], -1).astype(np.int32)
-        xz_cod = np.where(nonempty, cd_all[eff_c], 0)
-
-    if index is None:
-        countries_col = pa.ListArray.from_arrays(
-            np.zeros(nk + 1, np.int32), pa.array([], type=pa.string()))
-    else:
-        # one probe over the distinct requests the emitted rows use
-        used = np.unique(eff_req[nonempty])
-        vcnt = geo["voff"][used + 1] - geo["voff"][used]
-        vi = np.repeat(geo["voff"][used], vcnt) + _ranges(vcnt)
-        off = np.concatenate([[0], np.cumsum(vcnt)])
-        hits = index.join_geoms(geo["xs"][vi], geo["ys"][vi], off,
-                                np.arange(used.size + 1), geo["kind"][used])
-        slot = np.full(R + 1, used.size)  # R + 1: eff_c is 0 when R == 0
-        slot[used] = np.arange(used.size)
-        countries_col = pa.array(hits + [[]], type=pa.list_(pa.string())).take(
-            pa.array(np.where(nonempty, slot[eff_c], used.size)))
-
-    # map/list/string columns: C++ takes from the INPUT arrays; the
-    # appended sentinel row supplies the {} fill for null/absent maps
-    empty_map = pa.array([[]], type=tags_arr.type)
-    ext_tags = pa.concat_arrays([tags_arr, empty_map])
-    tagnull = pc.is_null(tags_arr).to_numpy(zero_copy_only=False)
+    # map/string columns: C++ takes from the INPUT arrays; the appended
+    # sentinel row supplies the {} fill for null/absent maps
+    n = cols.n
+    ext_tags = pa.concat_arrays([cols.tags, pa.array([[]], type=cols.tags.type)])
+    tagnull = pc.is_null(cols.tags).to_numpy(zero_copy_only=False)
     t_idx = np.where(tagnull[cmaj], n, cmaj)
     tb_idx = np.where(has_before & ~tagnull[bmaj], bmaj, n)
-    tags_col = ext_tags.take(pa.array(t_idx)).cast(_MAP)
-    tags_before_col = ext_tags.take(pa.array(tb_idx)).cast(_MAP)
-    refs_col = refs_arr.take(pa.array(cmaj)).cast(pa.list_(pa.int64()))
-    user_col = user_arr.take(pa.array(opnr[K])).cast(pa.string())
-
-    def f64(vals: np.ndarray) -> pa.Array:
-        return pa.array(np.where(nonempty, vals, np.nan), mask=~nonempty)
-
-    batch = pa.record_batch(
+    opener = opnr[K]
+    return pa.record_batch(
         [
-            _dict_take(["way"], np.zeros(nk, np.int64)),
-            pa.array(way_np[cmaj]),
+            _dict_take([osm_type], np.zeros(nk, np.int64)),
+            pa.array(ke.astype(np.int64, copy=False)),
             pa.array(rver[K].astype(np.int32)),
             pa.array(mv_col.astype(np.int32)),
             pa.array(edits.astype(np.int32)),
             pa.array(last_edit // 1000, type=_TS, mask=~has_before),
             pa.array(valid_from // 1000, type=_TS),
             pa.array(valid_to // 1000, type=_TS),
-            pa.array(uid_np[opnr[K]].astype(np.int64)),
-            user_col,
+            pa.array(cols.user_id[opener].astype(np.int64)),
+            cols.user.take(pa.array(opener)).cast(pa.string()),
             pa.array(rcs[K]),
-            tags_col,
-            tags_before_col,
-            status_col,
-            contrib_col,
-            geometry_type_col,
-            geometry_col,
-            f64(geo["xmin"][eff_c]),
-            f64(geo["ymin"][eff_c]),
-            f64(geo["xmax"][eff_c]),
-            f64(geo["ymax"][eff_c]),
-            f64(geo["cx"][eff_c]),
-            f64(geo["cy"][eff_c]),
-            pa.array(xz_lvl),
-            pa.array(xz_cod),
-            countries_col,
-            pa.array(area_row),
-            pa.array(area_row - area_prev),
-            pa.array(length_row),
-            pa.array(length_row - length_prev),
-            refs_col,
+            ext_tags.take(pa.array(t_idx)).cast(_MAP),
+            ext_tags.take(pa.array(tb_idx)).cast(_MAP),
+            _dict_take(["deleted", "history", "latest", "invalid"], status_code),
+            _dict_take(
+                ["DELETION", "CREATION", "TAG_GEOMETRY", "TAG", "GEOMETRY", ""],
+                contrib_code),
+            g.geometry_type,
+            g.wkb.take(pa.array(np.maximum(g.key, 0), mask=~g.valid)),
+            *g.columns,
+            pa.array(g.area),
+            pa.array(g.area - _prev_in_element(g.area, efirst, 0.0)),
+            pa.array(g.length),
+            pa.array(g.length - _prev_in_element(g.length, efirst, 0.0)),
+            *g.tail,
         ],
-        schema=OUT_SCHEMA,
+        schema=schema,
     )
-    return batch
+
+
+def way_partition_table(tbl: pa.Table, index=None) -> pa.RecordBatch | None:
+    """One partition of the way merge, Arrow in → Arrow out.
+
+    tbl must be sorted by (way_id, kind, node_id, version, ts) — the plan
+    does this JVM-side with sortWithinPartitions. index: optional country
+    `PolygonIndex` (the broadcast value); every geometry the partition
+    emits is joined in one `join_geoms` probe.
+    """
+    n = tbl.num_rows
+    if not n:
+        return None
+    tbl = tbl.combine_chunks()
+    cols = _read_columns(tbl)
+    way_np = _chunk(tbl, "way_id").to_numpy(zero_copy_only=False)
+    is_way = pc.equal(_chunk(tbl, "kind"), pa.scalar("w")).to_numpy(zero_copy_only=False)
+    node_id_np = _chunk(tbl, "node_id").fill_null(-1).to_numpy(zero_copy_only=False)
+
+    # ----- member ingestion: vectorized minor-node filter + array cursors
+    node_rows = np.nonzero(~is_way)[0]
+    if node_rows.size:
+        nv = cols.visible[node_rows]
+        nlon = cols.lon[node_rows]
+        nlat = cols.lat[node_rows]
+        seg_new = np.ones(node_rows.size, bool)
+        seg_new[1:] = (
+            (np.diff(node_rows) != 1)
+            | (node_id_np[node_rows[1:]] != node_id_np[node_rows[:-1]])
+            | (way_np[node_rows[1:]] != way_np[node_rows[:-1]])
+        )
+        keep_mask = _minor_node_keep_mask(node_rows, seg_new, nv, nlon, nlat)
+        kept_m = np.nonzero(keep_mask)[0]
+        kept_g = node_rows[kept_m]
+        seg_ord = np.cumsum(seg_new) - 1
+        kept_seg = seg_ord[kept_m]
+        # per-kept-segment boundaries (a filtered-to-empty node simply has
+        # no segment here and resolves to the shared empty history)
+        kch = np.ones(kept_m.size, bool)
+        kch[1:] = kept_seg[1:] != kept_seg[:-1]
+        kseg_starts = np.nonzero(kch)[0]
+        kseg_ends = np.append(kseg_starts[1:], kept_m.size)
+        kseg_nid = node_id_np[kept_g[kseg_starts]] if kept_m.size else np.zeros(0, np.int64)
+        kept_g_l = kept_g.tolist()
+        kept_keys = list(zip(cols.ts[kept_g].tolist(), cols.changeset[kept_g].tolist()))
+    else:
+        kept_g = np.zeros(0, np.int64)
+        kseg_starts = kseg_ends = np.zeros(0, np.int64)
+        kseg_nid = np.zeros(0, np.int64)
+        kept_g_l = []
+        kept_keys = []
+
+    # ----- per-major python values (few rows: tags dicts, refs lists)
+    way_rows = np.nonzero(is_way)[0]
+    way_prefix = np.concatenate([[0], np.cumsum(is_way)])  # row -> way ordinal
+    w_take = pa.array(way_rows)
+    refs_py = cols.refs.take(w_take).to_pylist()
+    tags_py = [dict(x) if x else {} for x in cols.tags.take(w_take).to_pylist()]
+    refs_py = [r if r is not None else [] for r in refs_py]
+    way_ts_l = cols.ts[way_rows].tolist()
+    way_cs_l = cols.changeset[way_rows].tolist()
+    way_ver = cols.version[way_rows]
+
+    # ----- element walk
+    cuts = np.nonzero(way_np[1:] != way_np[:-1])[0] + 1
+    e_starts = np.concatenate([[0], cuts])
+    e_ends = np.concatenate([cuts, [n]])
+    o_maj: list[int] = []
+    o_open: list[int] = []
+    o_last: list[int] = []
+    o_mem: list[int] = []
+    for s, e in zip(e_starts.tolist(), e_ends.tolist()):
+        w0 = int(e - (way_prefix[e] - way_prefix[s]))  # first major row
+        if w0 == e:
+            continue  # member rows without a parent way (filtered ways)
+        a = int(np.searchsorted(kept_g, s, "left"))
+        b = int(np.searchsorted(kept_g, e, "left"))
+        hists: dict[int, _AHist] = {}
+        if a < b:
+            t0 = int(np.searchsorted(kseg_starts, a, "right")) - 1
+            t1 = int(np.searchsorted(kseg_starts, b, "left"))
+            for t in range(t0, t1):
+                ka, kb = int(kseg_starts[t]), int(kseg_ends[t])
+                hists[int(kseg_nid[t])] = _AHist(
+                    kept_g_l[ka:kb], kept_keys[ka:kb])
+        ords = list(range(int(way_prefix[w0]), int(way_prefix[w0]) + (e - w0)))
+        # defensive (version, ts) order — the JVM sort already guarantees it
+        ords.sort(key=lambda t: (way_ver[t], way_ts_l[t]))
+        maj_rows = [int(way_rows[t]) for t in ords]
+        maj_ts = [way_ts_l[t] for t in ords]
+        maj_cs = [way_cs_l[t] for t in ords]
+        maj_refs = [refs_py[t] for t in ords]
+        _merge_walk(maj_rows, maj_ts, maj_cs, maj_refs, hists,
+                    o_maj, o_open, o_last, o_mem)
+
+    if not o_maj:
+        return None
+    majr = np.asarray(o_maj, np.int64)
+    mem = np.asarray(o_mem, np.int64)
+
+    def geometry(em: _Emitted) -> _Geometry:
+        # ----- geometry requests (visible kept rows) + one batched pass
+        nref_all = pc.list_value_length(cols.refs).fill_null(0).to_numpy(
+            zero_copy_only=False).astype(np.int64)
+        rnref = nref_all[majr]
+        moff = np.concatenate([[0], np.cumsum(rnref)])
+        req_rows = np.nonzero(em.visible)[0]
+        rk = em.K[req_rows]
+        counts = rnref[rk]
+        flat_idx = np.repeat(moff[rk], counts) + _ranges(counts)
+        gmem = mem[flat_idx] if flat_idx.size else np.zeros(0, np.int64)
+        okm = gmem >= 0
+        gsafe = np.where(okm, gmem, 0)
+        ml = np.where(okm, cols.lon[gsafe], np.nan)
+        mt = np.where(okm, cols.lat[gsafe], np.nan)
+        mvv = okm & cols.visible[gsafe]
+        isarea_by_word = np.fromiter(
+            (is_area(tags_py[t], refs_py[t][0] if refs_py[t] else -1,
+                     refs_py[t][-1] if refs_py[t] else -2, len(refs_py[t]))
+             for t in range(len(way_rows))),
+            bool, len(way_rows)) if len(way_rows) else np.zeros(0, bool)
+        isarea_req = isarea_by_word[way_prefix[majr[rk]]]
+        geo = batch_geometries(counts, isarea_req, ml, mt, mvv, with_bytes=False)
+        R = counts.size
+        nk = em.K.size
+
+        # the carried geometry of each row is a request
+        req_of = np.full(nk, -1, np.int64)
+        req_of[req_rows] = np.arange(R)
+        eff_req = np.where(em.carried, req_of[em.source], -1)
+        eff_c = np.maximum(eff_req, 0)
+        nonempty = em.carried & ~geo["empty"][eff_c]
+
+        # zero-copy WKB BinaryArray over the partition buffer
+        if geo["wkb_off"][-1] > np.iinfo(np.int32).max:
+            raise ValueError(
+                "partition WKB exceeds 2GB (arrow binary offsets are int32): "
+                "raise spark.sql.shuffle.partitions so way partitions shrink")
+        ooff = geo["wkb_off"].astype(np.int32)
+        req_bin = pa.Array.from_buffers(
+            pa.binary(), R,
+            [None, pa.py_buffer(ooff), pa.py_buffer(geo["wkb_buf"])])
+        gt_code = geo["kind"][eff_c].astype(np.int64) - 1
+
+        # XZ2 from request bboxes (folded in: no separate post-pass round trip)
+        xz_lvl = np.full(nk, -1, np.int32)
+        xz_cod = np.zeros(nk, np.int64)
+        valid_req = np.nonzero(~geo["empty"])[0]
+        if valid_req.size:
+            lv, cd = xz2_code(geo["xmin"][valid_req], geo["ymin"][valid_req],
+                              geo["xmax"][valid_req], geo["ymax"][valid_req])
+            lv_all = np.full(R, -1, np.int64)
+            cd_all = np.zeros(R, np.int64)
+            lv_all[valid_req] = lv
+            cd_all[valid_req] = cd
+            xz_lvl = np.where(nonempty, lv_all[eff_c], -1).astype(np.int32)
+            xz_cod = np.where(nonempty, cd_all[eff_c], 0)
+
+        if index is None:
+            countries_col = pa.ListArray.from_arrays(
+                np.zeros(nk + 1, np.int32), pa.array([], type=pa.string()))
+        else:
+            # one probe over the distinct requests the emitted rows use
+            used = np.unique(eff_req[nonempty])
+            vcnt = geo["voff"][used + 1] - geo["voff"][used]
+            vi = np.repeat(geo["voff"][used], vcnt) + _ranges(vcnt)
+            off = np.concatenate([[0], np.cumsum(vcnt)])
+            hits = index.join_geoms(geo["xs"][vi], geo["ys"][vi], off,
+                                    np.arange(used.size + 1), geo["kind"][used])
+            slot = np.full(R + 1, used.size)  # R + 1: eff_c is 0 when R == 0
+            slot[used] = np.arange(used.size)
+            countries_col = pa.array(hits + [[]], type=pa.list_(pa.string())).take(
+                pa.array(np.where(nonempty, slot[eff_c], used.size)))
+
+        def f64(name: str) -> pa.Array:
+            return pa.array(np.where(nonempty, geo[name][eff_c], np.nan),
+                            mask=~nonempty)
+
+        return _Geometry(
+            valid=nonempty,
+            key=eff_req,
+            wkb=req_bin,
+            geometry_type=_dict_take(["Point", "LineString", "Polygon"],
+                                     gt_code, mask=eff_req < 0),
+            columns=[*map(f64, ("xmin", "ymin", "xmax", "ymax", "cx", "cy")),
+                     pa.array(xz_lvl), pa.array(xz_cod), countries_col],
+            area=np.where(nonempty, geo["area"][eff_c], 0.0),
+            length=np.where(nonempty, geo["length"][eff_c], 0.0),
+            tail=[cols.refs.take(pa.array(em.major)).cast(pa.list_(pa.int64()))],
+        )
+
+    return contribution_batch(
+        cols, "way", way_np[majr], majr, np.asarray(o_open, np.int64),
+        np.asarray(o_last, np.int64), lambda g: tags_py[int(way_prefix[g])],
+        geometry, OUT_SCHEMA)
+
+
+def run_partition_kernel(packed, kernel, schema: str, country_index=None):
+    """`kernel(table, index)` over every partition of `packed` through one
+    `mapInArrow` hop; index is the broadcast country index (or None).
+
+    The worker concatenates the partition's batches into one table, so the
+    kernel sees the whole partition, and yields its output in slices of
+    bounded size for the downstream consumers."""
+    bc = (packed.sparkSession.sparkContext.broadcast(country_index)
+          if country_index is not None else None)
+
+    def partition_fn(batches):
+        drop_spark_zip_finders()
+        batch_list = list(batches)
+        if not batch_list:
+            return
+        out = kernel(pa.Table.from_batches(batch_list),
+                     bc.value if bc is not None else None)
+        if out is None:
+            return
+        step = 1 << 16
+        for off in range(0, out.num_rows, step):
+            yield out.slice(off, step)
+
+    return packed.mapInArrow(partition_fn, schema)
 
 
 def way_contributions_arrow(ways, nodes, country_index=None):
@@ -634,8 +713,6 @@ def way_contributions_arrow(ways, nodes, country_index=None):
     round trip.
     """
     spark = ways.sparkSession
-    bc = (spark.sparkContext.broadcast(country_index)
-          if country_index is not None else None)
 
     # built from SQL text: one gateway round trip per expression (see
     # history.node_contributions)
@@ -681,19 +758,5 @@ def way_contributions_arrow(ways, nodes, country_index=None):
         .sortWithinPartitions("way_id", "kind", "node_id", "version", "ts")
     )
 
-    def partition_fn(batches):
-        drop_spark_zip_finders()
-        batch_list = list(batches)
-        if not batch_list:
-            return
-        out = way_partition_table(
-            pa.Table.from_batches(batch_list),
-            bc.value if bc is not None else None)
-        if out is None:
-            return
-        # bounded batch sizes for the downstream consumers
-        step = 1 << 16
-        for off in range(0, out.num_rows, step):
-            yield out.slice(off, step)
-
-    return packed.mapInArrow(partition_fn, CONTRIB_SCHEMA)
+    return run_partition_kernel(packed, way_partition_table, CONTRIB_SCHEMA,
+                                country_index)

@@ -41,6 +41,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import BinaryType
 
+from ..functions.wkb import point_wkb_matrix
 from ..operators.geocode import extract_mentions, geocode_mentions
 from ..operators.spatial_join import build_index, point_countries
 from ..operators.tiling import point_cells
@@ -56,23 +57,17 @@ def _point_wkb(lon: pd.Series, lat: pd.Series) -> pd.Series:
 
     Fully vectorized: a point WKB is a fixed 21-byte record
     (byte-order 0x00, >u4 type=1, >f8 x, >f8 y), so the whole batch is
-    assembled as one (N,21) uint8 matrix — invalid rows masked to NaN —
-    and sliced into per-row bytes. No per-row arithmetic in Python."""
+    assembled as one (N,21) uint8 matrix (`wkb.point_wkb_matrix`) —
+    invalid rows masked to NaN — and sliced into per-row bytes. No per-row arithmetic in Python."""
     drop_spark_zip_finders()
     import numpy as np
 
     x = np.asarray(pd.to_numeric(lon, errors="coerce"), dtype=np.float64)
     y = np.asarray(pd.to_numeric(lat, errors="coerce"), dtype=np.float64)
     valid = (x >= -180.0) & (x <= 180.0) & (y >= -90.0) & (y <= 90.0)  # NaN→False
-    x = np.where(valid, x, np.nan)
-    y = np.where(valid, y, np.nan)
-    n = x.shape[0]
-    buf = np.empty((n, 21), dtype=np.uint8)
-    buf[:, 0:5] = np.array([0, 0, 0, 0, 1], dtype=np.uint8)  # big-endian, Point
-    buf[:, 5:13] = x.astype(">f8").view(np.uint8).reshape(n, 8)
-    buf[:, 13:21] = y.astype(">f8").view(np.uint8).reshape(n, 8)
-    mem = buf.tobytes()
-    return pd.Series([mem[i * 21 : i * 21 + 21] for i in range(n)])
+    mem = point_wkb_matrix(np.where(valid, x, np.nan),
+                           np.where(valid, y, np.nan)).tobytes()
+    return pd.Series([mem[i * 21 : i * 21 + 21] for i in range(x.shape[0])])
 
 
 def point_wkb_udf(lon: Column, lat: Column) -> Column:

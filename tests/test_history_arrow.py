@@ -19,11 +19,17 @@ import pytest
 
 from ohsome_planet_spark.functions.cells import xz2_code
 from ohsome_planet_spark.operators.history import (
+    CONTRIB_SCHEMA,
+    REL_CONTRIB_SCHEMA,
     _way_partition_kernel,
     minor_node_filter,
     way_contributions,
 )
-from ohsome_planet_spark.operators.history_arrow import _minor_node_keep_mask
+from ohsome_planet_spark.operators.history_arrow import (
+    OUT_SCHEMA,
+    _minor_node_keep_mask,
+)
+from ohsome_planet_spark.operators.relation_arrow import REL_OUT_SCHEMA
 from tests.test_pip_index import join_geom_spec
 
 _WAYS_DDL = (
@@ -355,3 +361,18 @@ def test_kernel_partitions_rule():
     assert kernel_partitions(_Spark(32, 64)) == 32      # local: one wave
     assert kernel_partitions(_Spark(4, 4)) == 4         # tests session
     assert kernel_partitions(_Spark(800, 4000)) == 2000  # cluster: memory grain
+
+
+@pytest.mark.parametrize("arrow, ddl", [
+    (OUT_SCHEMA, CONTRIB_SCHEMA),
+    (REL_OUT_SCHEMA, REL_CONTRIB_SCHEMA),
+], ids=["way", "relation"])
+def test_kernel_schemas_match_spark_schemas(spark, arrow, ddl):
+    """Each kernel's Arrow output schema is the one `mapInArrow` expects for
+    its declared Spark schema, under Spark's own Arrow type mapping."""
+    from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    declared = _parse_datatype_string(ddl)
+    assert to_arrow_schema(declared, timestamp_utc=False) == arrow
+    assert from_arrow_schema(arrow, prefer_timestamp_ntz=True) == declared

@@ -504,3 +504,25 @@ def test_kernels_probe_countries_without_join_geom(monkeypatch, country_index):
     ]).to_pandas()
     got = rel[rel["countries"].map(len) > 0]
     assert set(got["geometry_type"]) == {"GeometryCollection", "MultiPolygon"}
+
+
+def test_minor_version_baseline_restarts_per_element():
+    """The relation twin of the way kernel's minor-version regression: the
+    accumulate baseline must restart at each relation. Relation 1 ends on
+    a minor version (a member node moves after its only version), and
+    relation 2's first emitted row collapses a same-(version, changeset)
+    run, so its raw predecessor has the same version (no reset)."""
+    rows = [
+        _node(1, 10, 1, 0, 1, lon=0.0, lat=0.0),
+        _rel(1, 1, 1, 2, [m("node", 10)], tags={"type": "route"}),
+        _node(1, 10, 2, 2, 3, lon=5.0, lat=5.0),  # minor version of rel 1
+        _node(2, 20, 1, 0, 1, lon=1.0, lat=1.0),
+        # relation 2: two raw rows with the same (version, changeset)
+        _rel(2, 1, 5, 5, [m("node", 20)], tags={"type": "route"}),
+        _rel(2, 1, 6, 5, [m("node", 20)], tags={"type": "route"}),
+        _rel(2, 2, 7, 6, [m("node", 20)], tags={"type": "route"}),
+    ]
+    out = _compare_table(pd.DataFrame(rows))
+    minor = {rid: list(g.sort_values("valid_from")["osm_minor_version"])
+             for rid, g in out.groupby("osm_id")}
+    assert minor == {1: [0, 1], 2: [1, 0]}

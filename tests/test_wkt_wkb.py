@@ -2,7 +2,7 @@
 
 import numpy as np
 
-from ohsome_planet_spark.functions.wkb import wkb_dumps, wkb_loads
+from ohsome_planet_spark.functions.wkb import point_wkb_matrix, wkb_dumps, wkb_loads
 from ohsome_planet_spark.functions.wkt import polygon_parts, wkt_dumps, wkt_loads
 
 
@@ -74,3 +74,16 @@ def test_wkb_little_endian_read():
 
     buf = b"\x01" + struct.pack("<I", 1) + struct.pack("<dd", 3.0, 4.0)
     assert wkb_loads(buf) == ("Point", (3.0, 4.0))
+
+
+def test_point_wkb_matrix_rows_are_point_wkb():
+    """Each row of the vectorized point encoder is `wkb_dumps` of that
+    point, and a NaN pair is the empty point; the enrichment's empty-point
+    fill is those same bytes."""
+    from ohsome_planet_spark.plans.enrich import _EMPTY_POINT_WKB
+
+    x = np.array([0.0, -180.0, 12.345678901, np.nan])
+    y = np.array([0.0, 90.0, -0.5, np.nan])
+    rows = [bytes(r) for r in point_wkb_matrix(x, y)]
+    assert rows[:3] == [wkb_dumps(("Point", (a, b))) for a, b in zip(x[:3], y[:3])]
+    assert rows[3] == wkb_dumps(("Point", None)) == _EMPTY_POINT_WKB
