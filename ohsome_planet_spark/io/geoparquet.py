@@ -3,10 +3,21 @@
 Spark's parquet writer cannot attach custom key/value footer metadata, so the
 sink writes files from inside the tasks with pyarrow (Arrow batches — no
 driver collect of the data). This mirrors the reference's writer
-configuration (`/root/reference/ohsome-contributions/src/main/java/org/
-heigit/ohsome/contributions/transformer/Transformer.java:110-149`): GeoParquet
-`geo` metadata declaring the WKB geometry column, ZSTD compression, 128Ki-row
-row groups, and dictionary encoding disabled for id-like columns.
+configuration (`ohsome-contributions` `transformer/Transformer.java:110-149`,
+parquet-mr with writer version 2 and ZSTD): GeoParquet `geo` metadata
+declaring the WKB geometry column, 128Ki-row row groups, data page v2, and
+parquet-mr's defaults for that writer:
+
+* ZSTD at `COMPRESSION_LEVEL` 3, parquet-mr's default level
+  (`parquet.compression.codec.zstd.level`); pyarrow would use level 1.
+* v2 delta encoding for integers: parquet-mr's v2 values writer encodes an
+  INT32 / INT64 column without a dictionary (the reference's `osm_id` and
+  `refs`) as DELTA_BINARY_PACKED. One rule over the Arrow schema
+  (`_column_encodings`) applies it here: every integer or timestamp leaf,
+  list elements included, is DELTA_BINARY_PACKED with no dictionary; the
+  geometry column is PLAIN with no dictionary; every other leaf keeps its
+  dictionary. Spark reads every encoding this writes; its reader rejects
+  BYTE_STREAM_SPLIT, so doubles stay dictionary / PLAIN.
 
 One writer task per core: the input is coalesced (narrow, no shuffle) to
 `session.kernel_partitions`, so each task writes one file per partition
@@ -51,6 +62,7 @@ from ..session import drop_spark_zip_finders, kernel_partitions
 
 GEOPARQUET_VERSION = "1.1.0"
 COMPRESSION = "zstd"
+COMPRESSION_LEVEL = 3  # parquet-mr's ZSTD default
 ROW_GROUP_ROWS = 128 * 1024
 # Spark's name for the directory of a NULL partition value
 NULL_PARTITION = "__HIVE_DEFAULT_PARTITION__"
@@ -83,20 +95,51 @@ _WRITTEN = pa.schema(
     [("path", pa.string()), ("value", pa.string()), ("rows", pa.int64())])
 
 
+def _leaves(path: str, t: pa.DataType):
+    """(parquet column path, Arrow type) of every leaf under one field."""
+    if pa.types.is_map(t):
+        yield from _leaves(f"{path}.key_value.key", t.key_type)
+        yield from _leaves(f"{path}.key_value.value", t.item_type)
+    elif pa.types.is_list(t):
+        yield from _leaves(f"{path}.list.element", t.value_type)
+    elif pa.types.is_struct(t):
+        for f in t:
+            yield from _leaves(f"{path}.{f.name}", f.type)
+    else:
+        yield path, t
+
+
+def _column_encodings(schema: pa.Schema,
+                     geometry_col: str) -> tuple[list[str], dict[str, str]]:
+    """The writer's (dictionary leaves, leaf -> encoding): integer and
+    timestamp leaves DELTA_BINARY_PACKED, the geometry column PLAIN, both
+    without a dictionary; every other leaf keeps its dictionary."""
+    dictionary, encoding = [], {}
+    for field in schema:
+        for path, t in _leaves(field.name, field.type):
+            if pa.types.is_integer(t) or pa.types.is_timestamp(t):
+                encoding[path] = "DELTA_BINARY_PACKED"
+            elif path == geometry_col:
+                encoding[path] = "PLAIN"
+            else:
+                dictionary.append(path)
+    return dictionary, encoding
+
+
 class _PartFile:
     """One open part file: row groups of exactly ROW_GROUP_ROWS rows (the
     last one shorter), written to a tmp file renamed into place on close."""
 
     def __init__(self, root: str, rel: str, schema: pa.Schema,
-                 no_dict: list[str], attempt: int):
+                 geometry_col: str, attempt: int):
         self.rel, self.path = rel, os.path.join(root, rel)
         self.tmp = f"{self.path}.{attempt}.tmp"
         os.makedirs(os.path.dirname(self.path), exist_ok=True)
-        use_dict: bool | list[str] = [
-            c for c in schema.names if c not in no_dict] if no_dict else True
+        dictionary, encoding = _column_encodings(schema, geometry_col)
         self.writer = pq.ParquetWriter(
             self.tmp, schema, compression=COMPRESSION,
-            use_dictionary=use_dict, data_page_version="2.0")
+            compression_level=COMPRESSION_LEVEL, use_dictionary=dictionary,
+            column_encoding=encoding, data_page_version="2.0")
         self.buffer: list[pa.RecordBatch] = []
         self.buffered = self.rows = 0
 
@@ -130,7 +173,6 @@ def write_geoparquet(
     df: DataFrame,
     path: str | Path,
     geometry_col: str = "geometry",
-    no_dict_columns: tuple[str, ...] = (),
     partition_by: str | None = None,
 ) -> list[WrittenFile]:
     """Write df as GeoParquet; returns the written files, sorted by path.
@@ -153,7 +195,6 @@ def write_geoparquet(
         old.unlink()
     geo = {b"geo": json.dumps(geo_metadata(geometry_col)).encode()}
     out_str = str(out_dir)
-    no_dict = list(no_dict_columns)
     part_col = partition_by
 
     def write_partition(batches):
@@ -172,7 +213,7 @@ def write_geoparquet(
                 rel = fname if value is None else os.path.join(
                     f"{part_col}={value}", fname)
                 schema = rows.schema.with_metadata({**(rows.schema.metadata or {}), **geo})
-                f = files[value] = _PartFile(out_str, rel, schema, no_dict, attempt)
+                f = files[value] = _PartFile(out_str, rel, schema, geometry_col, attempt)
             f.append(rows)
 
         try:

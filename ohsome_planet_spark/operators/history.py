@@ -883,12 +883,17 @@ def finalize_columnar(bufs: _ConvertBufs, joiner=None, ts_int=False) -> pd.DataF
     prev_req[1:] = eff_req[:-1]
     prev_req[first] = -1
 
-    nonempty = eff_ok & ~geo["empty"][eff_c]
+    def at(a: np.ndarray) -> np.ndarray:
+        # a request column per row; the caller masks rows without a request,
+        # which is every row when no version is visible (no requests)
+        return a[eff_c] if len(kind) else np.zeros(N, a.dtype)
+
+    nonempty = eff_ok & ~at(geo["empty"])
     base_status = np.asarray(bufs.base_status, object)
     status = np.where(nonempty, base_status, "invalid")
 
-    area_row = np.where(nonempty, geo["area"][eff_c], 0.0)
-    length_row = np.where(nonempty, geo["length"][eff_c], 0.0)
+    area_row = np.where(nonempty, at(geo["area"]), 0.0)
+    length_row = np.where(nonempty, at(geo["length"]), 0.0)
     area_prev = np.empty(N)
     area_prev[0] = 0.0
     area_prev[1:] = area_row[:-1]
@@ -973,10 +978,10 @@ def finalize_columnar(bufs: _ConvertBufs, joiner=None, ts_int=False) -> pd.DataF
         "contrib_type": contrib_type,
         "geometry_type": _obj(geometry_type),
         "geometry": _obj(geometry),
-        "xmin": _masked(geo["xmin"][eff_c]), "ymin": _masked(geo["ymin"][eff_c]),
-        "xmax": _masked(geo["xmax"][eff_c]), "ymax": _masked(geo["ymax"][eff_c]),
-        "centroid_x": _masked(geo["cx"][eff_c]),
-        "centroid_y": _masked(geo["cy"][eff_c]),
+        "xmin": _masked(at(geo["xmin"])), "ymin": _masked(at(geo["ymin"])),
+        "xmax": _masked(at(geo["xmax"])), "ymax": _masked(at(geo["ymax"])),
+        "centroid_x": _masked(at(geo["cx"])),
+        "centroid_y": _masked(at(geo["cy"])),
         "xz_level": np.full(N, -1, np.int32), "xz_code": np.zeros(N, np.int64),
         "countries": _obj(countries),
         "area": area_row, "area_delta": area_row - area_prev,

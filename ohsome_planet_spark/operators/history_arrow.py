@@ -611,7 +611,13 @@ def way_partition_table(tbl: pa.Table, index=None) -> pa.RecordBatch | None:
         req_of[req_rows] = np.arange(R)
         eff_req = np.where(em.carried, req_of[em.source], -1)
         eff_c = np.maximum(eff_req, 0)
-        nonempty = em.carried & ~geo["empty"][eff_c]
+
+        def at(a: np.ndarray) -> np.ndarray:
+            # a request column per row; the caller masks rows without a
+            # request, which is every row when no version is visible (R == 0)
+            return a[eff_c] if R else np.zeros(nk, a.dtype)
+
+        nonempty = em.carried & ~at(geo["empty"])
 
         # zero-copy WKB BinaryArray over the partition buffer
         if geo["wkb_off"][-1] > np.iinfo(np.int32).max:
@@ -622,7 +628,7 @@ def way_partition_table(tbl: pa.Table, index=None) -> pa.RecordBatch | None:
         req_bin = pa.Array.from_buffers(
             pa.binary(), R,
             [None, pa.py_buffer(ooff), pa.py_buffer(geo["wkb_buf"])])
-        gt_code = geo["kind"][eff_c].astype(np.int64) - 1
+        gt_code = at(geo["kind"]).astype(np.int64) - 1
 
         # XZ2 from request bboxes (folded in: no separate post-pass round trip)
         xz_lvl = np.full(nk, -1, np.int32)
@@ -655,7 +661,7 @@ def way_partition_table(tbl: pa.Table, index=None) -> pa.RecordBatch | None:
                 pa.array(np.where(nonempty, slot[eff_c], used.size)))
 
         def f64(name: str) -> pa.Array:
-            return pa.array(np.where(nonempty, geo[name][eff_c], np.nan),
+            return pa.array(np.where(nonempty, at(geo[name]), np.nan),
                             mask=~nonempty)
 
         return _Geometry(
@@ -666,8 +672,8 @@ def way_partition_table(tbl: pa.Table, index=None) -> pa.RecordBatch | None:
                                      gt_code, mask=eff_req < 0),
             columns=[*map(f64, ("xmin", "ymin", "xmax", "ymax", "cx", "cy")),
                      pa.array(xz_lvl), pa.array(xz_cod), countries_col],
-            area=np.where(nonempty, geo["area"][eff_c], 0.0),
-            length=np.where(nonempty, geo["length"][eff_c], 0.0),
+            area=np.where(nonempty, at(geo["area"]), 0.0),
+            length=np.where(nonempty, at(geo["length"]), 0.0),
             tail=[cols.refs.take(pa.array(em.major)).cast(pa.list_(pa.int64()))],
         )
 

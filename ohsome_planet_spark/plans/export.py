@@ -156,12 +156,7 @@ def write_contribution_export(
     out = Path(path)
     out.mkdir(parents=True, exist_ok=True)
     files = write_geoparquet(
-        contribs,
-        out,
-        geometry_col=geometry_col,
-        no_dict_columns=(geometry_col, "osm_id"),
-        partition_by="status",
-    )
+        contribs, out, geometry_col=geometry_col, partition_by="status")
     counts = {s: 0 for s in STATUSES}
     for f in files:
         counts[f.value] = counts.get(f.value, 0) + f.rows

@@ -314,6 +314,25 @@ def test_minor_version_baseline_restarts_per_element(spark):
     assert list(e2["osm_minor_version"]) == [1, 0]
 
 
+def test_deletions_only_way_contributions(spark):
+    """Every way version is a deletion, so no partition holds a visible
+    version: each way still gets its DELETION row, equal to the dict twin's
+    (the kernel raised IndexError on an empty geometry batch)."""
+    ways = [
+        (1, 1, _ts("2020-01-01T00:00"), 1, 1, "a", False, {}, []),
+        (2, 3, _ts("2020-01-02T00:00"), 2, 2, "b", False, {"k": "v"}, [10]),
+        (3, 2, _ts("2020-01-03T00:00"), 3, 3, "c", False, None, [10, 11]),
+    ]
+    nodes = [
+        (10, 1, _ts("2019-12-01T00:00"), 0, 9, "n", True, 0.0, 0.0),
+        (11, 1, _ts("2019-12-01T00:00"), 0, 9, "n", True, 1.0, 1.0),
+    ]
+    out = _assert_paths_equal(spark, ways, nodes)
+    assert list(out["osm_id"]) == [1, 2, 3]
+    assert set(out["contrib_type"]) == {"DELETION"}
+    assert out["geometry"].isna().all()
+
+
 def test_kernel_stage_keeps_one_wave_of_partitions(spark):
     """Regression guard for the r5 fix: the packed way-merge shuffle is
     byte-small, so AQE post-shuffle coalescing would serialize the

@@ -109,10 +109,27 @@ def test_arrow_kernel_sweep_countries(seed):
     assert new is not None and new["countries"].map(len).gt(0).sum() > 0
 
 
+def test_deleted_way_only_partition():
+    """A partition whose one way version is a deletion has no geometry
+    request: both kernels emit its DELETION row (invalid, no geometry)."""
+    base = pd.Timestamp("2020-01-01").value // 1000
+    pdf = pd.DataFrame([dict(
+        way_id=7, kind="w", version=1, ts=base, changeset=3, user_id=1,
+        user="u", visible=False, tags={}, refs=[], node_id=None, lon=None,
+        lat=None)])
+    new = _compare(pdf)
+    assert new[["contrib_type", "status"]].values.tolist() == [["DELETION", "invalid"]]
+    assert new["geometry"].isna().all()
+
+
 def _sweep(seed, index=None):
-    """Dict twin vs production kernel on seeded fixture `seed`, every
-    column exact; returns the production rows (None when both are empty)."""
-    pdf = _random_fixture(seed)
+    """Dict twin vs production kernel on seeded fixture `seed`."""
+    return _compare(_random_fixture(seed), index, seed)
+
+
+def _compare(pdf, index=None, seed=None):
+    """Dict twin vs production kernel on the partition `pdf`, every column
+    exact; returns the production rows (None when both are empty)."""
     dict_in = pdf.copy()
     dict_in["ts"] = dict_in["ts"].astype("int64").astype("datetime64[us]").astype("datetime64[ns]")
     dict_in["tags"] = dict_in["tags"].map(lambda d: d if isinstance(d, dict) else None)

@@ -123,7 +123,6 @@ def test_geoparquet_footer_metadata(spark, tmp_path):
     files = write_geoparquet(
         enriched.select("url", "entity", "lon", "lat", "geometry"),
         out,
-        no_dict_columns=("geometry",),
     )
     assert files
     meta = read_geo_metadata(out / files[0].path)

@@ -4,6 +4,10 @@ contributions/FileInfo.java:18-50`), Spark-side: print the metadata of an
 input without scanning data.
 
   python tools/fileinfo.py <path.osm.pbf | snapshot-table-dir | parquet-dir>
+
+A parquet directory may be hive-partitioned, as the contribution export
+is (`status=<value>/part-*.parquet`): its report gives files and rows per
+partition directory, and compressed bytes and encodings per leaf column.
 """
 
 from __future__ import annotations
@@ -64,26 +68,52 @@ def main() -> None:
             indent=1,
         ))
         return
-    # parquet dir: schema + file stats without a full scan
+    print(json.dumps(parquet_info(target), indent=1))
+
+
+def parquet_info(root: Path) -> dict:
+    """Files and rows per hive partition directory (`status=latest`, ...;
+    "" for files at the root) and, per leaf column, compressed bytes, share
+    of all column bytes and encodings: read from the footers only.
+    Underscore- and dot-prefixed directories (scratch, manifests) are
+    skipped, as Spark's reader skips them."""
     import pyarrow.parquet as pq
 
-    files = sorted(target.glob("*.parquet"))
-    total_rows = 0
-    schema = None
+    files = sorted(
+        f for f in root.rglob("*.parquet")
+        if not any(p.startswith(("_", ".")) for p in f.relative_to(root).parts))
+    partitions: dict[str, dict] = {}
+    leaves: dict[str, dict] = {}
+    md = None
     for f in files:
         md = pq.read_metadata(f)
-        total_rows += md.num_rows
-        schema = pq.read_schema(f)
-    print(json.dumps(
-        {
-            "kind": "parquet",
-            "files": len(files),
-            "rows": total_rows,
-            "columns": schema.names if schema else [],
-            "geo": bool(schema and (schema.metadata or {}).get(b"geo")),
+        part = partitions.setdefault(
+            "/".join(f.relative_to(root).parts[:-1]), {"files": 0, "rows": 0})
+        part["files"] += 1
+        part["rows"] += md.num_rows
+        for g in range(md.num_row_groups):
+            rg = md.row_group(g)
+            for i in range(rg.num_columns):
+                c = rg.column(i)
+                leaf = leaves.setdefault(
+                    c.path_in_schema, {"bytes": 0, "encodings": set()})
+                leaf["bytes"] += c.total_compressed_size
+                leaf["encodings"].update(c.encodings)
+    total = max(1, sum(v["bytes"] for v in leaves.values()))
+    return {
+        "kind": "parquet",
+        "files": len(files),
+        "rows": sum(p["rows"] for p in partitions.values()),
+        "bytes": sum(f.stat().st_size for f in files),
+        "columns": md.schema.to_arrow_schema().names if md else [],
+        "geo": bool(md and b"geo" in (md.metadata or {})),
+        "partitions": dict(sorted(partitions.items())),
+        "leaves": {
+            k: {"bytes": v["bytes"], "share": round(v["bytes"] / total, 4),
+                "encodings": sorted(v["encodings"])}
+            for k, v in leaves.items()
         },
-        indent=1,
-    ))
+    }
 
 
 if __name__ == "__main__":
