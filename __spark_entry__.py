@@ -1215,11 +1215,11 @@ FROM documents
 
 
 def _q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Connected components over near-dup pairs (iterative min-label
-    propagation + pointer jumping, per-round lineage truncation); the
-    oracle computes the same components with a recursive CTE (min reachable
-    id per node). Input: 20-long near-dup chains (A~B~C~…) — the shape real
-    transitive dedup produces — so multi-hop closure is what's checked."""
+    """Connected components over near-dup pairs (one lazy Arrow min-label
+    task: hooking + pointer shortcutting in NumPy); the oracle computes
+    the same components with a recursive CTE (min reachable id per node).
+    Input: 20-long near-dup chains (A~B~C~…) — the shape real transitive
+    dedup produces — so multi-hop closure is what's checked."""
     from ohsome_planet_spark.operators.dedup import dedup_clusters
 
     pairs = _t(spark, sf_dir, "events").where(
@@ -3670,13 +3670,6 @@ def _q_corpus_curation_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
             "source"))
     )
     bench = base.where(d % 37 == 0).select("text")
-    # the corpus union feeds both dedup_clusters' eager pair probe and
-    # the final plan — unpersisted, the scan+union+exact-dedup subtree
-    # evaluates once per consumer (the multi-consumer law); slot-bounded
-    # (r7) so repeated bench runs keep one live cache entry
-    from ohsome_planet_spark.operators.cache_util import swap_persist
-
-    corpus = swap_persist("corpus_e2e", corpus)
     clean, _counts = curate_corpus(
         corpus, benchmark=bench, contamination_n=3, with_manifest=False
     )

@@ -10,8 +10,10 @@ Usage:
     SPARK_GRAFT_PLANS=dir   also dump .explain("formatted") per query into dir
 
 Prints one JSON line: {"sf": ..., "queries": {name: median_sec},
-"queries_spread": {name: [min, max]}}.  Every timing uses the noop sink so
-the computation, not the sink, is measured.
+"queries_spread": {name: [min, max]}, "queries_runs": {name: [sec, ...]},
+"queries_jobs": {name: n}}.  queries_jobs counts the Spark jobs of the
+last timed run, plan build plus noop write.  Every timing uses the noop
+sink so the computation, not the sink, is measured.
 """
 
 from __future__ import annotations
@@ -51,6 +53,9 @@ def main() -> None:
     qs = entrymod.queries()
     qtimes: dict[str, float] = {}
     spread: dict[str, list[float]] = {}
+    runs: dict[str, list[float]] = {}
+    jobs: dict[str, int] = {}
+    sc = spark.sparkContext
 
     # one warm query to pay JVM/python-worker startup before any timing
     qs["doc_exact_dedup"](spark, sf_dir).write.format("noop").mode(
@@ -70,19 +75,23 @@ def main() -> None:
                                             "formatted")))
         times = []
         for i in range(n_runs + 1):
-            spark.sparkContext.setJobDescription(f"{name} run{i}")
+            group = f"{name} run{i}"
+            sc.setJobGroup(group, group)
             t0 = time.time()
             fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
             dt = time.time() - t0
             if i > 0:  # first run is warm-up
                 times.append(dt)
-        spark.sparkContext.setJobDescription(None)
+            jobs[name] = len(sc.statusTracker().getJobIdsForGroup(group))
         qtimes[name] = round(statistics.median(times), 3)
         spread[name] = [round(min(times), 3), round(max(times), 3)]
-        print(f"{name}: {qtimes[name]} {spread[name]}", file=sys.stderr)
+        runs[name] = [round(t, 3) for t in times]
+        print(f"{name}: {qtimes[name]} {spread[name]} jobs={jobs[name]}",
+              file=sys.stderr)
 
     print(json.dumps({"sf": sf_dir, "cpus": cpus, "queries": qtimes,
-                      "queries_spread": spread}))
+                      "queries_spread": spread, "queries_runs": runs,
+                      "queries_jobs": jobs}))
     spark.stop()
 
 

@@ -9,7 +9,7 @@ the reference's grid-bounded spatial probes, `SpatialGridJoiner.java:48`):
   points → 3×3 ring cells explode ┴ join on cell → dist² ≤ ε² pairs
   neighbor counts per point → core flag (|N_ε(p)| + self ≥ min_pts)
   core–core edges → connected components (`dedup.dedup_clusters` —
-      min-label propagation + pointer jumping, O(log d) rounds)
+      one Arrow min-label task over the core-core edge list)
   border points attach to the MIN cluster id among their core neighbors
   everything else is noise
 
@@ -29,13 +29,14 @@ algorithm (those are order-free).
 
 100 TB shape: one cell-keyed shuffle generates candidate pairs (each
 point replicates to ≤9 ring cells); neighbor counting is map-side
-combined; the component loop shuffles only the core-core edge list
-(dedup rates of the pair volume, with the driver fast path for the usual
-tiny case). Dense-cell skew is inherent to EXACT DBSCAN (a cell with m
-co-located points owns m² pairs regardless of plan shape); for heavy
-hotspots lower min_pts workloads should pre-aggregate exact-duplicate
-coordinates (count-weighted points), which this operator's contract
-permits since coincident points share every neighbor.
+combined; the component step moves only the core-core edge list into
+one task (past one worker's memory, `dedup.dedup_clusters_star` is the
+distributed swap point). Dense-cell skew is inherent to EXACT DBSCAN (a
+cell with m co-located points owns m² pairs regardless of plan shape);
+for heavy hotspots lower min_pts workloads should pre-aggregate
+exact-duplicate coordinates (count-weighted points), which this
+operator's contract permits since coincident points share every
+neighbor.
 
 Reference parity: ohsome-planet has no clustering operator; this extends
 the graft's geospatial family (SURVEY §2 addendum) alongside knn/radius/
@@ -183,8 +184,7 @@ def dbscan(
     # caveat: persist lifetime is the SparkSession, not the returned
     # plan — blocks stay cached (LRU-evictable) until
     # spark.catalog.clearCache(); callers running parameter sweeps
-    # should clear between runs. Same trade as dedup_clusters'
-    # localCheckpoints.
+    # should clear between runs.
     from .cache_util import swap_persist
 
     pairs = swap_persist("dbscan_pairs", eps_neighbor_pairs(

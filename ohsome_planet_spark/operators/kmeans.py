@@ -112,7 +112,7 @@ def kmeans(
         # subtrees within one plan; a checkpoint forces the upstream jobs to
         # run standalone). Lineage does grow with iterations — callers
         # running MANY Lloyd rounds should checkpoint the returned centroids
-        # between calls (k tiny rows), as dedup_clusters does per round.
+        # between calls (k tiny rows), as dedup_clusters_star does per round.
         centroids = (
             centroids.select("cluster", F.col("_c").alias("_c_prev"))
             .join(new_c, "cluster", "left")

@@ -70,30 +70,6 @@ def test_curate_corpus_gopher_stages(spark):
     assert counts["after_gopher_repetition"] == 2  # drops doc 2 (looping)
 
 
-def test_dedup_clusters_fast_path_equals_iterative(spark):
-    """The driver union-find fast path must equal the distributed
-    iterative path (driver_threshold=0 forces it) on chains, stars,
-    merged components, and singleton-free graphs."""
-    from pyspark.sql import functions as F
-
-    from ohsome_planet_spark.operators.dedup import dedup_clusters
-
-    pairs = spark.range(400).select(
-        F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b")
-    ).where(F.col("id_a") % 20 != 19).unionByName(
-        spark.range(10).select(
-            (F.lit(1000)).alias("id_a"), (F.col("id") + 1001).alias("id_b"))
-    ).unionByName(
-        spark.createDataFrame([(1005, 2000), (2000, 2001)],
-                              "id_a long, id_b long")
-    )
-    fast = {(r["node"], r["cluster_id"])
-            for r in dedup_clusters(pairs).collect()}
-    slow = {(r["node"], r["cluster_id"])
-            for r in dedup_clusters(pairs, driver_threshold=0).collect()}
-    assert fast == slow and len(fast) > 400
-
-
 def test_cross_doc_dup_signal(spark):
     """Shared boilerplate across docs must light up the cross-doc fraction;
     unique docs stay at 0."""

@@ -49,8 +49,8 @@ def test_with_simhash_matches_column_twin(spark):
 
 
 def test_star_components_match_label_propagation(spark):
-    """dedup_clusters_star == dedup_clusters on every graph shape the
-    label-propagation engine is tested on, plus a hash-random graph."""
+    """dedup_clusters_star == dedup_clusters on chains, stars, bridged
+    cliques, a hash-random graph and a single pair."""
     import hashlib
 
     from ohsome_planet_spark.operators.dedup import (
@@ -74,7 +74,7 @@ def test_star_components_match_label_propagation(spark):
     for name, edges in shapes.items():
         df = spark.createDataFrame(edges, "id_a long, id_b long")
         want = {(r["node"], r["cluster_id"])
-                for r in dedup_clusters(df, driver_threshold=0).collect()}
+                for r in dedup_clusters(df).collect()}
         got = {(r["node"], r["cluster_id"])
                for r in dedup_clusters_star(df).collect()}
         assert got == want, f"shape {name}: {got ^ want}"
@@ -140,10 +140,195 @@ def test_star_components_self_pairs_survive(spark):
     df = spark.createDataFrame(
         [(5, 5), (7, 8)], "id_a long, id_b long")
     want = {(r["node"], r["cluster_id"])
-            for r in dedup_clusters(df, driver_threshold=0).collect()}
+            for r in dedup_clusters(df).collect()}
     got = {(r["node"], r["cluster_id"])
            for r in dedup_clusters_star(df).collect()}
-    # dedup_clusters' iterative path also derives nodes from non-self
-    # edges only; the CONTRACT both engines share is the union-find one:
-    # every id mentioned in pairs gets a row
-    assert (5, 5) in got and (7, 7) in got and (8, 7) in got
+    # every id mentioned in pairs gets a row, self-pair-only ids included
+    assert got == want == {(5, 5), (7, 7), (8, 7)}
+
+
+# --- dedup_clusters: the Arrow min-label kernel and its contract -----------
+
+def _union_find(edges):
+    """Plain union-find spec: {node: min node id of its component} over
+    every non-NULL id of `edges`."""
+    parent = {}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        for x in (a, b):
+            if x is not None:
+                parent.setdefault(x, x)
+        if a is not None and b is not None:
+            ra, rb = find(a), find(b)
+            if ra != rb:
+                parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in parent}
+
+
+def _kernel(edges, batch=50_000):
+    import pyarrow as pa
+
+    from ohsome_planet_spark.operators.dedup import _min_label_components
+
+    a = pa.array([e[0] for e in edges], pa.int64())
+    b = pa.array([e[1] for e in edges], pa.int64())
+    batches = [pa.RecordBatch.from_arrays([a[i:i + batch], b[i:i + batch]],
+                                          names=["a", "b"])
+               for i in range(0, len(edges), batch)]
+    out = {}
+    for rb in _min_label_components(iter(batches)):
+        out.update(zip(rb.column(0).to_pylist(), rb.column(1).to_pylist()))
+    return out
+
+
+def test_min_label_kernel_equals_union_find():
+    """The mapInArrow kernel, run without Spark, against the union-find
+    spec: 100k-node chains with sorted, reversed and shuffled ids, a star,
+    a random graph, self-pairs, one-NULL pairs and empty input."""
+    import random
+
+    rng = random.Random(18)
+    n = 100_000
+    perm = list(range(n))
+    rng.shuffle(perm)
+    chain = [(i, i + 1) for i in range(n - 1)]
+    shapes = {
+        "chain_sorted": chain,
+        "chain_reversed": [(n - a, n - b) for a, b in chain],
+        "chain_shuffled": [(perm[a], perm[b]) for a, b in chain],
+        "star": [(7 * i + 3, 5) for i in range(20_000)],
+        "random": [(rng.randrange(3000), rng.randrange(3000))
+                   for _ in range(2500)],
+        "self_pairs": [(4, 4), (9, 9), (9, 2), (1 << 40, 1 << 40)],
+        "one_null": [(1, None), (None, 2), (None, None), (3, 4)],
+    }
+    for name, edges in shapes.items():
+        rng.shuffle(edges)
+        assert _kernel(edges) == _union_find(edges), name
+    assert _kernel([]) == {}
+    assert _kernel([(None, None)]) == {}
+
+
+def _clusters(df):
+    return {(r["node"], r["cluster_id"]) for r in df.collect()}
+
+
+def test_dedup_clusters_null_ids_are_not_nodes(spark):
+    """A NULL id is no node; its pair's other id keeps a singleton row.
+    Both engines agree."""
+    from ohsome_planet_spark.operators.dedup import (
+        dedup_clusters, dedup_clusters_star)
+
+    df = spark.createDataFrame(
+        [(1, None), (None, 6), (None, None), (2, 3), (3, 4)],
+        "id_a long, id_b long")
+    want = {(1, 1), (6, 6), (2, 2), (3, 2), (4, 2)}
+    assert _clusters(dedup_clusters(df)) == want
+    assert _clusters(dedup_clusters_star(df)) == want
+
+
+def test_dedup_clusters_string_ids(spark):
+    """String ids keep their type; cluster_id is the min id in Spark's
+    string order, equal to the star engine's."""
+    from ohsome_planet_spark.operators.dedup import (
+        dedup_clusters, dedup_clusters_star)
+
+    df = spark.createDataFrame(
+        [("b", "a"), ("c", "b"), ("Z", "é"), ("é", "e"), ("x", "x"),
+         ("q", None)],
+        "id_a string, id_b string")
+    got = dedup_clusters(df)
+    assert [f.dataType.simpleString() for f in got.schema] == ["string"] * 2
+    want = {("a", "a"), ("b", "a"), ("c", "a"), ("Z", "Z"), ("e", "Z"),
+            ("é", "Z"), ("x", "x"), ("q", "q")}
+    assert _clusters(got) == want
+    assert _clusters(dedup_clusters_star(df)) == want
+
+
+def test_dbscan_string_ids_match_integer_ids(spark):
+    """dbscan over string ids equals the integer-id run under an
+    order-preserving id mapping."""
+    import hashlib
+
+    from ohsome_planet_spark.operators.dbscan import dbscan
+
+    def h(p, i):
+        return int(hashlib.md5(f"{p}{i}".encode()).hexdigest()[:15], 16)
+
+    rows = [(i, (h("x", i) % 100) / 10.0, (h("y", i) % 100) / 10.0)
+            for i in range(80)]
+    ints = spark.createDataFrame(rows, "point_id long, lon double, lat double")
+    strs = spark.createDataFrame([(f"p{i:03d}", x, y) for i, x, y in rows],
+                                 "point_id string, lon double, lat double")
+
+    def key(i):
+        return None if i is None else f"p{i:03d}"
+
+    want = {(key(r["point_id"]), r["role"], key(r["cluster_id"]))
+            for r in dbscan(ints, eps=1.2, min_pts=4).collect()}
+    got = {(r["point_id"], r["role"], r["cluster_id"])
+           for r in dbscan(strs, eps=1.2, min_pts=4).collect()}
+    assert got == want
+    assert len({c for _, role, c in want if role == "core"}) >= 2
+
+
+def _build_jobs(spark, build):
+    """Spark jobs started while `build()` constructs a plan."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"build-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_component_plans_start_no_job_at_build(spark):
+    """Building dedup_clusters, curate_corpus(with_manifest=False) and
+    dbscan starts zero Spark jobs; two dedup_clusters invocations
+    composed in one query equal the two separate runs."""
+    from ohsome_planet_spark.operators.dbscan import dbscan
+    from ohsome_planet_spark.operators.dedup import dedup_clusters
+    from ohsome_planet_spark.plans.corpus import curate_corpus
+
+    p1 = spark.createDataFrame([(1, 2), (2, 3), (7, 8)], "id_a long, id_b long")
+    p2 = spark.createDataFrame([(3, 1), (9, 8), (5, 5)], "id_a long, id_b long")
+    text = "the quick brown fox jumps over the lazy dog again and again"
+    docs = spark.createDataFrame(
+        [(1, text, "s0"), (2, text + " now", "s0"), (3, text, "s1"),
+         (4, "entirely different words make up this other document", "s1")],
+        "doc_id long, text string, source string")
+    pts = spark.createDataFrame(
+        [(i, 0.1 * i, 0.0) for i in range(6)] + [(9, 30.0, 30.0)],
+        "point_id long, lon double, lat double")
+
+    one, jobs = _build_jobs(spark, lambda: dedup_clusters(p1))
+    assert jobs == 0
+    two, jobs = _build_jobs(spark, lambda: dedup_clusters(p2))
+    assert jobs == 0
+    both, jobs = _build_jobs(
+        spark, lambda: dedup_clusters(p1).unionByName(dedup_clusters(p2)))
+    assert jobs == 0
+    rows = sorted(both.collect())
+    assert rows == sorted(one.collect() + two.collect())
+    assert len(rows) == 10
+
+    (clean, counts), jobs = _build_jobs(
+        spark, lambda: curate_corpus(docs, with_manifest=False))
+    assert jobs == 0 and counts == {}
+    assert {r["doc_id"] for r in clean.collect()} == {1, 4}
+
+    clustered, jobs = _build_jobs(spark, lambda: dbscan(pts, eps=0.15, min_pts=3))
+    assert jobs == 0
+    assert {r["point_id"]: r["cluster_id"] for r in clustered.collect()} == {
+        **{i: 1 for i in range(6)}, 9: None}
