@@ -1,8 +1,8 @@
 """Arrow-native way-history merge: zero-dict, zero-pandas kernel.
 
-Same semantics as the dict kernel in history.py (`merge_contributions` /
-`collect_element_columnar` / `finalize_columnar`, which mirror the
-reference's `ContributionsEntity.computeNext`
+Same semantics as the dict kernel in tests/history_spec.py
+(`merge_contributions` / `collect_element_columnar` / `finalize_columnar`,
+which mirror the reference's `ContributionsEntity.computeNext`
 `ContributionsEntity.java:82-150` and `ContributionsAvroConverter.java:
 57-176`) — re-engineered for 100×-scale throughput:
 
@@ -35,11 +35,11 @@ reference's `ContributionsEntity.computeNext`
 
 `way_partition_table` is the production way kernel, and
 `run_partition_kernel` the one `mapInArrow` runner of both merge kernels.
-The dict kernel `history._way_partition_kernel` is its reference twin,
-which no Spark plan runs: tests/test_history_arrow.py (Spark
-`way_contributions` on adversarial fixtures, with and without a country
-index) and tests/test_history_arrow_sweep.py (the kernel alone on seeded
-fixtures) compare the two bit for bit on the same packed partition.
+Its reference twin is the dict kernel `_way_partition_kernel` in
+tests/history_spec.py, which no Spark plan runs: tests/test_history_arrow.py
+(Spark `way_contributions` on adversarial fixtures, with and without a
+country index) and tests/test_history_arrow_sweep.py (the kernel alone on
+seeded fixtures) compare the two bit for bit on the same packed partition.
 """
 
 from __future__ import annotations
@@ -59,7 +59,6 @@ from .history import (
     MAX_TS_NS,
     VALID_TO_SENTINEL_NS,
     _CS_MAX,
-    _MinQueue,
     batch_geometries,
 )
 
@@ -108,7 +107,7 @@ class _AHist:
 
     idx:  global row indices of the (minor-filtered) member versions;
     keys: matching (ts_ns, changeset) tuples, precomputed once.
-    Interface-compatible with `_MinQueue` (head_key / has_next duck type).
+    The stream type `_MinQueue` orders (head_key / has_next).
     """
 
     __slots__ = ("idx", "keys", "pos", "n", "sentinel")
@@ -128,11 +127,57 @@ class _AHist:
         return self.keys[p] if p < self.n else self.sentinel
 
 
+class _MinQueue:
+    """Priority access to member streams (`_AHist` cursors; the spec's dict
+    cursor in tests/history_spec.py has the same slots).
+
+    Small queues (the common case: ways average ~10 member nodes) use a
+    plain list min() — cheaper than heap bookkeeping. Large queues (long
+    ways, boundary relations with 1000+ members) switch to a lazy heap:
+    entries are (ts, changeset, queue_index); a popped entry whose key no
+    longer matches the stream's current head (the cursor advanced) is
+    refreshed and re-sunk. Tie order (ts, cs, index) reproduces min()'s
+    first-minimal-in-list-order pick exactly, so the two strategies are
+    output-identical."""
+
+    __slots__ = ("hists", "heap")
+
+    _HEAP_THRESHOLD = 16
+
+    def __init__(self, hists: list):
+        self.hists = hists
+        if len(hists) > self._HEAP_THRESHOLD:
+            import heapq
+
+            self.heap = [h.head_key() + (i,) for i, h in enumerate(hists)]
+            heapq.heapify(self.heap)
+        else:
+            self.heap = None
+
+    def __bool__(self) -> bool:
+        return bool(self.hists)
+
+    def min(self):
+        hists = self.hists
+        if self.heap is None:
+            return min(hists, key=_AHist.head_key) if hists else None
+        import heapq
+
+        heap = self.heap
+        while True:
+            ts, cs, i = heap[0]
+            h = hists[i]
+            k = h.head_key()
+            if k[0] == ts and k[1] == cs:
+                return h
+            heapq.heapreplace(heap, k + (i,))
+
+
 def _merge_walk(maj_rows, maj_ts, maj_cs, maj_refs, member_hists,
                 o_maj, o_open, o_last, o_mem) -> None:
     """Queue walk of ONE element emitting integer buffers.
 
-    Exact twin of `history.merge_contributions` (reference
+    Exact twin of `merge_contributions` in tests/history_spec.py (reference
     `ContributionsEntity.computeNext:107-150`): as-of consumption at each
     major (ts ≤ major.ts OR changeset == major.changeset), same-changeset
     minor grouping stamped with the LAST consumed edit's ts and the FIRST
@@ -212,7 +257,8 @@ def _merge_walk(maj_rows, maj_ts, maj_cs, maj_refs, member_hists,
 
 def _minor_node_keep_mask(node_rows, seg_new, nv, nlon, nlat) -> np.ndarray:
     """Vectorized minor-node store filter (`MinorNode.java:55-63`; dict twin
-    `history.minor_node_filter`) over ALL node rows of a partition.
+    `minor_node_filter` in tests/history_spec.py) over ALL node rows of a
+    partition.
 
     Per segment (one member node's version feed): leading/consecutive
     invisible rows are skipped; visibility flips always keep; visible →
@@ -712,8 +758,8 @@ def run_partition_kernel(packed, kernel, schema: str, country_index=None):
 def way_contributions_arrow(ways, nodes, country_index=None):
     """Distributed temporal merge + conversion — Arrow-native plan.
 
-    Same logical plan as the dict twin (explode refs → member join → union
-    → one hash exchange on way_id) but the partition sort happens JVM-side
+    One hash exchange on way_id over the ways unioned with their exploded
+    member-node histories; the partition sort happens JVM-side
     (sortWithinPartitions) and the kernel is `way_partition_table`:
     Arrow in, Arrow out, no pandas materialization and no post-pass XZ2
     round trip.

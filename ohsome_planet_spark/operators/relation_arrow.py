@@ -3,8 +3,9 @@
 The production relation kernel is `relation_partition_table` (Arrow in →
 Arrow out), run by `history.relation_contributions` through
 `history_arrow.run_partition_kernel`.
-Its reference twin is the dict kernel `history._relation_partition_kernel`
-(with `_MemberEntryBatch` and `convert_relation_contributions`), mirroring
+Its reference twin is the dict kernel `_relation_partition_kernel` in
+tests/history_spec.py (with `_MemberEntryBatch` and
+`convert_relation_contributions`), mirroring
 `Contributions2Parquet.processRelation:233-266`: member ways resolve
 through their own merged contribution streams over shared node cursors,
 then the relation merges over (type, id, role) member streams. The
@@ -26,10 +27,11 @@ production kernel applies the way kernel's machinery end to end:
   kernel's `history_arrow.contribution_batch`; this kernel hands it only
   its geometry phase and the five `member_*` columns;
 * the GeometryCollection bbox/centroid folds (sequential left folds over
-  encoded member positions — float-identical to `_combine_centroid`'s +=
-  chain), envelope WKB, XZ2 codes, and the per-member geometry list
-  columns are all NumPy/Arrow-kernel work; only the MultiPolygon assembly
-  (`mpbuild`, inherently iterative ring-joining) remains per-row Python.
+  encoded member positions — float-identical to the += chain of
+  `_combine_centroid` in tests/history_spec.py), envelope WKB, XZ2 codes,
+  and the per-member geometry list columns are all NumPy/Arrow-kernel
+  work; only the MultiPolygon assembly (`mpbuild`, inherently iterative
+  ring-joining) remains per-row Python.
   No pandas materialization anywhere;
 * the optional country join is two probes per partition: one
   `PolygonIndex.join_points` over every member point of the
@@ -296,13 +298,13 @@ def relation_partition_table(tbl: pa.Table, index=None) -> pa.RecordBatch | None
     once per partition for the GeometryCollection member points and once
     for the MultiPolygon polygons.
 
-    Semantics are `convert_relation_contributions` verbatim, re-expressed
-    as whole-partition array work (see the module docstring); the only
-    per-row Python left is MultiPolygon ring assembly. Float doctrine: the
-    GeometryCollection centroid folds run np.add.reduceat over per-member
-    moment columns in member order — reduceat is a sequential left fold, so
-    every sum associates exactly like the dict twin's `_combine_centroid`
-    += chain.
+    Semantics are the spec's `convert_relation_contributions`
+    (tests/history_spec.py) verbatim, re-expressed as whole-partition
+    array work (see the module docstring); the only per-row Python left is
+    MultiPolygon ring assembly. Float doctrine: the GeometryCollection
+    centroid folds are sequential left folds over per-member moment
+    columns in member order, so every sum associates exactly like the
+    spec's `_combine_centroid` += chain.
     """
     n = tbl.num_rows
     if not n:
@@ -492,7 +494,8 @@ def relation_partition_table(tbl: pa.Table, index=None) -> pa.RecordBatch | None
             own_ymax[rw] = np.maximum.reduceat(pos_y1[cpos], gs)
             # moment sums must be SEQUENTIAL left folds in member order
             # (np.add.reduceat is pairwise from n>=3 and would diverge from
-            # _combine_centroid's += chain, which the DuckDB oracles replay):
+            # the spec's _combine_centroid += chain, which the DuckDB
+            # oracles replay):
             # ladder fold — one vectorized += pass per member ordinal.
             # BOUNDED (r6, r5-advice item 3): GeometryCollection rows are not
             # capped by MEMBERS_THRESHOLD, so one planet-scale relation with
@@ -569,7 +572,6 @@ def relation_partition_table(tbl: pa.Table, index=None) -> pa.RecordBatch | None
             info_ymax[i] = own_ymax[i]
             info_cx[i] = own_cx[i]
             info_cy[i] = own_cy[i]
-            from .history import _envelope_geom
             info_wkb[i] = wkb_dumps(_envelope_geom(
                 (own_xmin[i], own_ymin[i], own_xmax[i], own_ymax[i])))
         if index is not None and gc_rows.size:

@@ -1,6 +1,6 @@
 """Way-kernel parity: Spark `way_contributions` (production kernel
 `history_arrow.way_partition_table`) must equal its dict-kernel reference
-twin `history._way_partition_kernel` bit for bit.
+twin `history_spec._way_partition_kernel` bit for bit.
 
 The dict kernel carries the ported reference scenarios + oracles. These
 tests run Spark over adversarial fixtures and the dict kernel over the
@@ -21,8 +21,6 @@ from ohsome_planet_spark.functions.cells import xz2_code
 from ohsome_planet_spark.operators.history import (
     CONTRIB_SCHEMA,
     REL_CONTRIB_SCHEMA,
-    _way_partition_kernel,
-    minor_node_filter,
     way_contributions,
 )
 from ohsome_planet_spark.operators.history_arrow import (
@@ -30,6 +28,7 @@ from ohsome_planet_spark.operators.history_arrow import (
     _minor_node_keep_mask,
 )
 from ohsome_planet_spark.operators.relation_arrow import REL_OUT_SCHEMA
+from tests.history_spec import _way_partition_kernel, minor_node_filter
 from tests.test_pip_index import join_geom_spec
 
 _WAYS_DDL = (

@@ -12,8 +12,8 @@ import pyarrow as pa
 import pyarrow.compute as pc
 import pytest
 
-from ohsome_planet_spark.operators.history import _way_partition_kernel
 from ohsome_planet_spark.operators.history_arrow import way_partition_table
+from tests.history_spec import _way_partition_kernel
 from tests.test_pip_index import join_geom_spec
 
 SCHEMA = pa.schema([

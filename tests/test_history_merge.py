@@ -11,7 +11,7 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from ohsome_planet_spark.operators.history import (
+from tests.history_spec import (
     _Hist,
     convert_contributions,
     merge_contributions,
@@ -415,7 +415,7 @@ def _rand_element(rng, eid):
 def test_columnar_converter_matches_per_row_twin():
     import numpy as np
 
-    from ohsome_planet_spark.operators.history import (
+    from tests.history_spec import (
         _ConvertBufs,
         collect_element_columnar,
         finalize_columnar,
@@ -480,7 +480,7 @@ def test_minqueue_heap_matches_list_min():
     first-minimal pick == heap's (ts, cs, index) order)."""
     import numpy as np
 
-    from ohsome_planet_spark.operators.history import _MinQueue
+    from ohsome_planet_spark.operators.history_arrow import _MinQueue
 
     rng = np.random.RandomState(7)
     n_members = 40  # > _HEAP_THRESHOLD → heap path in one run
@@ -519,7 +519,7 @@ def test_columnar_edge_cases():
     """Degenerate inputs through the columnar converter: empty refs (empty
     LineString), element starting deleted (no geometry to carry), members
     with out-of-range coords only (empty after filtering)."""
-    from ohsome_planet_spark.operators.history import (
+    from tests.history_spec import (
         _ConvertBufs,
         collect_element_columnar,
         finalize_columnar,
@@ -578,7 +578,7 @@ def test_columnar_edge_cases():
 
 
 def test_minor_node_filter_reference_minortest():
-    from ohsome_planet_spark.operators.history import minor_node_filter
+    from tests.history_spec import minor_node_filter
 
     rows = [
         node(0, 0, 0, 0.0, 0.0, visible=False, uid=1, user="test"),
@@ -601,7 +601,7 @@ def test_minor_node_filter_single_axis_move_dropped():
     """The reference's `&&`: a visible→visible version moving only ONE axis
     is dropped, and the next version compares against the last KEPT coords
     (state advances only on keep)."""
-    from ohsome_planet_spark.operators.history import minor_node_filter
+    from tests.history_spec import minor_node_filter
 
     rows = [
         node(1, 1, 1, 0.0, 0.0),
@@ -614,7 +614,7 @@ def test_minor_node_filter_single_axis_move_dropped():
 
 
 def test_minor_node_filter_leading_and_consecutive_invisible_skipped():
-    from ohsome_planet_spark.operators.history import minor_node_filter
+    from tests.history_spec import minor_node_filter
 
     rows = [
         node(1, 1, 1, 0.0, 0.0, visible=False),
@@ -630,7 +630,7 @@ def test_minor_node_filter_leading_and_consecutive_invisible_skipped():
 
 
 def test_minor_way_filter_reference_minortest():
-    from ohsome_planet_spark.operators.history import minor_way_filter
+    from tests.history_spec import minor_way_filter
 
     rows = [
         way(1, 1, 1, [3, 4, 5, 1, 2, 3], uid=1, user="heigit"),
@@ -650,7 +650,7 @@ def test_minor_way_filter_empty_refs_first_version_dropped():
     with an empty list): a degenerate FIRST visible version with empty refs
     compares equal to the seed and is dropped — only the deletion marker
     and the later real version survive."""
-    from ohsome_planet_spark.operators.history import minor_way_filter
+    from tests.history_spec import minor_way_filter
 
     rows = [
         way(1, 1, 1, []),                       # visible, refs=[] → dropped

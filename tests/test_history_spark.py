@@ -5,14 +5,14 @@ import pytest
 from pyspark.sql import functions as F
 
 from ohsome_planet_spark.functions.pip_index import PolygonIndex
-from ohsome_planet_spark.operators.history import (
+from ohsome_planet_spark.operators.history import way_contributions
+from ohsome_planet_spark.sources.countries import fixture_features
+from tests.history_spec import (
     _Hist,
     convert_contributions,
     merge_contributions,
     minor_node_filter,
-    way_contributions,
 )
-from ohsome_planet_spark.sources.countries import fixture_features
 from tests.test_pip_index import join_geom_spec
 
 WAY_SCHEMA = (

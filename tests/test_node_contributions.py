@@ -108,10 +108,8 @@ def test_declarative_matches_kernel_adversarial(spark):
     versions, invalid coords, carries across multiple deletions."""
     import pandas as pd
 
-    from ohsome_planet_spark.operators.history import (
-        node_contributions,
-        node_contributions_kernel,
-    )
+    from ohsome_planet_spark.operators.history import node_contributions
+    from tests.history_spec import node_contributions_kernel
 
     def t(s):
         return pd.Timestamp(s, unit="s").to_pydatetime()
@@ -174,12 +172,10 @@ def test_declarative_matches_kernel_adversarial(spark):
 
 
 def test_declarative_matches_kernel_with_countries(spark):
-    from ohsome_planet_spark.operators.history import (
-        node_contributions,
-        node_contributions_kernel,
-    )
+    from ohsome_planet_spark.operators.history import node_contributions
     from ohsome_planet_spark.operators.spatial_join import build_index
     from ohsome_planet_spark.sources.countries import fixture_features
+    from tests.history_spec import node_contributions_kernel
 
     import pandas as pd
 
@@ -208,10 +204,8 @@ def test_declarative_matches_kernel_randomized(spark):
     import numpy as np
     import pandas as pd
 
-    from ohsome_planet_spark.operators.history import (
-        node_contributions,
-        node_contributions_kernel,
-    )
+    from ohsome_planet_spark.operators.history import node_contributions
+    from tests.history_spec import node_contributions_kernel
 
     rng = np.random.default_rng(42)
     rows = []
@@ -298,7 +292,7 @@ def test_node_minor_version_hand_computed(spark):
     (4, 14) (4, 14)                 1 row     2   new version, first run
                                                   collapsed: keeps counting
     """
-    from ohsome_planet_spark.operators.history import node_contributions_kernel
+    from tests.history_spec import node_contributions_kernel
 
     raw = [(1, 10), (1, 10), (2, 11), (3, 12), (3, 13), (4, 14), (4, 14)]
     nodes = spark.createDataFrame(

@@ -167,7 +167,7 @@ def test_every_python_hop_drops_spark_zip_finders_first():
     assert {
         ("history", "xz2_from_bbox"), ("enrich", "_point_wkb"),
         ("spatial_join", "pip_countries"), ("history_arrow", "partition_fn"),
-        ("history", "partition_fn"), ("geoparquet", "write_partition"),
+        ("geoparquet", "write_partition"),
     } <= seen, sorted(seen)
 
 

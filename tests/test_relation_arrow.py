@@ -1,6 +1,6 @@
 """Relation kernel parity: the production Arrow kernel
 (`relation_arrow.relation_partition_table`) must equal its dict-kernel
-reference twin (`history._relation_partition_kernel`) bit for bit, on every
+reference twin (`history_spec._relation_partition_kernel`) bit for bit, on every
 output column, with and without a country join. The dict kernel carries the
 ported reference scenarios + oracles; these tests pin production to it."""
 
@@ -12,8 +12,8 @@ import pyarrow as pa
 import pytest
 
 from ohsome_planet_spark.functions.cells import xz2_code
-from ohsome_planet_spark.operators.history import _relation_partition_kernel
 from ohsome_planet_spark.operators.relation_arrow import relation_partition_table
+from tests.history_spec import _relation_partition_kernel
 from tests.test_pip_index import join_geom_spec
 
 _PACKED_PA_SCHEMA = pa.schema([

@@ -7,7 +7,7 @@ change across major versions.
 
 import pandas as pd
 
-from ohsome_planet_spark.operators.history import _Hist, merge_contributions
+from tests.history_spec import _Hist, merge_contributions
 
 
 def node(v, ts, cs, lon=0.0, lat=0.0):

@@ -293,7 +293,7 @@ def test_batched_member_entries_match_scalar_path():
     import numpy as np
     import pandas as pd
 
-    from ohsome_planet_spark.operators.history import (
+    from tests.history_spec import (
         _Hist,
         _MemberEntryBatch,
         convert_relation_contributions,
